@@ -4,7 +4,8 @@ K1 — partitioned document sink: the reference writes one HTML file per
 row under ``html/{space_key}/{new|updated}/{safe_title}_{id}.html``
 (html_generator.py:50-64, config_conf.py:15-23). The engine's tabular
 rendering is a partitioned write (hive-style dirs per space/content
-type); exact one-file-per-row parity is a ``foreachPartition`` writer.
+type); exact one-file-per-row parity is the ``confluence_html`` writer
+in ``sources/html_sink.py``.
 
 K2 — PDF sink: the reference shells out to wkhtmltopdf per page
 (html_to_pdf_converter.py:105-165). The engine amortizes the converter
@@ -33,25 +34,6 @@ def write_partitioned_docs(
     """K1: partition-pruned document sink. Downstream scans filtered on
     the partition columns never touch other partitions' files."""
     df.write.partitionBy(*partition_cols).mode(mode).format(fmt).save(path)
-
-
-def write_one_file_per_row(df: DataFrame, path: str, filename_col: str, content_col: str) -> None:
-    """K1 exact parity: one file per row, named by ``filename_col``.
-
-    foreachPartition keeps the writes on executors (no driver collect);
-    at 100 TB this is only sensible for small filtered outputs — the
-    tabular sink above is the scale path.
-    """
-
-    def write_partition(rows) -> None:
-        import os
-
-        os.makedirs(path, exist_ok=True)
-        for row in rows:
-            with open(os.path.join(path, row[filename_col]), "w") as fh:
-                fh.write(row[content_col] or "")
-
-    df.select(filename_col, content_col).foreachPartition(write_partition)
 
 
 WKHTMLTOPDF = shutil.which("wkhtmltopdf")

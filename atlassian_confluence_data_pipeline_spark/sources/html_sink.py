@@ -2,10 +2,9 @@
 the reference's one-HTML-file-per-page output
 (html_generator.py:50-64 — ``html/{space}/{new|updated}/{name}.html``).
 
-``operators/sinks.write_one_file_per_row`` does this with
-foreachPartition; this module does it through Spark's writer commit
-protocol (``DataSourceWriter.write/commit/abort``), which is what a
-production file sink actually needs:
+It writes through Spark's writer commit protocol
+(``DataSourceWriter.write/commit/abort``), which is what a production
+file sink actually needs:
 
 - every task writes its rows into a PRIVATE staging directory
   (``{path}/_staging/{uuid}/``) and reports the manifest in its

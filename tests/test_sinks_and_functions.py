@@ -16,7 +16,6 @@ from atlassian_confluence_data_pipeline_spark.functions.text import (
 )
 from atlassian_confluence_data_pipeline_spark.operators.sinks import (
     html_to_pdf,
-    write_one_file_per_row,
     write_partitioned_docs,
 )
 
@@ -39,18 +38,6 @@ def test_partitioned_sink_prunes(spark, tmp_path):
     scan = pruned.queryExecution if False else None  # noqa: F841
     explain = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in explain or pruned.count() == 1
-
-
-def test_one_file_per_row_sink(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("a_1.html", "<p>a</p>"), ("b_2.html", "<p>b</p>")],
-        ["filename", "html"],
-    )
-    out = str(tmp_path / "files")
-    write_one_file_per_row(df, out, "filename", "html")
-    assert sorted(os.listdir(out)) == ["a_1.html", "b_2.html"]
-    with open(os.path.join(out, "a_1.html")) as fh:
-        assert fh.read() == "<p>a</p>"
 
 
 def _assert_valid_pdf(payload: bytes, expected_text: str) -> None:

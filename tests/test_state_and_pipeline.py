@@ -4,17 +4,24 @@ new versions processes zero rows (state_manager.py:72)."""
 
 from __future__ import annotations
 
+from datetime import datetime
+
+import pytest
 from pyspark.sql import functions as F
 
+from atlassian_confluence_data_pipeline_spark.operators.dedup import union_dedup
+from atlassian_confluence_data_pipeline_spark.operators.joins import anti_join, cdc_delta
 from atlassian_confluence_data_pipeline_spark.operators.state import (
+    STATE_SCHEMA,
     StateStore,
     merge_state,
 )
 from atlassian_confluence_data_pipeline_spark.pipeline import (
+    change_set,
     incremental_refresh,
     run_with_store,
 )
-from tests.domain_fixtures import make_pages, make_state
+from tests.domain_fixtures import PAGES_SCHEMA, make_pages, make_state
 
 CUTOFF = "2025-07-01 00:00:00"
 
@@ -97,8 +104,9 @@ def test_rerun_is_idempotent(spark, tmp_path):
 
 def test_observed_run_metrics_match_stats(spark, tmp_path):
     """run_with_store's Observation counters (the reference's run-report
-    tallies, gathered as a side effect of the state-merge job — no
-    extra pass) agree with the grouped stats DataFrame."""
+    tallies, gathered as a side effect of the job that materialises
+    ``processed`` — no extra pass) agree with the grouped stats
+    DataFrame."""
     pages = make_pages(spark)
     store = StateStore(str(tmp_path / "ledger"))
     result = run_with_store(spark, pages, store, CUTOFF)
@@ -121,6 +129,85 @@ def test_observed_run_metrics_match_stats(spark, tmp_path):
     again = run_with_store(spark, pages, store, CUTOFF)
     assert again.metrics["n_pages"] == 0
     assert again.metrics["html_chars"] == 0
+
+
+def test_run_with_store_materialises_processed_once(spark, tmp_path):
+    """The pandas UDF runs in the one job that materialises ``processed``
+    (and fills the counters); the sink and the stats read its result."""
+    result = run_with_store(
+        spark, make_pages(spark), StateStore(str(tmp_path / "ledger")), CUTOFF
+    )
+    assert result.metrics is not None and result.metrics["n_pages"] == 7
+    for frame in (result.processed, result.stats):
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan, plan
+
+
+def _reference_change_set(pages, state, cutoff, check_missing):
+    """The three-operator composition ``change_set`` replaces: window
+    scan and reconciliation sweep unioned with in-window rows first,
+    then the CDC join."""
+    updated = pages.filter(F.col("version.when") >= F.lit(cutoff).cast("timestamp"))
+    if check_missing:
+        missing = anti_join(pages, state.select("id"), "id")
+        candidates = union_dedup(updated, missing, ["id"])
+    else:
+        candidates = updated.dropDuplicates(["id"])
+    return cdc_delta(
+        candidates,
+        state,
+        "id",
+        current_version=F.col("version.number"),
+        state_version_col="version",
+    )
+
+
+def _edge_pages(spark):
+    """make_pages (incl. its boundary-midnight rows 1, 6 and the
+    one-second-before row 4) plus: an id with an out-of-window and an
+    in-window row, both missing from the ledger (in-window must win);
+    a page with no ``version.when``; a page whose ledger row has a NULL
+    version and lies outside the window."""
+    extra = [
+        ("8", "Two Rows", ("OPS",), (1, datetime(2025, 6, 1)), (("<p>old</p>",),), [], []),
+        ("8", "Two Rows", ("OPS",), (2, datetime(2025, 7, 5)), (("<p>new</p>",),), [], []),
+        ("9", "No When", ("OPS",), (1, None), (("<p>n</p>",),), [], []),
+        ("10", "Null Ledger", ("ENG",), (4, datetime(2025, 6, 2)), (("<p>z</p>",),), [], []),
+    ]
+    return make_pages(spark).unionByName(spark.createDataFrame(extra, PAGES_SCHEMA))
+
+
+def _edge_ledgers(spark):
+    null_versions = [
+        ("6", "Doc X", "OPS", None, None, {}),  # in window -> new
+        ("10", "Null Ledger", "ENG", None, None, {}),  # out of window -> skipped
+    ]
+    return {
+        "empty": spark.createDataFrame([], STATE_SCHEMA),
+        "fixture": make_state(spark),  # equal/older/newer + id 99 absent from pages
+        "null_version": make_state(spark).unionByName(
+            spark.createDataFrame(null_versions, STATE_SCHEMA)
+        ),
+    }
+
+
+@pytest.mark.parametrize("check_missing", [True, False])
+def test_change_set_matches_union_dedup_cdc_reference(spark, check_missing):
+    pages = _edge_pages(spark)
+    for name, state in _edge_ledgers(spark).items():
+        got = change_set(pages, state, CUTOFF, check_missing)
+        want = _reference_change_set(pages, state, CUTOFF, check_missing)
+        assert got.schema == want.schema, name
+        got_rows, want_rows = (
+            sorted((r.asDict(recursive=True) for r in df.collect()), key=repr)
+            for df in (got, want)
+        )
+        assert got_rows == want_rows, (name, check_missing)
+        kinds = {r["id"]: (r["version"]["number"], r["change_type"]) for r in got_rows}
+        assert kinds["8"] == (2, "new")  # the in-window row beats the swept one
+        assert ("9" in kinds) == check_missing  # no timestamp: only swept in
+        if name == "null_version":
+            assert kinds["6"] == (7, "new") and "10" not in kinds
 
 
 def test_stats_aggregation(spark):

@@ -6,24 +6,27 @@
 Runs, in order, and stops at the first failure (exit code 1):
 
 1. ``python -m pytest tests/ -x -q``            (sf0.001, full suite)
-2. ``python tools/driver_sim.py``               (every registry query vs
+2. ``python -m pytest perfbench/tests -q``      (self-test of the
+   benchmark's event-log fold, which its ``udf_rows`` and
+   ``source_scans`` per-layer counters rely on)
+3. ``python tools/driver_sim.py``               (every registry query vs
    its DuckDB oracle at sf0.01 in a VANILLA session from a foreign cwd
    — the superset of the driver's CORRECTNESS gate)
-3. ``python tools/plan_audit.py``               (anti-pattern sweep:
+4. ``python tools/plan_audit.py``               (anti-pattern sweep:
    cartesians, unexpected BNLJ, row-at-a-time Python UDFs, CSE traps)
-4. ``python tools/plan_snapshot.py --check``    (physical-plan shape
+5. ``python tools/plan_snapshot.py --check``    (physical-plan shape
    regression diff vs the committed PLAN_SNAPSHOT.json; intentional
    shape changes are recorded with --write)
-5. ``python tools/plan_snapshot.py --check-warm`` (session-memo gate:
+6. ``python tools/plan_snapshot.py --check-warm`` (session-memo gate:
    with the session memo populated by a first plan-construction pass,
    a second pass must invoke ZERO stage builders — no consumer may
    bypass the shared-stage memo)
-6. ``python tools/qcheck.py --rotation``        (seeded 28-query
+7. ``python tools/qcheck.py --rotation``        (seeded 28-query
    rotation over the registry tail the driver's CORRECTNESS sample
    missed recently — sha256(name:rN) draw, rule in BASELINE.md)
 
 ``--fast`` skips step 1 (the pytest suite) for quick mid-edit loops;
-a commit-worthy tree must pass all three.
+a commit-worthy tree must pass every step.
 """
 
 from __future__ import annotations
@@ -38,6 +41,7 @@ REPO = Path(__file__).resolve().parent.parent
 
 STEPS = [
     ("pytest", [sys.executable, "-m", "pytest", "tests/", "-x", "-q"]),
+    ("perfbench_selftest", [sys.executable, "-m", "pytest", "perfbench/tests", "-q"]),
     ("driver_sim", [sys.executable, "tools/driver_sim.py"]),
     ("plan_audit", [sys.executable, "tools/plan_audit.py"]),
     ("plan_snapshot", [sys.executable, "tools/plan_snapshot.py", "--check"]),
@@ -57,7 +61,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--fast", action="store_true", help="skip the pytest suite")
     args = ap.parse_args()
-    steps = STEPS[1:] if args.fast else STEPS
+    steps = [s for s in STEPS if not (args.fast and s[0] == "pytest")]
     for name, cmd in steps:
         t0 = time.time()
         print(f"=== {name}: {' '.join(cmd[1:])}", flush=True)
