@@ -22,6 +22,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 
 def with_salt(df: DataFrame, n_salts: int, salt_col: str = "__salt") -> DataFrame:
@@ -170,10 +171,17 @@ def salted_join_skewed(
     return big_salted.join(small_replicated, [key, "__salt"]).drop("__salt")
 
 
-#: (applicationId, defaultParallelism, source files) -> probed split
-#: count. Split planning is a pure function of these inputs, so the
-#: probe result is reusable across every query in a session.
-_SPREAD_MEMO: dict[tuple, int] = {}
+def _holds_map(t: DataType) -> bool:
+    """True when ``t`` is a MapType or holds one at any depth (struct
+    field, array element, map key/value): xxhash64 rejects such
+    columns at analysis time."""
+    if isinstance(t, MapType):
+        return True
+    if isinstance(t, StructType):
+        return any(_holds_map(f.dataType) for f in t.fields)
+    if isinstance(t, ArrayType):
+        return _holds_map(t.elementType)
+    return False
 
 
 def spread_scan(df: DataFrame, min_ratio: int = 2) -> DataFrame:
@@ -193,32 +201,35 @@ def spread_scan(df: DataFrame, min_ratio: int = 2) -> DataFrame:
     narrow-row shuffle of the frame.
 
     The split-count probe (an RDD materialization, ~0.1 s of driver
-    work) is memoized per (application, source files, parallelism):
-    split planning depends only on the file set and session confs, so
-    every later query over the same source skips the probe."""
+    work) goes through the session memo (plans/_cache.py), keyed by the
+    sorted source files and the parallelism: split planning depends
+    only on the file set and session confs, so every later query over
+    the same source skips the probe."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     if target <= 1:
         return df
-    memo_key = None
+    from atlassian_confluence_data_pipeline_spark.plans._cache import (
+        shared_pair_table,
+    )
+
+    def probe(_spark, _files) -> int:
+        return df.rdd.getNumPartitions()
+
     try:
-        files = df.inputFiles()
-        if files:
-            memo_key = (
-                spark.sparkContext.applicationId,
-                target,
-                tuple(sorted(files)),
-            )
+        files = sorted(df.inputFiles())
     except Exception:
-        pass
-    current = _SPREAD_MEMO.get(memo_key) if memo_key is not None else None
-    if current is None:
-        try:
-            current = df.rdd.getNumPartitions()
-        except Exception:
-            return df
-        if memo_key is not None:
-            _SPREAD_MEMO[memo_key] = current
+        files = []
+    try:
+        current = (
+            shared_pair_table(
+                spark, "\n".join(files), f"split_count_p{target}", probe
+            )
+            if files
+            else probe(spark, "")
+        )
+    except Exception:
+        return df
     if current * min_ratio >= target:
         return df
     # Spread on a DETERMINISTIC hash key rather than round-robin
@@ -229,11 +240,7 @@ def spread_scan(df: DataFrame, min_ratio: int = 2) -> DataFrame:
     # failure re-runs map tasks (SPARK-38388). Hashing the row's own
     # values into 100x more key values than partitions spreads evenly,
     # needs no sort, and re-runs reproduce the same assignment.
-    from pyspark.sql.types import MapType
-
-    hashable = [
-        f.name for f in df.schema.fields if not isinstance(f.dataType, MapType)
-    ]
+    hashable = [f.name for f in df.schema.fields if not _holds_map(f.dataType)]
     if not hashable:
         return df.repartition(target)
     key = F.pmod(

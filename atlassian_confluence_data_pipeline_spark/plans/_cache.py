@@ -1,38 +1,35 @@
-"""Session-scoped cache for expensive shared intermediates.
+"""The package's one session memo for expensive shared intermediates.
 
-Several registry queries COMPOSE the same LSH dedup chains
-(``near_dup_pairs_lsh``, ``simhash_pairs``, ``minhash_lsh_pairs``):
-the cluster queries consume their pair tables, the agreement report
-consumes two of them at once. Recomputing a full candidate-generation +
-verify chain per consumer is pure waste when several consumers run in
-one session (the bench, a notebook, a pipeline run) — the round-3
-VERDICT flagged ``dedup_method_agreement`` for exactly this.
+Several registry queries consume the same intermediate: the LSH dedup
+chains' pair tables, the per-modality fingerprint frames, the BPE
+tokenizer fit, label centroids, the spectral covariance matrix, a
+scan's probed split count. ``shared_pair_table(spark, sf_dir, name,
+builder)`` is the one entry point for all of them:
 
-``shared_pair_table`` memoizes the chain's eager localCheckpoint per
-(application, sf_dir, chain) so every consumer in a session reads the
-same materialized stage. Only CONSUMERS go through the cache — each
-registry query's own ``fn`` still builds its full plan, so plan
-snapshots/audits keep seeing the honest chain shape, and the first
-consumer to run pays the build exactly once.
+- **Key.** ``(applicationId, sf_dir, name)``. ``sf_dir`` names the
+  inputs (a fixture directory, or any string that identifies the
+  files read) and ``name`` the intermediate plus any parameters that
+  change its value. Nothing outlives the SparkContext that built it.
+- **Eviction.** Inserting under a live application first drops every
+  entry keyed to a different one: checkpointed RDDs and collected rows
+  of a stopped context are dead weight, and a long-lived process that
+  restarts sessions would otherwise accumulate them without bound.
+- **Checkpoint.** The value's type decides. A DataFrame is
+  materialised with an eager ``localCheckpoint`` so every consumer
+  reads the same stage; any other value (a list of centroid rows, a
+  tuple of loop-control scalars, an int, a fit's ``(frame, merges)``
+  pair) is stored as returned. Those must stay model-sized, never
+  corpus rows.
 
-Most cached tables are pair lists (near-dup output scale, not corpus
-scale); the corpus-cardinality ones (``minhash_doc_hashes``,
-``srp_fingerprints``, ``pq_codes``) carry only narrow id + hash/code
-columns. At most |sf_dirs| x |chains| entries live per session.
+Only consumers go through the memo: each registry query's own ``fn``
+still builds its full plan, so plan snapshots and audits see the honest
+chain shape, and the first consumer in a session pays the build once.
+``tools/plan_snapshot.py --check-warm`` wraps this function, so it sees
+every memoized build.
 
-The cache is strictly SESSION-SCOPED (round-11 optimization round):
-rounds 7-10 additionally persisted built stages as parquet under
-``spark-warehouse/_chain_cache/`` keyed by a fixture fingerprint, so a
-fresh session warm-started from a previous run's disk state. That
-cross-RUN layer was removed in round 11 — a benchmarked invocation must
-compute every stage from the parquet inputs (it also distorted
-cross-core-count scaling measurements, since warm-started runs skipped
-the stage builds entirely). Measured cost of the removal: the recorded
-disk-cold total (318.2 s) was already within host noise of the warm
-totals (311-331 s), i.e. the disk layer bought nothing the in-session
-memo doesn't. Checkpointed stages die with their SparkContext; a fresh
-session rebuilds from the fixtures by construction, so the fingerprint/
-invalidation machinery is gone too.
+The memo is session-scoped only: a benchmarked run must compute every
+stage from its parquet inputs, so nothing is written to disk and a
+fresh session rebuilds from the fixtures by construction.
 """
 
 from __future__ import annotations
@@ -41,62 +38,28 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_PAIR_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _evict_dead_sessions(cache: dict, app_id: str) -> None:
-    """Drop entries keyed to a DIFFERENT applicationId: their
-    checkpointed RDDs/collected rows belong to a stopped SparkContext,
-    so a long-lived process that restarts Spark sessions would
-    otherwise accumulate dead references without bound (r11 ADVICE)."""
-    for key in [k for k in cache if k[0] != app_id]:
-        del cache[key]
+_PAIR_CACHE: dict[tuple[str, str, str], object] = {}
 
 
 def shared_pair_table(
     spark: SparkSession,
     sf_dir: str,
     name: str,
-    builder: Callable[[SparkSession, str], DataFrame],
-) -> DataFrame:
-    """Memoized shared stage: built once per (applicationId, sf_dir,
-    name) via an eager localCheckpoint, reused by every later consumer
-    in the session. A restarted session gets a fresh entry (checkpointed
-    RDDs die with their context) and rebuilds from the fixtures; stale
-    entries from previous sessions are evicted on insert."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, name)
-    df = _PAIR_CACHE.get(key)
-    if df is None:
-        _evict_dead_sessions(_PAIR_CACHE, app_id)
-        df = builder(spark, sf_dir).localCheckpoint(eager=True)
-        _PAIR_CACHE[key] = df
-    return df
-
-
-_MODEL_MEMO: dict[tuple[str, str, str], object] = {}
-
-
-def shared_model_rows(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
     builder: Callable[[SparkSession, str], object],
-) -> object:
-    """Memoized MODEL-SIZED collected state (a list of centroid rows, a
-    handful of loop-control scalars) per (applicationId, sf_dir, name) —
-    the ``_bpe_train`` / ``_n_sources`` discipline generalized: the
-    memo holds plan-shape or literal-embedding inputs whose size is
-    bounded by the MODEL (k centroids, one min/max pair), never query
-    output or corpus rows, and a fresh session recomputes them from the
-    parquet fixtures by construction; stale entries from previous
-    sessions are evicted on insert."""
+):
+    """Return the session's memoized ``builder(spark, sf_dir)`` under
+    ``name``, building it on the first call (see the module docstring
+    for the key, the eviction rule and when the value is checkpointed)."""
     app_id = spark.sparkContext.applicationId
     key = (app_id, sf_dir, name)
-    if key not in _MODEL_MEMO:
-        _evict_dead_sessions(_MODEL_MEMO, app_id)
-        _MODEL_MEMO[key] = builder(spark, sf_dir)
-    return _MODEL_MEMO[key]
+    if key not in _PAIR_CACHE:
+        for dead in [k for k in _PAIR_CACHE if k[0] != app_id]:
+            del _PAIR_CACHE[dead]
+        value = builder(spark, sf_dir)
+        if isinstance(value, DataFrame):
+            value = value.localCheckpoint(eager=True)
+        _PAIR_CACHE[key] = value
+    return _PAIR_CACHE[key]
 
 
 def srp_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -452,8 +415,8 @@ def text_simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode + 64-affine-vote HashAggregate that dominated
     ``simhash_pairs``' cold cost (2.7 s of its 2.7 s at sf0.1; the
     chunk-banded candidate join downstream is cheap). Same fold as the
-    oracle's symbolic rendering; warm sessions read the persisted
-    fingerprint table."""
+    oracle's symbolic rendering; later consumers in the session read
+    the checkpointed fingerprint table."""
     from atlassian_confluence_data_pipeline_spark.catalog import load_table
     from atlassian_confluence_data_pipeline_spark.operators.lsh import simhash
     from atlassian_confluence_data_pipeline_spark.plans.textops import _words
@@ -587,7 +550,7 @@ def label_centroid_rows(spark: SparkSession, sf_dir: str) -> list:
         )
         return collect_centroids(cent)
 
-    return shared_model_rows(spark, sf_dir, "label_centroid_rows", _build)
+    return shared_pair_table(spark, sf_dir, "label_centroid_rows", _build)
 
 
 def seg_price_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -669,7 +632,7 @@ def lifetime_head(spark: SparkSession, sf_dir: str):
             F.max("last_d")
         ).first()[0]
 
-    return shared_model_rows(spark, sf_dir, "lifetime_head", _build)
+    return shared_pair_table(spark, sf_dir, "lifetime_head", _build)
 
 
 def seg_price_summary(spark: SparkSession, sf_dir: str) -> tuple:
@@ -693,7 +656,7 @@ def seg_price_summary(spark: SparkSession, sf_dir: str) -> tuple:
         )
         return (row["na"], row["nb"], row["mn"], row["mx"])
 
-    return shared_model_rows(spark, sf_dir, "seg_price_summary", _build)
+    return shared_pair_table(spark, sf_dir, "seg_price_summary", _build)
 
 
 def pq_query_luts(spark: SparkSession, sf_dir: str) -> DataFrame:

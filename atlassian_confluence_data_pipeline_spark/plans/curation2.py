@@ -641,30 +641,27 @@ def bpe_merge_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session memo for the trained tokenizer, keyed like the BT guard
-#: scan (preference.py): four registry queries (merge table, census,
-#: tokenized packing, per-source fertility) all need the SAME
-#: BPE_MERGES-round fit, and each fit is ~9 sequential driver jobs
-#: (word-count checkpoint + one argmax collect per round) — the
-#: dominant cost of every BPE bench entry (round-11 profile:
-#: tokenized_pack_stats spent 4.0 s of its 5.1 s in fn()). Training
-#: once per (applicationId, sf_dir) is the pq_code_table treatment:
-#: model-sized state, rebuilt from the fixtures by every new session.
-_BPE_MEMO: dict[tuple[str, str], tuple[DataFrame, list]] = {}
-
-
 def _bpe_train(spark: SparkSession, sf_dir: str):
-    """Run the BPE training loop; returns (final (word, freq, seq)
-    frame with all learned merges applied, merge list) — shared by
-    bpe_merge_iterations, bpe_token_census, tokenized_pack_stats and
-    bpe_fertility_by_source via a per-session memo (the fit is a
-    deterministic function of the fixtures; the final frame is an
+    """The trained tokenizer: (final (word, freq, seq) frame with all
+    learned merges applied, merge list). Four registry queries (merge
+    table, census, tokenized packing, per-source fertility) need the
+    SAME BPE_MERGES-round fit, and each fit is ~9 sequential driver
+    jobs (word-count checkpoint + one argmax collect per round), so it
+    is trained once per session through the session memo
+    (plans/_cache.py) — model-sized state, rebuilt from the fixtures by
+    every new session."""
+    from atlassian_confluence_data_pipeline_spark.plans._cache import (
+        shared_pair_table,
+    )
+
+    return shared_pair_table(spark, sf_dir, "bpe_train", _bpe_fit)
+
+
+def _bpe_fit(spark: SparkSession, sf_dir: str):
+    """Run the BPE training loop behind :func:`_bpe_train`. The fit is
+    a deterministic function of the fixtures; the final frame is an
     eager localCheckpoint so consumers also skip re-running the
-    BPE_MERGES row-local rewrites)."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BPE_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
+    BPE_MERGES row-local rewrites."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         F.explode(
@@ -726,9 +723,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     from atlassian_confluence_data_pipeline_spark import iterstats
 
     iterstats.record("bpe_merge_iterations", BPE_MERGES)
-    cur = cur.localCheckpoint(eager=True)
-    _BPE_MEMO[memo_key] = (cur, merges)
-    return cur, merges
+    return cur.localCheckpoint(eager=True), merges
 
 
 def _bpe_census_oracle() -> str:

@@ -94,7 +94,7 @@ def _centroids(spark: SparkSession, sf_dir: str) -> dict[int, list[float]]:
     session-memoized (round 12) so the confusion/silhouette pair pays
     the aggregate + collect once."""
     from atlassian_confluence_data_pipeline_spark.plans._cache import (
-        shared_model_rows,
+        shared_pair_table,
     )
 
     def _build(spark: SparkSession, sf_dir: str) -> dict[int, list[float]]:
@@ -117,7 +117,7 @@ def _centroids(spark: SparkSession, sf_dir: str) -> dict[int, list[float]]:
             lab: [dims[d] for d in sorted(dims)] for lab, dims in comp.items()
         }
 
-    return shared_model_rows(spark, sf_dir, "embed_quant_centroids", _build)
+    return shared_pair_table(spark, sf_dir, "embed_quant_centroids", _build)
 
 
 def _dist_structs(cents: dict[int, list[float]]):

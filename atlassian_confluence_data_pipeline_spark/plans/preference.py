@@ -265,26 +265,24 @@ def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
 BT_PACKED_MAX_CONTESTANTS = 128
 
 
-_N_SOURCES_MEMO: dict[tuple[str, str], int] = {}
-
-
 def _n_sources(spark: SparkSession, sf_dir: str) -> int:
     """Cheap upper bound on the contestant count for the fit-path
     guard: contestants are sources, and the distinct-source census is
     a narrow pruned scan (model-sized collect — one integer).
-    Session-memoized per (applicationId, sf_dir) so repeat builds
-    (the bench's double timing, dpo_pair_construction's reuse) pay the
-    scan once."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    n = _N_SOURCES_MEMO.get(key)
-    if n is None:
-        n = int(
+    Session-memoized (plans/_cache.py) so repeat builds (the bench's
+    double timing, dpo_pair_construction's reuse) pay the scan once."""
+    from atlassian_confluence_data_pipeline_spark.plans._cache import (
+        shared_pair_table,
+    )
+
+    def _build(spark: SparkSession, sf_dir: str) -> int:
+        return int(
             load_table(spark, sf_dir, "documents")
             .agg(F.count_distinct("source"))
             .first()[0]
         )
-        _N_SOURCES_MEMO[key] = n
-    return n
+
+    return shared_pair_table(spark, sf_dir, "n_sources", _build)
 
 
 def _matchup_matrix(duels: DataFrame) -> DataFrame:

@@ -329,10 +329,13 @@ def interpolated_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     freq = tok.groupBy("word").agg(F.count(F.lit(1)).alias("cu"))
     # scalar corpus cardinality: one size() fold per document — the same
-    # exact integer the former tok.count() re-explosion produced
-    total = (
-        docs.agg(F.sum(F.size(_words(F.col("text"))))).first()[0]
+    # exact integer the former tok.count() re-explosion produced; null
+    # text counts 0 tokens (size(null) is -1 or null by conf) and an
+    # empty table totals 0
+    n_words = F.greatest(
+        F.coalesce(F.size(_words(F.col("text"))), F.lit(0)), F.lit(0)
     )
+    total = docs.agg(F.sum(n_words)).first()[0] or 0
     n = F.greatest(F.size("w") - 1, F.lit(0))
     bgd = w.select(
         "doc_id",

@@ -64,22 +64,24 @@ crow AS (SELECT j, list(c ORDER BY k) AS row FROM c GROUP BY j),
 cmat AS (SELECT list(row ORDER BY j) AS m FROM crow)"""
 
 
-#: session-memoized covariance matrices keyed by fixture dir — the
-#: matrix is 64x64 driver floats derived deterministically from the
-#: data, and both spectral queries (PCA, participation ratio) start
-#: from it; sharing saves the pair-exploded moment pass (round-6 bench:
-#: ~4 s each at sf0.1)
-_COV_CACHE: dict[str, list] = {}
-
-
 def _cov_matrix(spark: SparkSession, sf_dir: str) -> list:
-    """The exact covariance matrix as driver-side float64 — one
-    pair-exploded DECIMAL moment pass, bounded (64 + 64^2) collect,
-    doubles built with the oracle CTEs' exact expression shape.
-    Memoized per fixture dir (deterministic in the data)."""
-    key = str(sf_dir).rstrip("/")
-    if key in _COV_CACHE:
-        return _COV_CACHE[key]
+    """The exact covariance matrix as driver-side float64 (64x64,
+    derived deterministically from the embeddings). Both spectral
+    queries (PCA, participation ratio) start from it, so it is built
+    once per session through the session memo (plans/_cache.py) and
+    the pair-exploded moment pass (round-6 bench: ~4 s each at sf0.1)
+    is paid once; a new session rebuilds it from the fixtures."""
+    from atlassian_confluence_data_pipeline_spark.plans._cache import (
+        shared_pair_table,
+    )
+
+    return shared_pair_table(spark, sf_dir, "cov_matrix", _cov_build)
+
+
+def _cov_build(spark: SparkSession, sf_dir: str) -> list:
+    """One pair-exploded DECIMAL moment pass, bounded (64 + 64^2)
+    collect, doubles built with the oracle CTEs' exact expression
+    shape."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = F.transform(
         F.col("embedding"),
@@ -113,7 +115,6 @@ def _cov_matrix(spark: SparkSession, sf_dir: str) -> list:
     for r in s2_rows:
         j, k = r["j"], r["k"]
         c[j][k] = ((float(r["s"]) - s1[j] * s1[k] / nf) / nf) / _Q2
-    _COV_CACHE[key] = c
     return c
 
 

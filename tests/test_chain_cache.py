@@ -1,22 +1,37 @@
-"""Session-scoped chain cache (plans/_cache.py): memo-hit semantics,
-result equality, key disjointness, and the round-11 contract that NO
-cross-run disk state is ever written — every session computes shared
-stages from the parquet inputs."""
+"""The session memo (plans/_cache.py): memo-hit semantics, result
+equality, key disjointness, application scoping and eviction for every
+kind of memoized value, rebuilds from rewritten fixtures, and the
+round-11 contract that NO cross-run disk state is ever written — every
+session computes shared stages from the parquet inputs."""
 
 from __future__ import annotations
 
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
+from atlassian_confluence_data_pipeline_spark.operators.skew import spread_scan
 from atlassian_confluence_data_pipeline_spark.plans import _cache
+from atlassian_confluence_data_pipeline_spark.plans.curation2 import _bpe_train
+from atlassian_confluence_data_pipeline_spark.plans.preference import _n_sources
+from atlassian_confluence_data_pipeline_spark.plans.spectral import (
+    pca_top_component,
+)
 
 
 def _mk_sf_dir(spark, tmp_path, n=20, name="sf"):
+    """documents(doc_id, text, source): texts with enough repeated
+    symbol pairs for every BPE merge round, three sources."""
     sf = tmp_path / name
     sf.mkdir()
     spark.range(n).select(
-        F.col("id").alias("doc_id"), F.col("id").cast("string").alias("text")
+        F.col("id").alias("doc_id"),
+        F.concat(
+            F.lit("lower lowest newer newest wider widest "),
+            F.col("id").cast("string"),
+        ).alias("text"),
+        (F.col("id") % 3).cast("string").alias("source"),
     ).write.parquet(str(sf / "documents.parquet"))
     return str(sf)
 
@@ -106,30 +121,77 @@ def test_no_disk_state_is_written(spark, tmp_path):
     assert not hasattr(_cache, "_disk_dir")
 
 
+def _doc_ids(s, d):
+    return s.read.parquet(f"{d}/documents.parquet").select("doc_id")
+
+
+#: one of each kind of memoized value: a checkpointed stage, collected
+#: model rows, the BPE fit ((frame, merges) tuple), the contestant count
+#: (int) and a scan's split-count probe (keyed by its files)
+_MEMOIZED_BUILDS = {
+    "stage": lambda spark, sf: _cache.shared_pair_table(
+        spark, sf, "tapp", _doc_ids
+    ),
+    "model_rows": lambda spark, sf: _cache.shared_pair_table(
+        spark, sf, "mapp", lambda s, d: [1, 2]
+    ),
+    "bpe_fit": _bpe_train,
+    "n_sources": _n_sources,
+    "split_probe": lambda spark, sf: spread_scan(
+        spark.read.parquet(f"{sf}/documents.parquet")
+    ),
+}
+
+
+@pytest.mark.parametrize("build", sorted(_MEMOIZED_BUILDS))
 def test_cache_keys_are_application_scoped_and_dead_entries_evicted(
-    spark, tmp_path
+    spark, tmp_path, build
 ):
     """Round-12 de-gaming invariant (r11 VERDICT item 8): every memo key
     leads with the LIVE applicationId — nothing can survive a session
     restart — and inserting under a new session evicts entries keyed to
-    a stopped one (r11 ADVICE: unbounded dead-DataFrame accumulation)."""
+    a stopped one (r11 ADVICE: unbounded dead-DataFrame accumulation).
+    Holds for every kind of value the one session memo keeps."""
     sf = _mk_sf_dir(spark, tmp_path, name="sfapp")
-
-    def builder(s, d):
-        return s.read.parquet(f"{d}/documents.parquet").select("doc_id")
-
-    _cache.shared_pair_table(spark, sf, "tapp", builder)
-    _cache.shared_model_rows(spark, sf, "mapp", lambda s, d: [1, 2])
     app_id = spark.sparkContext.applicationId
-    assert all(k[0] == app_id for k in _cache._PAIR_CACHE)
-    assert all(k[0] == app_id for k in _cache._MODEL_MEMO)
-    # plant dead-session entries; the next insert must evict them
+    # plant a dead-session entry; the build's insert must evict it
     _cache._PAIR_CACHE[("dead-app", sf, "x")] = object()
-    _cache._MODEL_MEMO[("dead-app", sf, "x")] = object()
-    _cache.shared_pair_table(spark, sf, "tapp2", builder)
-    _cache.shared_model_rows(spark, sf, "mapp2", lambda s, d: [3])
+    before = set(_cache._PAIR_CACHE)
+    _MEMOIZED_BUILDS[build](spark, sf)
+    inserted = set(_cache._PAIR_CACHE) - before
+    assert inserted  # the build went through the session memo
     assert all(k[0] == app_id for k in _cache._PAIR_CACHE)
-    assert all(k[0] == app_id for k in _cache._MODEL_MEMO)
+    # a repeat is a memo hit: nothing new is inserted
+    _MEMOIZED_BUILDS[build](spark, sf)
+    assert set(_cache._PAIR_CACHE) - before == inserted
+
+
+def test_restarted_session_rebuilds_covariance_from_rewritten_fixtures(
+    spark, sf_dir, tmp_path
+):
+    """pca_top_component's covariance matrix is session state like every
+    other memoized value: after a restart (simulated by clearing the
+    memo) over embeddings rewritten at the SAME path, the rebuild must
+    equal a fresh build over the new data, not the previous answer."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    rewritten = emb.filter(F.col("vec_id") % 2 == 0)
+    same, fresh = tmp_path / "same", tmp_path / "fresh"
+    same.mkdir()
+    fresh.mkdir()
+    emb.write.parquet(str(same / "embeddings.parquet"))
+    rewritten.write.parquet(str(fresh / "embeddings.parquet"))
+
+    def build(d):
+        return sorted(map(tuple, pca_top_component(spark, str(d)).collect()))
+
+    first = build(same)
+    app_id = spark.sparkContext.applicationId
+    assert any(k[:2] == (app_id, str(same)) for k in _cache._PAIR_CACHE)
+    _cache._PAIR_CACHE.clear()
+    rewritten.write.mode("overwrite").parquet(str(same / "embeddings.parquet"))
+    rebuilt = build(same)
+    assert rebuilt == build(fresh)
+    assert rebuilt != first  # the rewrite moved the answer
 
 
 def test_no_writes_anywhere_under_spark_warehouse(spark, tmp_path):

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from atlassian_confluence_data_pipeline_spark.operators.skew import (
     salted_agg,
     salted_join_skewed,
+    spread_scan,
 )
 
 
@@ -388,3 +389,22 @@ def test_grouped_distributed_rank_single_bucket(spark):
     assert sorted((r["k"], r["rk"]) for r in rows) == [
         (i, i + 1) for i in range(10)
     ]
+
+
+def test_spread_scan_skips_columns_holding_nested_maps(spark, tmp_path):
+    """xxhash64 rejects a MapType at any depth, so the spread key must
+    leave out a struct<map>, array<map> or map column; the rows still
+    spread over the cores and survive unchanged."""
+    p = str(tmp_path / "nested.parquet")
+    spark.range(200).select(
+        "id",
+        F.struct(F.create_map(F.lit("k"), F.col("id")).alias("m")).alias("s"),
+        F.array(F.create_map(F.lit("k"), F.col("id"))).alias("a"),
+    ).coalesce(1).write.parquet(p)
+    df = spark.read.parquet(p)
+    out = spread_scan(df)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    got = sorted(
+        (r["id"], r["s"]["m"]["k"], r["a"][0]["k"]) for r in out.collect()
+    )
+    assert got == [(i, i, i) for i in range(200)]

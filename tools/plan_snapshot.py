@@ -15,12 +15,12 @@ changes made ON PURPOSE are recorded by re-running ``--write`` and
 committing the new snapshot — the diff then documents itself in the
 PR.
 
-``--check-warm`` gates the chain cache's one contract (the disk layer
-was removed in round 11 — plans/_cache.py is session-scoped now): with
-the session memo populated by a first full plan-construction pass, a
-second pass over every query must invoke ZERO stage builders — any
-builder re-run means a consumer bypassed the memo (a keying bug or a
-consumer inlining its own copy of a shared chain).
+``--check-warm`` gates the session memo's one contract (plans/_cache.py
+holds every memoized build: shared stages, model rows, the BPE fit, the
+covariance matrix, scan split counts): with the memo populated by a
+first full plan-construction pass, a second pass over every query must
+run ZERO builders — any builder re-run means a consumer bypassed the
+memo (a keying bug, or a consumer calling a memoized builder directly).
 
 The snapshot complements tools/plan_audit.py: the audit flags known
 anti-patterns anywhere; the snapshot freezes the EXACT current shape,
@@ -87,16 +87,29 @@ def collect(sf: str) -> dict[str, dict[str, int]]:
 
 
 def collect_warm(sf: str) -> tuple[dict[str, dict[str, int]], list[str]]:
-    """Two passes in ONE session: pass 1 populates the session memo
-    (builders run once each), pass 2 runs with the builder path
-    instrumented — any builder invocation on pass 2 means a consumer
-    bypassed the memo and is reported for the gate."""
+    """Two passes in ONE session over the package's one session memo
+    (``plans/_cache.shared_pair_table``). Pass 1 populates the memo and
+    records every builder it ran. Pass 2 runs with the memo entry point
+    spied and every module-level builder from pass 1 wrapped: a builder
+    run through the memo (reported by memo name) is a keying bug, and a
+    direct call of a pass-1 builder (reported as ``module.function``)
+    is a consumer computing a memoized value without the memo."""
     import atlassian_confluence_data_pipeline_spark.plans._cache as _c
 
-    collect(sf)  # pass 1: populate the session memo
+    real = _c.shared_pair_table
+    builders: set = set()
+
+    def recording(spark, sf_dir, name, builder):
+        builders.add(builder)
+        return real(spark, sf_dir, name, builder)
+
+    _c.shared_pair_table = recording
+    try:
+        collect(sf)  # pass 1: populate the session memo
+    finally:
+        _c.shared_pair_table = real
 
     rebuilt: list[str] = []
-    real = _c.shared_pair_table
 
     def spying(spark, sf_dir, name, builder):
         def spy_builder(s, d):
@@ -105,11 +118,30 @@ def collect_warm(sf: str) -> tuple[dict[str, dict[str, int]], list[str]]:
 
         return real(spark, sf_dir, name, spy_builder)
 
+    def flagging(fn):
+        label = f"{fn.__module__.rsplit('.', 1)[-1]}.{fn.__qualname__}"
+
+        def wrapper(*args, **kwargs):
+            rebuilt.append(label)
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    # closures (``<locals>`` qualnames) are reachable only through the
+    # accessor that hands them to the memo, so the memo spy covers them
+    wrapped = []
+    for fn in builders:
+        module = sys.modules.get(getattr(fn, "__module__", ""))
+        if module is not None and getattr(module, fn.__qualname__, None) is fn:
+            wrapped.append((module, fn))
+            setattr(module, fn.__qualname__, flagging(fn))
     _c.shared_pair_table = spying
     try:
         shapes = collect(sf)
     finally:
         _c.shared_pair_table = real
+        for module, fn in wrapped:
+            setattr(module, fn.__qualname__, fn)
     return shapes, sorted(set(rebuilt))
 
 
