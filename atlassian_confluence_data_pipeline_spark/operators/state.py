@@ -1,4 +1,5 @@
-"""State ledger: the processed-versions table + MERGE-style upsert (K3).
+"""State ledger: the processed-versions table + MERGE-style upsert (K3),
+and the one commit protocol every persisted store and file sink uses.
 
 The reference persists a key->version dict as one JSON file and rewrites
 the whole file after every processed page (state_manager.py:84-102,
@@ -9,20 +10,44 @@ the whole file after every processed page (state_manager.py:84-102,
   shuffle per batch, not one rewrite per row;
 - multi-version batches resolve to latest-per-key first (W2; the
   reference gets this implicitly from sequential overwrite, :93-99);
-- persistence is snapshot directories + an atomic pointer file, the
+- persistence is parquet directories behind one JSON manifest, the
   Delta-less rendering of ``MERGE INTO`` with atomic visibility.
+
+Commit protocol. One rule: **a directory is visible if and only if the
+current manifest names it.** A reader never lists a directory to find
+data; it binds exactly the files one manifest names, the way Delta and
+Iceberg readers bind one snapshot's file list.
+
+- *Publish*: a writer puts its data in a fresh, nonce-named directory
+  (:func:`fresh_name`), then atomically replaces the manifest
+  (:func:`publish`). The replace is the only commit point; a crash
+  before it leaves an unnamed, invisible directory.
+- *Retire*: a directory the new manifest drops is renamed to a hidden
+  name and deleted (:func:`retire`). A reader still holding the old
+  manifest gets a raised missing-path or missing-file error, which is
+  retryable; it never binds a subset of the data.
+- *Reap*: a writer-prefixed directory or hidden temp that the manifest
+  does not name — a crash leftover, or another process's in-flight
+  write — is removed only once it is older than a grace period
+  (:func:`reap`, :data:`REAP_GRACE_S`).
+- *Read*: load one manifest, bind the directories it names.
+
+``StateStore``, ``AppendIndexStore``, the curated-shard sinks
+(sources/shard_sink.py) and the n-gram index sink
+(sources/ngram_index_sink.py) all commit through these helpers.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 import time
-from collections.abc import Sequence
+import uuid
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from atlassian_confluence_data_pipeline_spark.operators.dedup import latest_per_key
@@ -40,6 +65,15 @@ STATE_SCHEMA = T.StructType(
         ),
     ]
 )
+
+#: minimum age (mtime, seconds) before an unnamed directory or temp file
+#: is reaped: protects a second process's in-flight write, and gives a
+#: reader holding an old manifest time to finish
+REAP_GRACE_S = 300.0
+
+#: name prefixes of the protocol's own hidden entries (manifest temps,
+#: retired directories); always reapable once aged
+_HIDDEN = (".tmp-", ".retired-")
 
 
 def merge_state(
@@ -60,18 +94,100 @@ def merge_state(
     return state.join(u.select(*keys), keys, "left_anti").unionByName(u)
 
 
+# -- the commit protocol -----------------------------------------------
+
+
+def fresh_name(prefix: str) -> str:
+    """A directory name no writer has used: ``prefix`` + epoch-ns + a
+    random suffix (unique across concurrent processes)."""
+    return f"{prefix}{time.time_ns()}-{uuid.uuid4().hex[:8]}"
+
+
+def load_manifest(root: str, name: str) -> dict | None:
+    """The committed manifest ``root/name``, or None when it is missing
+    or unreadable (tolerant load: no manifest means nothing committed)."""
+    try:
+        with open(os.path.join(root, name)) as fh:
+            man = json.load(fh)
+    except (OSError, json.JSONDecodeError):
+        return None
+    return man if isinstance(man, dict) else None
+
+
+def publish(
+    root: str, name: str, manifest: dict, retired: Iterable[str] = ()
+) -> None:
+    """THE commit point: write ``manifest`` to a hidden temp file and
+    atomically replace ``root/name`` with it (mkstemp + os.replace), then
+    retire the directories the new manifest no longer names."""
+    fd, tmp = tempfile.mkstemp(dir=root, prefix=".tmp-")
+    with os.fdopen(fd, "w") as fh:
+        json.dump(manifest, fh, indent=1, sort_keys=True)
+    os.replace(tmp, os.path.join(root, name))
+    retire(root, retired)
+
+
+def retire(root: str, dirs: Iterable[str]) -> None:
+    """Rename each directory to a hidden name, then delete it. The
+    rename is atomic, so a reader bound to the old manifest sees the
+    whole directory or a missing path — never a half-deleted one. A
+    crash between the two steps leaves a hidden dir for :func:`reap`."""
+    for d in dirs:
+        hidden = os.path.join(root, fresh_name(f".retired-{d}-"))
+        try:
+            os.rename(os.path.join(root, d), hidden)
+        except OSError:
+            continue  # already gone
+        shutil.rmtree(hidden, ignore_errors=True)
+
+
+def reap(
+    root: str,
+    named: Iterable[str],
+    prefixes: tuple[str, ...],
+    grace_s: float = REAP_GRACE_S,
+) -> None:
+    """Remove every entry of ``root`` that starts with one of the
+    writer's ``prefixes`` (or is a hidden protocol temp), is not in
+    ``named``, and is older than ``grace_s``. Best-effort: an entry that
+    vanishes first was reaped by someone else."""
+    keep = set(named)
+    now = time.time()
+    for d in os.listdir(root):
+        if d in keep or not d.startswith(prefixes + _HIDDEN):
+            continue
+        p = os.path.join(root, d)
+        try:
+            if now - os.path.getmtime(p) < grace_s:
+                continue
+            if os.path.isdir(p):
+                shutil.rmtree(p, ignore_errors=True)
+            else:
+                os.remove(p)
+        except OSError:
+            pass
+
+
+# -- stores ------------------------------------------------------------
+
+
 class StateStore:
-    """Snapshot-directory ledger with an atomic current-pointer.
+    """Snapshot-directory ledger behind an atomic pointer manifest.
 
     Layout::
 
-        {path}/snapshot-{epoch_ns}/   <- parquet snapshots
-        {path}/_CURRENT               <- JSON {"snapshot": "snapshot-..."}
+        {path}/snapshot-{nonce}/   <- parquet snapshots
+        {path}/_CURRENT            <- JSON {"snapshot": current,
+                                             "history": [oldest .. current]}
 
-    ``write`` writes the new snapshot fully, then atomically replaces the
-    pointer (os.replace) — readers always see a complete snapshot, never
-    a partial one. This is the engine's Delta-less MERGE commit protocol;
-    on a real deployment the same operator writes through Delta/Iceberg.
+    ``write`` writes the new snapshot fully, then publishes the pointer
+    with the snapshot appended to the history — readers always see a
+    complete snapshot. Only snapshots the pointer records exist for
+    ``list_snapshots``, ``read(snapshot=)`` and ``vacuum``; a snapshot
+    dir left by a crashed write is invisible and reaped after
+    :data:`REAP_GRACE_S`. This is the engine's Delta-less MERGE commit
+    protocol; on a real deployment the same operator writes through
+    Delta/Iceberg.
     """
 
     POINTER = "_CURRENT"
@@ -80,52 +196,58 @@ class StateStore:
         self.path = path
         os.makedirs(path, exist_ok=True)
 
-    def _pointer_path(self) -> str:
-        return os.path.join(self.path, self.POINTER)
+    def _history(self) -> list[str]:
+        # a missing/corrupt pointer is an empty ledger (tolerant-load
+        # parity with state_manager.py:20-40)
+        man = load_manifest(self.path, self.POINTER) or {}
+        snap = man.get("snapshot")
+        return list(man.get("history") or ([snap] if snap else []))
 
     def current_snapshot(self) -> str | None:
-        try:
-            with open(self._pointer_path()) as fh:
-                return json.load(fh)["snapshot"]
-        except (FileNotFoundError, KeyError, json.JSONDecodeError):
-            return None  # missing/corrupt pointer -> empty ledger
-            # (tolerant-load parity with state_manager.py:20-40)
+        history = self._history()
+        return history[-1] if history else None
 
     def list_snapshots(self) -> list[str]:
-        """All retained snapshots, oldest first (names embed epoch-ns)."""
-        return sorted(
-            d for d in os.listdir(self.path) if d.startswith("snapshot-")
-        )
+        """The committed snapshots, oldest first."""
+        return self._history()
 
     def read(self, spark: SparkSession, snapshot: str | None = None) -> DataFrame:
-        """Read the current ledger, or time-travel to a named snapshot
-        (every upsert retains its full predecessor until vacuumed)."""
-        snap = snapshot or self.current_snapshot()
+        """Read the current ledger, or time-travel to a committed
+        snapshot (every upsert retains its full predecessor until
+        vacuumed)."""
+        history = self._history()
+        if snapshot is not None and snapshot not in history:
+            raise FileNotFoundError(
+                f"{snapshot} is not a committed snapshot of {self.path}"
+            )
+        snap = snapshot or (history[-1] if history else None)
         if snap is None:
             return spark.createDataFrame([], STATE_SCHEMA)
         return spark.read.parquet(os.path.join(self.path, snap))
 
     def vacuum(self, keep: int = 3) -> list[str]:
         """Drop all but the newest ``keep`` snapshots (never the current
-        one). Returns the removed snapshot names."""
-        import shutil
-
-        snaps = self.list_snapshots()
-        current = self.current_snapshot()
-        removable = [s for s in snaps[:-keep] if s != current] if keep else [
-            s for s in snaps if s != current
-        ]
-        for s in removable:
-            shutil.rmtree(os.path.join(self.path, s), ignore_errors=True)
-        return removable
+        one): the shorter history is committed first, then the dropped
+        dirs are retired and aged crash leftovers reaped. Returns the
+        removed snapshot names."""
+        history = self._history()
+        removed = history[: -max(keep, 1)]
+        kept = history[len(removed):]
+        if removed:
+            publish(
+                self.path,
+                self.POINTER,
+                {"snapshot": kept[-1], "history": kept},
+                retired=removed,
+            )
+        reap(self.path, kept, ("snapshot-",))
+        return removed
 
     def write(self, df: DataFrame) -> str:
-        snap = f"snapshot-{time.time_ns()}"
+        snap = fresh_name("snapshot-")
         df.write.mode("overwrite").parquet(os.path.join(self.path, snap))
-        fd, tmp = tempfile.mkstemp(dir=self.path, prefix=".ptr-")
-        with os.fdopen(fd, "w") as fh:
-            json.dump({"snapshot": snap}, fh)
-        os.replace(tmp, self._pointer_path())  # atomic visibility flip
+        history = self._history() + [snap]
+        publish(self.path, self.POINTER, {"snapshot": snap, "history": history})
         return snap
 
     def upsert(
@@ -151,303 +273,137 @@ class AppendIndexStore:
 
     Layout::
 
-        {path}/batch={batch_id}/     <- one parquet dir per micro-batch
+        {path}/batch={id}-{nonce}/   <- one parquet dir per micro-batch
         {path}/compacted-{nonce}/    <- folded older batches (optional)
-        {path}/_COMPACTED            <- JSON {"dir", "max_batch"} pointer
+        {path}/_MANIFEST             <- JSON {"batches": {id: dir},
+                                              "compacted", "watermark"}
 
-    ``write_batch`` overwrites ONLY its own batch partition, so a
-    replayed micro-batch (restart recovery) rewrites the identical
-    rows instead of growing the index — idempotent by layout, no
-    read-modify-write, no snapshot churn. The write lands in a hidden
-    ``.tmp-`` directory first and is RENAMED into ``batch=N`` — atomic
-    visibility on any filesystem, independent of the Hadoop committer
-    algorithm (v2 leaves visible partial files mid-write; round-6
-    advice). ``read`` unions the compacted partition with every batch
-    partition NEWER than the compaction watermark.
+    ``write_batch`` writes a fresh dir and publishes the manifest with
+    its batch id mapped to it; a replayed live batch (restart recovery)
+    commits a new dir and retires the old one (last write wins), so the
+    index never grows by a replay. ``read`` binds exactly the compacted
+    dir plus the batch dirs the manifest names.
 
-    ``compact`` bounds the long-stream small-file explosion (round-6
-    top item): it folds all but the newest ``keep_recent`` batch dirs
-    (plus any prior compacted partition) into ONE consolidated
-    partition and atomically advances the ``_COMPACTED`` pointer.
-    Replay-idempotence is preserved structurally: a replayed batch at
-    or below the watermark re-creates its ``batch=N`` dir, but ``read``
-    ignores partitions <= watermark, so the replay is a no-op — the
-    consolidated partition is a pure function of the folded batches. A
-    streaming index that is instead REVISED per key belongs in
-    StateStore's MERGE path, not here."""
+    ``compact`` bounds the long-stream small-file explosion: it folds
+    all but the newest ``keep_recent`` batches (plus any prior compacted
+    dir) into ONE consolidated dir and advances the watermark in the
+    same manifest. A replayed batch at or below the watermark is a
+    no-op — the consolidated dir is a pure function of the folded
+    batches. A streaming index that is instead REVISED per key belongs
+    in StateStore's MERGE path, not here."""
 
-    COMPACT_POINTER = "_COMPACTED"
+    MANIFEST = "_MANIFEST"
 
-    def __init__(self, path: str, reap_grace_s: float = 300.0):
-        """``reap_grace_s``: minimum age (mtime) before crash leftovers
-        — hidden work dirs, below-watermark batch dirs, orphaned
-        compacted dirs, stale pointer temps — are reaped. The grace
-        window protects a SECOND process's in-flight ``.tmp-`` write
-        (round-7 advice: unconditional reaping could delete another
-        job's work dir mid-write) and gives external readers holding a
-        stale manifest time to finish before their dirs vanish."""
+    def __init__(self, path: str, reap_grace_s: float = REAP_GRACE_S):
+        """``reap_grace_s``: minimum age (mtime) before an unnamed dir or
+        temp — a crashed write or compaction, or another process's
+        in-flight write — is reaped by ``compact``."""
         self.path = path
         self.reap_grace_s = float(reap_grace_s)
         os.makedirs(path, exist_ok=True)
 
-    # -- layout helpers ------------------------------------------------
+    def _manifest(self) -> dict:
+        man = load_manifest(self.path, self.MANIFEST)
+        return man or {"batches": {}, "compacted": None, "watermark": -1}
 
-    def _compaction(self) -> dict | None:
-        """Current compaction manifest, or None. Tolerant load: a
-        missing/corrupt pointer means 'never compacted'."""
-        try:
-            with open(os.path.join(self.path, self.COMPACT_POINTER)) as fh:
-                man = json.load(fh)
-            if isinstance(man, dict) and "dir" in man and "max_batch" in man:
-                return man
-        except (FileNotFoundError, json.JSONDecodeError, OSError):
-            pass
-        return None
-
-    def _batch_ids(self) -> list[int]:
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.path)
-            if d.startswith("batch=")
-        )
-
-    def _batch_dirs(self, min_exclusive: int = -1) -> list[str]:
-        return [
-            os.path.join(self.path, f"batch={i}")
-            for i in self._batch_ids()
-            if i > min_exclusive
-        ]
-
-    def _live_dirs(self) -> list[str]:
-        """The directories a reader unions: the compacted partition (if
-        any) plus batch dirs ABOVE the watermark — replayed rewrites of
-        already-folded batches are invisible by construction."""
-        man = self._compaction()
-        dirs: list[str] = []
-        watermark = -1
-        if man is not None:
-            dirs.append(os.path.join(self.path, man["dir"]))
-            watermark = int(man["max_batch"])
-        dirs.extend(self._batch_dirs(min_exclusive=watermark))
-        return dirs
+    @staticmethod
+    def _dirs(man: dict) -> list[str]:
+        """The manifest's dirs: compacted first, then batches by id."""
+        batches = sorted(man["batches"].items(), key=lambda kv: int(kv[0]))
+        compacted = [man["compacted"]] if man["compacted"] else []
+        return compacted + [d for _, d in batches]
 
     def has_data(self) -> bool:
-        return bool(self._live_dirs())
+        return bool(self._dirs(self._manifest()))
 
     def read(self, spark: SparkSession, schema: str) -> DataFrame:
-        """Union of the compacted partition and all post-watermark batch
-        partitions; empty frame of ``schema`` when nothing has been
-        written yet. Partitions are listed explicitly and the schema
-        supplied (no glob discovery, no inference — both flake on
-        freshly-written directories).
+        """Bind exactly the dirs one manifest names; an empty frame of
+        ``schema`` when nothing has been committed. The schema is
+        supplied (no inference — it flakes on fresh directories).
 
-        Tolerant of the OWNER's rewrite races: a directory listed by
-        ``_live_dirs`` can vanish before the reader binds it (the
-        two-rename window inside ``_swap_in``, or a compaction folding
-        batch dirs between list and bind — round-7 What's-wrong #1).
-        The build is retried against a fresh listing; the returned
-        frame is LAZY, so a reader that must also survive races during
-        its ACTION should go through :meth:`read_consistent`."""
-        import time as _time
-
+        A commit between loading the manifest and binding its dirs may
+        retire one of them: the bind then raises (missing path) or the
+        manifest has moved on, and the build is retried against the
+        fresh manifest. The returned frame is LAZY, so a reader that
+        must also survive commits during its ACTION should go through
+        :meth:`read_consistent`."""
         last: Exception | None = None
         for attempt in range(5):
-            dirs = self._live_dirs()
+            man = self._manifest()
+            dirs = [os.path.join(self.path, d) for d in self._dirs(man)]
             if not dirs:
                 return spark.createDataFrame([], schema)
             try:
-                return spark.read.schema(schema).parquet(*dirs)
-            except Exception as exc:  # PATH_NOT_FOUND during a swap
+                df = spark.read.schema(schema).parquet(*dirs)
+            except Exception as exc:  # a dir retired after the load
                 last = exc
-                _time.sleep(0.05 * (attempt + 1))
+            else:
+                # Spark skips a root path that vanishes between its
+                # existence check and its listing: an unchanged
+                # manifest proves none of the bound dirs was retired
+                if self._manifest() == man:
+                    return df
+                last = RuntimeError(f"{self.path}: manifest moved during read")
+            time.sleep(0.05 * (attempt + 1))
         raise last  # type: ignore[misc]
 
     def read_consistent(self, spark: SparkSession, schema: str, action,
                         retries: int = 10):
         """Run ``action(df)`` over a COMPLETE store snapshot, retrying
-        the whole build+action when a concurrent ``write_batch`` rewrite
-        or ``compact`` invalidates files between plan and execution.
+        the whole build+action when a concurrent ``write_batch`` or
+        ``compact`` retires files between plan and execution.
 
-        This is the external-reader contract (round-7 What's-wrong #1):
-        a successful pass means every file bound at plan time was read —
-        never a partially-swapped view (``spark.sql.files.
-        ignoreMissingFiles`` stays OFF; silently dropping a partition
-        mid-swap would be an incomplete snapshot, which is worse than
-        retrying). The single-owner streaming loop never needs this —
-        it never reads concurrently with its own writes."""
-        import time as _time
-
+        A successful pass means every file bound at plan time was read:
+        a retired dir raises (``spark.sql.files.ignoreMissingFiles``
+        stays OFF), it never silently drops out. The single-owner
+        streaming loop never needs this — it never reads concurrently
+        with its own writes."""
         last: Exception | None = None
         for attempt in range(retries):
             try:
                 return action(self.read(spark, schema))
             except Exception as exc:
                 last = exc
-                _time.sleep(0.05 * (attempt + 1))
+                time.sleep(0.05 * (attempt + 1))
         raise last  # type: ignore[misc]
 
-    # -- writes --------------------------------------------------------
-
-    @staticmethod
-    def _atomic_exchange(a: str, b: str) -> bool:
-        """Atomically swap two paths via Linux ``renameat2(...,
-        RENAME_EXCHANGE)`` (public syscall, glibc >= 2.28). Returns
-        False when the platform/filesystem can't do it."""
-        try:
-            import ctypes
-
-            libc = ctypes.CDLL("libc.so.6", use_errno=True)
-            at_fdcwd = -100  # AT_FDCWD
-            rename_exchange = 2  # RENAME_EXCHANGE
-            rc = libc.renameat2(
-                at_fdcwd,
-                os.fsencode(a),
-                at_fdcwd,
-                os.fsencode(b),
-                rename_exchange,
-            )
-            return rc == 0
-        except (OSError, AttributeError, ValueError):
-            return False
-
-    def _swap_in(self, tmp: str, target: str) -> None:
-        """Atomically make ``tmp`` visible as ``target``.
-
-        Preferred path: ONE atomic ``renameat2(RENAME_EXCHANGE)`` —
-        the target directory exists at every instant, so an external
-        reader listing the store can never silently miss a partition
-        (round-7 What's-wrong #1: the old two-rename dance had a window
-        where the target was absent and a concurrent ``read`` built a
-        complete-looking but partial union). The displaced old content
-        lands on the ``tmp`` path and is parked under a hidden ``.old-``
-        name for grace-period reaping — an in-flight reader that bound
-        the old files keeps them on disk until the grace expires (its
-        worst case is a retryable read error, never a silent gap).
-
-        Fallback (non-Linux/filesystem without exchange): the two-rename
-        dance — rename target aside, rename tmp in. The brief absence
-        window returns; ``read_consistent`` retries still cover the
-        erroring cases."""
-        old = os.path.join(
-            self.path, f".old-{os.path.basename(target)}-{time.time_ns()}"
-        )
-        if os.path.exists(target):
-            if self._atomic_exchange(tmp, target):
-                os.rename(tmp, old)  # tmp now holds the OLD content
-                return
-            os.rename(target, old)
-        os.rename(tmp, target)
-
-    def _reap_stale(self) -> None:
-        """Best-effort cleanup of EVERY crash/replay leftover class
-        (round-7 advice — previously only ``.tmp-``/``.old-`` dirs,
-        and unconditionally):
-
-        - hidden ``.tmp-``/``.old-`` work dirs (crashed writes/swaps),
-        - ``.ptr-*`` temp files (crashed ``_commit_pointer``),
-        - ``batch=N`` dirs at/below the compaction watermark (replays
-          of already-folded batches — ignored by ``read`` but a slow
-          disk leak on crash-looping streams),
-        - ``compacted-*`` dirs other than the one the manifest names
-          (a compaction that crashed between ``_swap_in`` and
-          ``_commit_pointer``).
-
-        Everything is age-gated by ``reap_grace_s`` so a concurrent
-        process's in-flight work dir or an external reader's stale view
-        is never yanked mid-use; ignore_errors throughout — a dir that
-        disappears first is someone else having reaped it."""
-        import shutil
-
-        now = time.time()
-        man = self._compaction()
-        watermark = -1 if man is None else int(man["max_batch"])
-        live_compacted = None if man is None else man["dir"]
-
-        def _old_enough(p: str) -> bool:
-            try:
-                return now - os.path.getmtime(p) >= self.reap_grace_s
-            except OSError:
-                return False
-
-        for d in os.listdir(self.path):
-            p = os.path.join(self.path, d)
-            if d.startswith((".tmp-", ".old-")):
-                if _old_enough(p):
-                    shutil.rmtree(p, ignore_errors=True)
-            elif d.startswith(".ptr-"):
-                if _old_enough(p):
-                    try:
-                        os.remove(p)
-                    except OSError:
-                        pass
-            elif d.startswith("batch="):
-                try:
-                    bid = int(d.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if bid <= watermark and _old_enough(p):
-                    shutil.rmtree(p, ignore_errors=True)
-            elif d.startswith("compacted-") and d != live_compacted:
-                if _old_enough(p):
-                    shutil.rmtree(p, ignore_errors=True)
-
     def write_batch(self, df: DataFrame, batch_id: int) -> None:
-        tmp = os.path.join(self.path, f".tmp-batch-{int(batch_id)}-{time.time_ns()}")
-        df.write.mode("overwrite").parquet(tmp)
-        self._swap_in(tmp, os.path.join(self.path, f"batch={int(batch_id)}"))
+        bid = int(batch_id)
+        man = self._manifest()
+        if bid <= man["watermark"]:
+            return  # already folded into the compacted dir: replay no-op
+        name = fresh_name(f"batch={bid}-")
+        df.write.mode("overwrite").parquet(os.path.join(self.path, name))
+        old = man["batches"].get(str(bid))
+        man["batches"][str(bid)] = name
+        publish(self.path, self.MANIFEST, man, retired=[old] if old else [])
 
     def compact(
         self, spark: SparkSession, schema: str, keep_recent: int = 8
     ) -> int | None:
-        """Fold every batch partition except the newest ``keep_recent``
-        (plus the prior compacted partition) into one consolidated
-        partition; returns the new watermark, or None when there was
-        nothing to fold. Safe to call on every trigger — it is a no-op
-        until enough batches accumulate, and a crash at ANY point
-        leaves a readable store: the pointer flip (os.replace) is the
-        only commit, folded inputs are deleted only after it, and
-        leftover folded dirs below the watermark are ignored by
-        ``read``."""
-        man = self._compaction()
-        watermark = -1 if man is None else int(man["max_batch"])
-        ids = [i for i in self._batch_ids() if i > watermark]
+        """Fold every batch except the newest ``keep_recent`` (plus the
+        prior compacted dir) into one consolidated dir; returns the new
+        watermark, or None when there was nothing to fold. Safe to call
+        on every trigger: it is a no-op until enough batches accumulate
+        (it still reaps aged leftovers), and a crash at ANY point leaves
+        the last published manifest, whose dirs are all intact."""
+        man = self._manifest()
+        ids = sorted(int(b) for b in man["batches"])
         fold = ids[:-keep_recent] if keep_recent > 0 else ids
-        if not fold:
-            # nothing to fold, but still sweep aged crash/replay
-            # leftovers (below-watermark replays on a crash-looping
-            # stream would otherwise only be reaped when a REAL
-            # compaction happens to run)
-            self._reap_stale()
-            return None
-        srcs = [os.path.join(self.path, f"batch={i}") for i in fold]
-        if man is not None:
-            srcs.append(os.path.join(self.path, man["dir"]))
-        new_max = max(fold)
-        new_dir = f"compacted-{time.time_ns()}"
-        tmp = os.path.join(self.path, f".tmp-{new_dir}")
-        spark.read.schema(schema).parquet(*srcs).coalesce(
-            max(1, spark.sparkContext.defaultParallelism // 4)
-        ).write.mode("overwrite").parquet(tmp)
-        self._swap_in(tmp, os.path.join(self.path, new_dir))
-        self._commit_pointer(new_dir, new_max)
-        self._post_commit_cleanup(srcs)
-        return new_max
-
-    def _commit_pointer(self, new_dir: str, new_max: int) -> None:
-        """THE commit point: an os.replace of the manifest. Before it,
-        readers still union the old pointer + intact batch dirs; after
-        it, the consolidated partition is authoritative. Separate method
-        so tests can crash a compaction on either side of the commit."""
-        fd, ptr_tmp = tempfile.mkstemp(dir=self.path, prefix=".ptr-")
-        with os.fdopen(fd, "w") as fh:
-            json.dump({"dir": new_dir, "max_batch": new_max}, fh)
-        os.replace(ptr_tmp, os.path.join(self.path, self.COMPACT_POINTER))
-
-    def _post_commit_cleanup(self, srcs: list[str]) -> None:
-        """Drop the folded inputs. Crash-tolerant: every leftover is
-        ignored by read (batch dirs <= watermark, hidden work dirs)."""
-        import shutil
-
-        for s in srcs:
-            shutil.rmtree(s, ignore_errors=True)
-        self._reap_stale()
+        if fold:
+            srcs = [man["batches"].pop(str(i)) for i in fold]
+            if man["compacted"]:
+                srcs.append(man["compacted"])
+            name = fresh_name("compacted-")
+            spark.read.schema(schema).parquet(
+                *[os.path.join(self.path, s) for s in srcs]
+            ).coalesce(
+                max(1, spark.sparkContext.defaultParallelism // 4)
+            ).write.mode("overwrite").parquet(os.path.join(self.path, name))
+            man["compacted"], man["watermark"] = name, max(fold)
+            publish(self.path, self.MANIFEST, man, retired=srcs)
+        reap(
+            self.path, self._dirs(man), ("batch=", "compacted-"),
+            self.reap_grace_s,
+        )
+        return max(fold) if fold else None

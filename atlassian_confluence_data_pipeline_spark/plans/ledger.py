@@ -55,9 +55,10 @@ def state_time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot 1 — the returned frame must be exactly the first batch's
     state, which is what the oracle recomputes from the raw table.
     This is the engine's Delta-less snapshot protocol
-    (operators/state.py: full-snapshot write then os.replace pointer
-    flip) exercised end-to-end: committed-but-superseded history stays
-    readable until vacuum() drops it.
+    (operators/state.py: full-snapshot write, then an atomic pointer
+    manifest that records the snapshot history) exercised end-to-end:
+    committed-but-superseded history stays readable until vacuum()
+    drops it.
 
     Scale shape: two |custkeys|-row MERGE writes + one snapshot read;
     the as-of frame is eagerly checkpointed so the scratch ledger

@@ -14,8 +14,12 @@ file sink actually needs:
   partitions (no silent last-write-wins), publishes all staged files
   with atomic renames, records the published names in ``_MANIFEST``,
   and stamps ``_SUCCESS`` last, so readers see either the whole output
-  or none of it (the StateStore pointer-flip discipline, applied to a
-  file sink). Overwrite mode retracts only files listed in the prior
+  or none of it. This sink publishes each file with its own atomic
+  rename in Spark's driver-side commit, not through the one-manifest
+  directory protocol of operators/state.py (which the StateStore,
+  AppendIndexStore, shard and n-gram sinks share): its output is one
+  file per page at a fixed name, not a directory a reader binds.
+  Overwrite mode retracts only files listed in the prior
   ``_MANIFEST`` — never unrelated files in the destination;
 - ``abort`` removes all staging output, leaving any previously
   published run untouched.

@@ -1,7 +1,7 @@
 """Inverted n-gram index materialization — the decontamination-probe
 SINK: one posting row per (distinct 3-word shingle hash, document),
-written as ``bucket=N/`` partitioned parquet behind the same atomic
-manifest discipline as the curated-shard sink (shard_sink.py).
+written as ``bucket=N/`` partitioned parquet behind one atomic manifest
+(the commit protocol of operators/state.py).
 
 Why it exists: at 100 TB, "does this benchmark sentence appear in the
 corpus?" must not be a corpus scan. With postings bucketed by
@@ -10,11 +10,13 @@ directories (static partition pruning on the bucket column) and
 answers membership with one small equi-join — the offline index behind
 decontaminate_overlap's online form.
 
-Commit protocol: stage to a hidden ``.tmp-data-{nonce}`` dir, read the
-staged bytes back for the manifest's bucket/posting counts, publish by
-rename + atomic manifest replace, sweep superseded dirs after the
-flip. Replays are idempotent (the index is a deterministic function of
-the fixtures).
+Commit protocol: write a fresh ``data-{nonce}`` dir, read its bytes
+back for the manifest's bucket/posting counts, publish with one atomic
+manifest replace naming it; the superseded dir is retired after the
+replace, and unnamed leftovers (crashed runs, a concurrent run's
+in-flight dir) are reaped only once older than ``REAP_GRACE_S``.
+Replays are idempotent (the index is a deterministic function of the
+fixtures).
 
 Reference analog: the reference's state index keyed by page id
 (utilities/state_manager.py:60-99) generalized to a content-keyed
@@ -23,28 +25,23 @@ posting index.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from atlassian_confluence_data_pipeline_spark.operators.state import (
+    fresh_name,
+    load_manifest,
+    publish,
+    reap,
+)
 
 MANIFEST = "MANIFEST.json"
 
 #: posting buckets — the unit of probe-side partition pruning
 N_BUCKETS = 64
-
-
-def _sweep_stale(out_path: str, keep: str | None) -> None:
-    for d in os.listdir(out_path):
-        p = os.path.join(out_path, d)
-        if d.startswith(".tmp-data-") or (
-            d.startswith("data-") and d != keep and os.path.isdir(p)
-        ):
-            shutil.rmtree(p, ignore_errors=True)
 
 
 def materialize_ngram_index(
@@ -60,33 +57,30 @@ def materialize_ngram_index(
     h (the 3-shingle rolling hash), doc_id. Scale shape: the posting
     list is the session-shared exploded-shingle stage (one corpus fold,
     narrow bigints); the write is one partitioned parquet job; the
-    manifest rollup is one aggregate over the staged files."""
+    manifest rollup is one aggregate over the written files."""
     from atlassian_confluence_data_pipeline_spark.plans.curation6 import (
         _exploded_shingles,
     )
 
     os.makedirs(out_path, exist_ok=True)
-    nonce = uuid.uuid4().hex[:12]
-    staging = os.path.join(out_path, f".tmp-data-{nonce}")
+    name = fresh_name("data-")
+    data_dir = os.path.join(out_path, name)
     postings = _exploded_shingles(spark, sf_dir).select(
         (F.col("h") % n_buckets).cast("int").alias("bucket"),
         "h",
         "doc_id",
     )
-    postings.write.mode("overwrite").partitionBy("bucket").parquet(staging)
+    postings.write.mode("overwrite").partitionBy("bucket").parquet(data_dir)
 
-    staged = spark.read.parquet(staging)
-    stats = staged.agg(
+    stats = spark.read.parquet(data_dir).agg(
         F.count(F.lit(1)).alias("n_postings"),
         F.countDistinct("h").alias("n_ngrams"),
         F.countDistinct("doc_id").alias("n_docs"),
         F.countDistinct("bucket").alias("n_buckets_present"),
     ).collect()[0]
 
-    final_dir = f"data-{nonce}"
-    os.rename(staging, os.path.join(out_path, final_dir))
     manifest = {
-        "data_dir": final_dir,
+        "data_dir": name,
         "n_buckets": n_buckets,
         "n_postings": int(stats["n_postings"]),
         "n_ngrams": int(stats["n_ngrams"]),
@@ -94,19 +88,19 @@ def materialize_ngram_index(
         "n_buckets_present": int(stats["n_buckets_present"]),
         "committed_at": time.time(),
     }
-    tmp_manifest = os.path.join(out_path, f".tmp-manifest-{nonce}")
-    with open(tmp_manifest, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp_manifest, os.path.join(out_path, MANIFEST))
-    _sweep_stale(out_path, keep=final_dir)
+    prior = load_manifest(out_path, MANIFEST) or {}
+    retired = [prior["data_dir"]] if "data_dir" in prior else []
+    publish(out_path, MANIFEST, manifest, retired)
+    reap(out_path, [name], ("data-",))
     return manifest
 
 
 def read_ngram_index(spark: SparkSession, out_path: str) -> DataFrame:
-    """The committed view: read the manifest pointer, then the data dir
-    it names — never a half-written staging dir."""
-    with open(os.path.join(out_path, MANIFEST)) as fh:
-        manifest = json.load(fh)
+    """The committed view: read the manifest, then the data dir it
+    names — never an unnamed, possibly half-written dir."""
+    manifest = load_manifest(out_path, MANIFEST)
+    if manifest is None:
+        raise FileNotFoundError(f"no committed n-gram index under {out_path}")
     return spark.read.parquet(
         os.path.join(out_path, manifest["data_dir"])
     )

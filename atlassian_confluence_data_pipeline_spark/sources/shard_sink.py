@@ -6,22 +6,20 @@ shard_packed_frame) into the artifact a training run actually
 consumes: ``shard_id=N/`` partitioned parquet behind an ATOMIC
 manifest.
 
-Commit protocol (the AppendIndexStore / html_sink pointer-flip
-discipline, applied to a batch corpus build):
+Commit protocol: the one manifest protocol of operators/state.py —
+a directory is visible if and only if ``MANIFEST.json`` names it.
 
-- the whole dataset is written to a hidden ``.tmp-data-{nonce}``
-  staging dir — a failed/killed job never touches the published view;
-- the staged files are READ BACK to compute the manifest's per-shard
+- the dataset is written straight into a fresh ``data-{nonce}`` dir —
+  a failed/killed job leaves an unnamed dir no reader binds;
+- the written files are READ BACK to compute the manifest's per-shard
   row/token/window counts (so the manifest describes the bytes on
   disk, not the plan that produced them);
-- publish = rename staging to ``data-{nonce}``, then write the
-  manifest JSON via tmp-file + ``os.replace`` (atomic on POSIX) — a
-  reader either sees the previous complete corpus or the new one;
-- the superseded ``data-*`` dir is removed AFTER the pointer flip;
-  ``.tmp-*`` leftovers from crashed runs are swept on the next
-  publish. Replays are idempotent: the content is a deterministic
-  function of the input fixtures, so re-running flips the pointer to
-  a byte-equivalent corpus.
+- publish = one atomic manifest replace naming the new dir; the
+  superseded dir is retired (hidden, then deleted) after it, and
+  unnamed leftovers are reaped once older than ``REAP_GRACE_S`` (a
+  concurrent run's in-flight dir is left alone). Replays are
+  idempotent: the content is a deterministic function of the input
+  fixtures, so re-running publishes a byte-equivalent corpus.
 
 Reference analog: the output_generator stage (html_generator.py:50-64
 writes the consumable artifact tree) generalized to the training-data
@@ -30,28 +28,37 @@ deliverable.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from atlassian_confluence_data_pipeline_spark.operators.state import (
+    fresh_name,
+    load_manifest,
+    publish,
+    reap,
+)
 from atlassian_confluence_data_pipeline_spark.plans.packing import CTX_TOKENS
 
 MANIFEST = "MANIFEST.json"
 
+#: prefixes of the data dirs these sinks write (reaped when unnamed)
+_DATA = ("data-", "batch-")
 
-def _sweep_stale(out_path: str, keep: str | None) -> None:
-    """Remove crashed-run staging dirs and superseded data dirs (all
-    but ``keep``). Best-effort; the manifest pointer is the truth."""
-    for d in os.listdir(out_path):
-        p = os.path.join(out_path, d)
-        if d.startswith(".tmp-data-") or (
-            d.startswith("data-") and d != keep and os.path.isdir(p)
-        ):
-            shutil.rmtree(p, ignore_errors=True)
+
+def _named(man: dict) -> list[str]:
+    """The data dirs a manifest names: one ``dir``, or a ``dirs`` list."""
+    if "dirs" in man:
+        return list(man["dirs"])
+    return [man["dir"]] if "dir" in man else []
+
+
+def _publish(out_path: str, manifest: dict, retired: list[str] = ()) -> None:
+    """Commit ``manifest``, retire ``retired``, reap aged leftovers."""
+    publish(out_path, MANIFEST, manifest, retired)
+    reap(out_path, _named(manifest), _DATA)
 
 
 def materialize_curated_shards(
@@ -73,7 +80,7 @@ def materialize_curated_shards(
     variants (banded LSH, digest hash-agg); the per-shard prefix is
     the range-bucketed two-pass distributed_prefix_rank (no whole-shard
     single task); the write is one shuffle-free partitioned parquet
-    job; manifest stats are one aggregate over the staged files."""
+    job; manifest stats are one aggregate over the written files."""
     from atlassian_confluence_data_pipeline_spark.plans.curation import (
         curated_survivor_docs,
     )
@@ -99,12 +106,12 @@ def materialize_curated_shards(
         "split",
     )
 
-    nonce = f"{time.time_ns():x}"
-    staging = os.path.join(out_path, f".tmp-data-{nonce}")
-    packed.write.mode("overwrite").partitionBy("shard_id").parquet(staging)
+    name = fresh_name("data-")
+    data_dir = os.path.join(out_path, name)
+    packed.write.mode("overwrite").partitionBy("shard_id").parquet(data_dir)
 
     # manifest stats from the BYTES ON DISK, not the plan
-    staged = spark.read.parquet(staging)
+    written = spark.read.parquet(data_dir)
     per_shard = {
         int(r["shard_id"]): {
             "n_docs": int(r["n_docs"]),
@@ -112,7 +119,7 @@ def materialize_curated_shards(
             "n_windows": int(r["n_windows"]),
             "n_chopped": int(r["n_chopped"]),
         }
-        for r in staged.groupBy("shard_id")
+        for r in written.groupBy("shard_id")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("tok").alias("n_tokens"),
@@ -125,12 +132,12 @@ def materialize_curated_shards(
     }
     n_files = sum(
         1
-        for root, _, files in os.walk(staging)
+        for root, _, files in os.walk(data_dir)
         for f in files
         if f.endswith(".parquet")
     )
     manifest = {
-        "dir": f"data-{nonce}",
+        "dir": name,
         "sf_dir": sf_dir,
         "ctx_tokens": ctx_tokens,
         "n_files": n_files,
@@ -141,22 +148,12 @@ def materialize_curated_shards(
         "shards": {str(k): v for k, v in sorted(per_shard.items())},
     }
 
-    data_dir = os.path.join(out_path, f"data-{nonce}")
-    os.rename(staging, data_dir)
-    tmp = os.path.join(out_path, f".ptr-{nonce}")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(out_path, MANIFEST))
-    _sweep_stale(out_path, keep=f"data-{nonce}")
+    _publish(out_path, manifest, retired=_named(read_manifest(out_path) or {}))
     return manifest
 
 
 def read_manifest(out_path: str) -> dict | None:
-    p = os.path.join(out_path, MANIFEST)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return json.load(fh)
+    return load_manifest(out_path, MANIFEST)
 
 
 def read_curated_shards(spark: SparkSession, out_path: str) -> DataFrame:
@@ -172,20 +169,53 @@ def read_curated_shards(spark: SparkSession, out_path: str) -> DataFrame:
 # Incremental curated-shard maintenance (round-9 VERDICT item 3): the
 # streaming curation job composes with this appender so each
 # micro-batch's ACCEPTED docs extend the shard-partitioned corpus
-# behind the manifest flip, instead of a full rebuild per batch.
+# behind the manifest, instead of a full rebuild per batch. The same
+# batch-append path serves any per-batch increment table
+# (append_manifest_batch; streaming DPO pairs use it).
 # ---------------------------------------------------------------------------
 
-def _empty_incremental_manifest(ctx_tokens: int) -> dict:
-    return {
-        "format": "incremental",
-        "ctx_tokens": ctx_tokens,
-        "batches": [],
-        "dirs": [],
-        "n_docs": 0,
-        "n_tokens": 0,
-        "n_chopped": 0,
-        "shards": {},
-    }
+
+def _append_batch(
+    out_path: str,
+    man: dict,
+    batch_id: int,
+    df: DataFrame,
+    write: Callable[[str], None],
+) -> dict:
+    """The batch-append path of both incremental sinks. A batch already
+    in the manifest is a no-op (counts never double-advance); an empty
+    batch commits the manifest only; any other batch is written by
+    ``write(path)`` — which also folds the written bytes' stats into
+    ``man`` — into a fresh ``batch-{id}-{nonce}`` dir, then the manifest
+    naming it is published. A batch whose data was written but whose
+    manifest never committed is simply rebuilt on replay; the orphan
+    dir is unnamed and reaped after the grace period.
+
+    Empty batches must still COMMIT: a zero-row partitioned write
+    leaves only _SUCCESS behind and the read-back raises
+    UNABLE_TO_INFER_SCHEMA, which would crash-loop every replay."""
+    bid = int(batch_id)
+    if bid in man["batches"]:
+        return man  # committed replay -> no-op
+    if not df.isEmpty():
+        name = fresh_name(f"batch-{bid}-")
+        write(os.path.join(out_path, name))
+        man["dirs"].append(name)
+    man["batches"].append(bid)
+    _publish(out_path, man)
+    return man
+
+
+def _open_manifest(out_path: str, fmt: str, empty: dict) -> dict:
+    """The committed manifest of format ``fmt`` (``empty`` when none)."""
+    os.makedirs(out_path, exist_ok=True)
+    man = read_manifest(out_path) or empty
+    if man.get("format") != fmt:
+        raise ValueError(
+            f"{out_path} holds a '{man.get('format', 'full')}' artifact;"
+            f" append requires format '{fmt}'"
+        )
+    return man
 
 
 def append_shard_batch(
@@ -205,138 +235,96 @@ def append_shard_batch(
     arrival order is doc_id order, the same equivalence contract as
     foreach_batch_curation (streaming/jobs.py).
 
-    Crash safety mirrors materialize_curated_shards: batch data is
-    staged to ``.tmp-batch-{id}``, renamed to ``batch-{id}``, and only
-    then does the manifest flip (tmp + ``os.replace``). Replays are
-    idempotent at EVERY crash point: a batch already in the manifest is
-    a no-op (offsets never double-advance); a ``batch-{id}`` dir
-    without a manifest entry is a crashed flip and is rebuilt in place.
-    The window arithmetic (window_id, split) is recomputed against the
+    Crash safety and replay idempotence: :func:`_append_batch`. The
+    window arithmetic (window_id, split) is recomputed against the
     offset cumulative sums, so chop flags are identical to a one-shot
     build over the concatenated arrivals."""
     from atlassian_confluence_data_pipeline_spark.plans.curation8 import (
         shard_packed_frame,
     )
 
-    os.makedirs(out_path, exist_ok=True)
-    man = read_manifest(out_path)
-    if man is None:
-        man = _empty_incremental_manifest(ctx_tokens)
-    if man.get("format") != "incremental":
-        raise ValueError(
-            f"{out_path} holds a '{man.get('format', 'full')}' corpus; "
-            "incremental append requires an incremental manifest"
-        )
+    man = _open_manifest(
+        out_path,
+        "incremental",
+        {
+            "format": "incremental",
+            "ctx_tokens": ctx_tokens,
+            "batches": [],
+            "dirs": [],
+            "n_docs": 0,
+            "n_tokens": 0,
+            "n_chopped": 0,
+            "shards": {},
+        },
+    )
     if int(man["ctx_tokens"]) != int(ctx_tokens):
         raise ValueError(
             f"ctx_tokens mismatch: corpus committed at {man['ctx_tokens']}, "
             f"append requested {ctx_tokens} — window ids would be inconsistent"
         )
-    bid = int(batch_id)
-    if bid in man["batches"]:
-        return man  # committed replay -> no-op
-
     accepted = accepted.select("doc_id", "text", "tok")
-    if accepted.isEmpty():
-        # An all-rejected micro-batch must still COMMIT: a zero-row
-        # partitioned write leaves only _SUCCESS behind and the staged
-        # read-back raises UNABLE_TO_INFER_SCHEMA, which would
-        # crash-loop every replay. Record the batch id (so replays
-        # no-op) and flip the manifest without a data dir.
-        man["batches"].append(bid)
-        tmp = os.path.join(out_path, f".ptr-{bid}")
-        with open(tmp, "w") as fh:
-            json.dump(man, fh, indent=1, sort_keys=True)
-        os.replace(tmp, os.path.join(out_path, MANIFEST))
-        return man
 
-    packed = shard_packed_frame(accepted)
-    offsets = {int(k): int(v["n_tokens"]) for k, v in man["shards"].items()}
-    if offsets:
-        off_df = spark.createDataFrame(
-            [(k, v) for k, v in offsets.items()], "__osh int, __off bigint"
-        )
-        packed = (
-            packed.join(
-                F.broadcast(off_df),
-                packed["shard_id"] == off_df["__osh"],
-                "left",
+    def write(data_dir: str) -> None:
+        packed = shard_packed_frame(accepted)
+        offsets = {int(k): int(v["n_tokens"]) for k, v in man["shards"].items()}
+        if offsets:
+            off_df = spark.createDataFrame(
+                [(k, v) for k, v in offsets.items()], "__osh int, __off bigint"
             )
-            .withColumn(
-                "shard_cum",
-                F.col("shard_cum") + F.coalesce(F.col("__off"), F.lit(0)),
+            packed = (
+                packed.join(
+                    F.broadcast(off_df),
+                    packed["shard_id"] == off_df["__osh"],
+                    "left",
+                )
+                .withColumn(
+                    "shard_cum",
+                    F.col("shard_cum") + F.coalesce(F.col("__off"), F.lit(0)),
+                )
+                .drop("__osh", "__off")
             )
-            .drop("__osh", "__off")
+        win = F.expr(f"(shard_cum - tok) DIV {ctx_tokens}")
+        endw = F.expr(f"(shard_cum - 1) DIV {ctx_tokens}")
+        packed.withColumn("window_id", win).withColumn(
+            "split", F.when(endw > win, 1).otherwise(0)
+        ).select(
+            "shard_id", "doc_id", "text", "tok", "shard_cum", "window_id", "split"
+        ).write.mode("overwrite").partitionBy("shard_id").parquet(data_dir)
+
+        # stats from the bytes on disk, not the plan
+        rows = (
+            spark.read.parquet(data_dir)
+            .groupBy("shard_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("tok").alias("n_tokens"),
+                F.sum("split").alias("n_chopped"),
+            )
+            .collect()
         )
-    win = F.expr(f"(shard_cum - tok) DIV {ctx_tokens}")
-    endw = F.expr(f"(shard_cum - 1) DIV {ctx_tokens}")
-    packed = (
-        packed.withColumn("window_id", win)
-        .withColumn("split", F.when(endw > win, 1).otherwise(0))
-        .select(
-            "shard_id", "doc_id", "text", "tok",
-            "shard_cum", "window_id", "split",
+        for r in rows:
+            s = man["shards"].setdefault(
+                str(int(r["shard_id"])),
+                {"n_docs": 0, "n_tokens": 0, "n_chopped": 0},
+            )
+            for k in ("n_docs", "n_tokens", "n_chopped"):
+                s[k] += int(r[k])
+                man[k] += int(r[k])
+        # windows derive from per-shard token mass, identical to the
+        # batch sink's ceil-division over each shard's final cumulative
+        # count
+        man["n_windows"] = sum(
+            (s["n_tokens"] + ctx_tokens - 1) // ctx_tokens
+            for s in man["shards"].values()
         )
-    )
 
-    staging = os.path.join(out_path, f".tmp-batch-{bid}")
-    shutil.rmtree(staging, ignore_errors=True)
-    packed.write.mode("overwrite").partitionBy("shard_id").parquet(staging)
-
-    # stats from the bytes on disk, not the plan
-    staged = spark.read.parquet(staging)
-    rows = (
-        staged.groupBy("shard_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("tok").alias("n_tokens"),
-            F.sum("split").alias("n_chopped"),
-        )
-        .collect()
-    )
-
-    data_dir = os.path.join(out_path, f"batch-{bid}")
-    # a data dir without a manifest entry is a crashed flip -> rebuild
-    shutil.rmtree(data_dir, ignore_errors=True)
-    os.rename(staging, data_dir)
-
-    n_docs = n_tokens = n_chopped = 0
-    for r in rows:
-        s = man["shards"].setdefault(
-            str(int(r["shard_id"])),
-            {"n_docs": 0, "n_tokens": 0, "n_chopped": 0},
-        )
-        s["n_docs"] += int(r["n_docs"])
-        s["n_tokens"] += int(r["n_tokens"])
-        s["n_chopped"] += int(r["n_chopped"])
-        n_docs += int(r["n_docs"])
-        n_tokens += int(r["n_tokens"])
-        n_chopped += int(r["n_chopped"])
-    man["batches"].append(bid)
-    if rows:
-        man["dirs"].append(f"batch-{bid}")
-    man["n_docs"] += n_docs
-    man["n_tokens"] += n_tokens
-    man["n_chopped"] += n_chopped
-    # windows derive from per-shard token mass, identical to the batch
-    # sink's ceil-division over each shard's final cumulative count
-    man["n_windows"] = sum(
-        (s["n_tokens"] + ctx_tokens - 1) // ctx_tokens
-        for s in man["shards"].values()
-    )
-
-    tmp = os.path.join(out_path, f".ptr-{bid}")
-    with open(tmp, "w") as fh:
-        json.dump(man, fh, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(out_path, MANIFEST))
-    return man
+    return _append_batch(out_path, man, batch_id, accepted, write)
 
 
 def read_incremental_shards(spark: SparkSession, out_path: str) -> DataFrame:
-    """Load the committed incremental corpus through the manifest
-    pointer — only ``batch-*`` dirs the manifest lists are visible, so
-    a crashed flip's orphan data is invisible exactly like the batch
-    sink's ``.tmp-*`` staging."""
+    """Load the committed incremental corpus through the manifest — only
+    ``batch-*`` dirs the manifest names are visible, so a crashed
+    commit's orphan data is invisible."""
     man = read_manifest(out_path)
     if man is None or man.get("format") != "incremental":
         raise FileNotFoundError(
@@ -354,12 +342,6 @@ def read_incremental_shards(spark: SparkSession, out_path: str) -> DataFrame:
     return out
 
 
-# ---------------------------------------------------------------------------
-# Generic batch-keyed manifest-flip sink (round-11 VERDICT item 6): the
-# append_shard_batch commit protocol for arbitrary per-batch increment
-# tables — streaming DPO pairs use it; any foreachBatch emitter can.
-# ---------------------------------------------------------------------------
-
 def append_manifest_batch(
     spark: SparkSession,
     df: DataFrame,
@@ -368,58 +350,26 @@ def append_manifest_batch(
     fmt: str = "increments",
 ) -> dict:
     """Append ONE micro-batch increment table under ``out_path`` behind
-    the manifest flip. Crash safety mirrors append_shard_batch: stage
-    to ``.tmp-batch-{id}``, rename to ``batch-{id}``, then flip the
-    manifest (tmp + ``os.replace``). Replays are idempotent at EVERY
-    crash point — a batch already in the manifest is a no-op; a
-    ``batch-{id}`` dir without a manifest entry is a crashed flip and
-    is rebuilt in place; an empty batch commits manifest-only (the
-    all-rejected-batch lesson, append_shard_batch)."""
-    os.makedirs(out_path, exist_ok=True)
-    man = read_manifest(out_path)
-    if man is None:
-        man = {"format": fmt, "batches": [], "dirs": [], "n_rows": 0}
-    if man.get("format") != fmt:
-        raise ValueError(
-            f"{out_path} holds a '{man.get('format', 'full')}' artifact;"
-            f" append requires format '{fmt}'"
-        )
-    bid = int(batch_id)
-    if bid in man["batches"]:
-        return man  # committed replay -> no-op
+    the manifest (crash safety and replay idempotence:
+    :func:`_append_batch`)."""
+    man = _open_manifest(
+        out_path, fmt, {"format": fmt, "batches": [], "dirs": [], "n_rows": 0}
+    )
 
-    def _flip() -> None:
-        tmp = os.path.join(out_path, f".ptr-{bid}")
-        with open(tmp, "w") as fh:
-            json.dump(man, fh, indent=1, sort_keys=True)
-        os.replace(tmp, os.path.join(out_path, MANIFEST))
+    def write(data_dir: str) -> None:
+        df.write.mode("overwrite").parquet(data_dir)
+        man["n_rows"] += int(spark.read.parquet(data_dir).count())
 
-    if df.isEmpty():
-        man["batches"].append(bid)
-        _flip()
-        return man
-    staging = os.path.join(out_path, f".tmp-batch-{bid}")
-    shutil.rmtree(staging, ignore_errors=True)
-    df.write.mode("overwrite").parquet(staging)
-    n_rows = spark.read.parquet(staging).count()
-    data_dir = os.path.join(out_path, f"batch-{bid}")
-    # a data dir without a manifest entry is a crashed flip -> rebuild
-    shutil.rmtree(data_dir, ignore_errors=True)
-    os.rename(staging, data_dir)
-    man["batches"].append(bid)
-    man["dirs"].append(f"batch-{bid}")
-    man["n_rows"] += int(n_rows)
-    _flip()
-    return man
+    return _append_batch(out_path, man, batch_id, df, write)
 
 
 def read_manifest_batches(
     spark: SparkSession, out_path: str, schema: str, fmt: str = "increments"
 ) -> DataFrame:
     """Union of all committed increment batches under ``out_path`` —
-    only manifest-listed dirs are visible (orphaned crashed-flip data
-    is invisible); an empty/absent artifact reads as an empty frame of
-    ``schema``."""
+    only manifest-named dirs are visible (a crashed commit's orphaned
+    data is invisible); an empty/absent artifact reads as an empty frame
+    of ``schema``."""
     man = read_manifest(out_path)
     if man is not None and man.get("format") != fmt:
         raise FileNotFoundError(

@@ -152,9 +152,9 @@ def test_incremental_full_replay_is_noop(spark, tmp_path):
 
 
 def test_crash_mid_flip_recovers(spark, tmp_path, monkeypatch):
-    """Crash AFTER the batch data-dir rename but BEFORE the manifest
-    flip: the orphan dir is invisible to readers, and re-running the
-    batch rebuilds it in place and commits."""
+    """Crash AFTER the batch data dir is written but BEFORE the
+    manifest commit: the orphan dir is invisible to readers, and
+    re-running the batch rebuilds it and commits."""
     from pyspark.sql import functions as F
 
     out = str(tmp_path / "out")
@@ -184,7 +184,8 @@ def test_crash_mid_flip_recovers(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
 
     # the orphan batch-1 dir exists but is invisible behind the manifest
-    assert os.path.isdir(os.path.join(out, "batch-1"))
+    orphans = [d for d in os.listdir(out) if d.startswith("batch-1-")]
+    assert len(orphans) == 1 and orphans[0] not in man0["dirs"]
     assert read_manifest(out) == man0
     assert _rows(spark, out) == rows0
 

@@ -55,6 +55,22 @@ def test_replay_idempotent_and_sweeps_superseded(spark, tmp_path):
         assert json.load(fh)["data_dir"] == m2["data_dir"]
 
 
+def test_publish_spares_a_fresh_foreign_inflight_dir(spark, tmp_path):
+    """Another run's in-flight write — a hidden staging dir or an
+    unnamed data dir younger than the reap grace period — survives a
+    publish; only the superseded, manifest-retired dir is removed."""
+    out = str(tmp_path / "idx")
+    m1 = materialize_ngram_index(spark, SF, out)
+    foreign = [".tmp-data-inflight", "data-inflight"]
+    for d in foreign:
+        os.makedirs(os.path.join(out, d))
+    m2 = materialize_ngram_index(spark, SF, out)
+    for d in foreign:
+        assert os.path.isdir(os.path.join(out, d)), d
+    assert not os.path.exists(os.path.join(out, m1["data_dir"]))
+    assert read_ngram_index(spark, out).count() == m2["n_postings"]
+
+
 def test_probe_finds_exact_and_only_matching_docs(spark, tmp_path):
     out = str(tmp_path / "idx")
     materialize_ngram_index(spark, SF, out)

@@ -6,9 +6,11 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 from pyspark.sql import functions as F
 
+from atlassian_confluence_data_pipeline_spark.operators.state import REAP_GRACE_S
 from atlassian_confluence_data_pipeline_spark.plans.curation import (
     curated_survivor_docs,
 )
@@ -85,8 +87,12 @@ def test_replay_is_idempotent_and_sweeps_superseded(spark, sf_dir, tmp_path):
 def test_crashed_staging_never_visible_and_swept(spark, sf_dir, tmp_path):
     out = str(tmp_path / "corpus")
     os.makedirs(out)
-    # a crashed prior run left staging behind and NO manifest
-    os.makedirs(os.path.join(out, ".tmp-data-dead"))
+    # a crashed prior run left staging behind and NO manifest; it is
+    # older than the reap grace period, so the next publish sweeps it
+    dead = os.path.join(out, ".tmp-data-dead")
+    os.makedirs(dead)
+    old = time.time() - 2 * REAP_GRACE_S
+    os.utime(dead, (old, old))
     assert read_manifest(out) is None
     man = materialize_curated_shards(spark, sf_dir, out)
     assert not os.path.exists(os.path.join(out, ".tmp-data-dead"))

@@ -4,6 +4,8 @@ new versions processes zero rows (state_manager.py:72)."""
 
 from __future__ import annotations
 
+import os
+import time
 from datetime import datetime
 
 import pytest
@@ -58,6 +60,54 @@ def test_state_store_atomic_snapshots(spark, tmp_path):
     )
     assert store.current_snapshot() != snap1
     assert store.read(spark).count() == 5
+
+
+def test_state_store_history_shows_committed_snapshots_only(
+    spark, tmp_path, monkeypatch
+):
+    """A write that crashes before the pointer commit leaves an orphan
+    snapshot dir. It is not history: ``list_snapshots``, ``vacuum`` and
+    ``read(snapshot=)`` see only committed snapshots, ``vacuum`` commits
+    the shorter history before retiring dirs, and the orphan is reaped
+    once older than the grace period."""
+    import pytest
+
+    import atlassian_confluence_data_pipeline_spark.operators.state as state_mod
+
+    store = StateStore(str(tmp_path / "ledger"))
+    state = make_state(spark)
+    s1 = store.write(state)
+
+    def crash(src, dst):
+        raise RuntimeError("crash before the pointer commit")
+
+    monkeypatch.setattr(state_mod.os, "replace", crash)
+    with pytest.raises(RuntimeError):
+        store.write(state)
+    monkeypatch.undo()
+    orphans = [
+        d for d in os.listdir(store.path)
+        if d.startswith("snapshot-") and d != s1
+    ]
+    assert len(orphans) == 1
+    orphan = orphans[0]
+    assert store.list_snapshots() == [s1]
+    assert store.current_snapshot() == s1
+    with pytest.raises(FileNotFoundError):
+        store.read(spark, snapshot=orphan)
+    assert store.vacuum(keep=1) == []
+    assert store.list_snapshots() == [s1]
+    assert os.path.isdir(os.path.join(store.path, orphan))  # still in grace
+
+    s2 = store.write(state)
+    old = time.time() - 2 * state_mod.REAP_GRACE_S
+    os.utime(os.path.join(store.path, orphan), (old, old))
+    assert store.vacuum(keep=1) == [s1]
+    assert store.list_snapshots() == [s2]
+    assert [
+        d for d in os.listdir(store.path) if d.startswith("snapshot-")
+    ] == [s2]
+    assert store.read(spark).count() == 4
 
 
 def test_incremental_refresh_classification(spark):

@@ -125,19 +125,21 @@ def test_replay_idempotent_including_mid_flip_crash(spark, tmp_path):
 
     # simulate a MID-FLIP crash on batch 1: its data dir exists but the
     # manifest never flipped — restore the pre-flip manifest state
+    dir0, dir1 = man_after["dirs"]
+    assert dir0.startswith("batch-0-") and dir1.startswith("batch-1-")
     man_crashed = dict(man_after)
     man_crashed["batches"] = [0]
-    man_crashed["dirs"] = ["batch-0"]
-    n_b1 = spark.read.parquet(str(out / "batch-1")).count()
+    man_crashed["dirs"] = [dir0]
+    n_b1 = spark.read.parquet(str(out / dir1)).count()
     man_crashed["n_rows"] = man_after["n_rows"] - n_b1
     with open(out / MANIFEST, "w") as fh:
         json.dump(man_crashed, fh)
-    assert os.path.isdir(out / "batch-1")  # the orphan survives
+    assert os.path.isdir(out / dir1)  # the orphan survives
     # the orphan is INVISIBLE through the manifest reader
     assert len(_rows(read_dpo_pairs(spark, str(out)))) == len(committed) - n_b1
 
-    # replay batch 1 (fresh checkpoint): the orphan dir is rebuilt in
-    # place, the manifest flips, and the result equals pre-crash state
+    # replay batch 1 (fresh checkpoint): batch 1 is rebuilt into a fresh
+    # dir, the manifest commits, and the result equals pre-crash state
     _run(spark, tmp_path, batches, out, checkpoint=str(tmp_path / "ck3"))
     assert _rows(read_dpo_pairs(spark, str(out))) == committed
     man_final = read_manifest(str(out))

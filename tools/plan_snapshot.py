@@ -21,6 +21,10 @@ covariance matrix, scan split counts): with the memo populated by a
 first full plan-construction pass, a second pass over every query must
 run ZERO builders — any builder re-run means a consumer bypassed the
 memo (a keying bug, or a consumer calling a memoized builder directly).
+It also fails when a memo name that ``--write`` recorded is no longer
+reached by the first pass: an accessor that stopped calling the memo
+altogether never hands it a builder, so only the recorded list can
+name it.
 
 The snapshot complements tools/plan_audit.py: the audit flags known
 anti-patterns anywhere; the snapshot freezes the EXACT current shape,
@@ -31,6 +35,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import re
 import sys
 from pathlib import Path
 
@@ -38,6 +43,10 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 SNAPSHOT = REPO / "PLAN_SNAPSHOT.json"
+
+#: snapshot key holding the sorted memo names a plan-construction pass
+#: reaches (not a query name)
+MEMO_KEY = "__memo_names__"
 
 #: node-name substrings that define a plan's scale posture
 MARKERS = {
@@ -86,28 +95,49 @@ def collect(sf: str) -> dict[str, dict[str, int]]:
     return shapes
 
 
-def collect_warm(sf: str) -> tuple[dict[str, dict[str, int]], list[str]]:
-    """Two passes in ONE session over the package's one session memo
-    (``plans/_cache.shared_pair_table``). Pass 1 populates the memo and
-    records every builder it ran. Pass 2 runs with the memo entry point
-    spied and every module-level builder from pass 1 wrapped: a builder
-    run through the memo (reported by memo name) is a keying bug, and a
-    direct call of a pass-1 builder (reported as ``module.function``)
-    is a consumer computing a memoized value without the memo."""
+def memo_name(name: str) -> str:
+    """``name`` without its host-dependent suffix: the scan split-count
+    probe is keyed by the session's parallelism (``split_count_p8``)."""
+    return re.sub(r"_p\d+$", "_p*", name)
+
+
+def collect_recording(sf: str) -> tuple[dict, set, list[str]]:
+    """``collect`` with the session memo's entry point
+    (``plans/_cache.shared_pair_table``) spied: returns the shapes, every
+    builder handed to the memo, and the sorted memo names reached."""
     import atlassian_confluence_data_pipeline_spark.plans._cache as _c
 
     real = _c.shared_pair_table
     builders: set = set()
+    names: set[str] = set()
 
     def recording(spark, sf_dir, name, builder):
         builders.add(builder)
+        names.add(memo_name(name))
         return real(spark, sf_dir, name, builder)
 
     _c.shared_pair_table = recording
     try:
-        collect(sf)  # pass 1: populate the session memo
+        shapes = collect(sf)
     finally:
         _c.shared_pair_table = real
+    return shapes, builders, sorted(names)
+
+
+def collect_warm(sf: str) -> tuple[dict[str, dict[str, int]], list[str], list[str]]:
+    """Two passes in ONE session over the package's one session memo
+    (``plans/_cache.shared_pair_table``). Pass 1 populates the memo and
+    records every builder and memo name it reached. Pass 2 runs with the
+    memo entry point spied and every module-level builder from pass 1
+    wrapped: a builder run through the memo (reported by memo name) is a
+    keying bug, and a direct call of a pass-1 builder (reported as
+    ``module.function``) is a consumer computing a memoized value
+    without the memo. Returns (pass-2 shapes, re-run builders, pass-1
+    memo names)."""
+    import atlassian_confluence_data_pipeline_spark.plans._cache as _c
+
+    real = _c.shared_pair_table
+    _shapes, builders, names = collect_recording(sf)  # pass 1
 
     rebuilt: list[str] = []
 
@@ -142,7 +172,7 @@ def collect_warm(sf: str) -> tuple[dict[str, dict[str, int]], list[str]]:
         _c.shared_pair_table = real
         for module, fn in wrapped:
             setattr(module, fn.__qualname__, fn)
-    return shapes, sorted(set(rebuilt))
+    return shapes, sorted(set(rebuilt)), names
 
 
 def main() -> int:
@@ -155,28 +185,46 @@ def main() -> int:
     args = ap.parse_args()
 
     if args.check_warm:
-        _shapes, rebuilt = collect_warm(args.sf)
+        _shapes, rebuilt, names = collect_warm(args.sf)
+        want = json.loads(SNAPSHOT.read_text()).get(MEMO_KEY, [])
+        missing = sorted(set(want) - set(names))
+        if missing:
+            print(f"MEMO NOT REACHED ({len(missing)} recorded memo names "
+                  "no longer reach the session memo):")
+            for n in missing:
+                print(" -", n)
         if rebuilt:
             print(f"MEMO BYPASS ({len(rebuilt)} stages re-ran their "
                   "builders against a populated session memo):")
             for n in rebuilt:
                 print(" -", n)
+        if missing or rebuilt:
             return 1
-        print("OK: zero builder re-runs against the populated session memo.")
+        new_names = sorted(set(names) - set(want))
+        if new_names:
+            print("note: memo names not in the snapshot (record them with "
+                  f"--write): {', '.join(new_names)}")
+        print(f"OK: {len(names)} memo names reached, zero builder re-runs "
+              "against the populated session memo.")
         return 0
 
-    shapes = collect(args.sf)
+    shapes, _builders, names = collect_recording(args.sf)
 
     snap = SNAPSHOT
     if args.write:
-        snap.write_text(json.dumps(shapes, indent=1, sort_keys=True) + "\n")
-        print(f"wrote {snap.name}: {len(shapes)} query shapes")
+        snap.write_text(
+            json.dumps({**shapes, MEMO_KEY: names}, indent=1, sort_keys=True)
+            + "\n"
+        )
+        print(f"wrote {snap.name}: {len(shapes)} query shapes, "
+              f"{len(names)} memo names")
         return 0
 
     if not snap.exists():
         print(f"{snap.name} missing - run --write first")
         return 1
     want = json.loads(snap.read_text())
+    want.pop(MEMO_KEY, None)
     drift: list[str] = []
     for name, shape in shapes.items():
         if name not in want:
