@@ -6,12 +6,13 @@ the whole file after every processed page (state_manager.py:84-102,
 :42-49 — O(state) I/O per row). The engine's rendering:
 
 - the ledger is a DataFrame/Parquet *table* keyed by ``id``;
-- upsert is a set-level MERGE — ``state ⟕anti updates ∪ updates`` — one
-  shuffle per batch, not one rewrite per row;
-- multi-version batches resolve to latest-per-key first (W2; the
-  reference gets this implicitly from sequential overwrite, :93-99);
-- persistence is parquet directories behind one JSON manifest, the
-  Delta-less rendering of ``MERGE INTO`` with atomic visibility.
+- upsert is a set-level MERGE — one priority window over ``state ∪
+  updates``, which also resolves multi-version batches to latest-per-key
+  (W2; the reference gets this from sequential overwrite, :93-99) —
+  one shuffle per batch, not one rewrite per row;
+- persistence is parquet directories behind one JSON manifest that also
+  records each snapshot's schema (a read infers nothing): the Delta-less
+  rendering of ``MERGE INTO`` with atomic visibility.
 
 Commit protocol. One rule: **a directory is visible if and only if the
 current manifest names it.** A reader never lists a directory to find
@@ -48,6 +49,7 @@ import uuid
 from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from atlassian_confluence_data_pipeline_spark.operators.dedup import latest_per_key
@@ -84,14 +86,15 @@ def merge_state(
 ) -> DataFrame:
     """Last-write-wins MERGE of ``updates`` into ``state``.
 
-    Updates are first collapsed to the highest version per key
-    (deterministic W2), then: unmatched state rows survive, matched keys
-    take the update row, new keys insert — exactly
-    ``MERGE INTO state USING u ON key WHEN MATCHED UPDATE * WHEN NOT
-    MATCHED INSERT *``, as an anti-join + union (one shuffle each)."""
+    One priority window over ``state ∪ updates`` keeps one row per key,
+    update rows first, then the highest version: a matched key takes its
+    newest update (W2; even one older than the state row), unmatched
+    state rows survive, new keys insert — ``MERGE INTO state USING u ON
+    key WHEN MATCHED UPDATE * WHEN NOT MATCHED INSERT *`` in one shuffle."""
     keys = [key] if isinstance(key, str) else list(key)
-    u = latest_per_key(updates, keys, [version_col])
-    return state.join(u.select(*keys), keys, "left_anti").unionByName(u)
+    u = updates.withColumn("__upd", F.lit(1))
+    tagged = state.withColumn("__upd", F.lit(0)).unionByName(u)
+    return latest_per_key(tagged, keys, ["__upd", version_col]).drop("__upd")
 
 
 # -- the commit protocol -----------------------------------------------
@@ -178,16 +181,17 @@ class StateStore:
 
         {path}/snapshot-{nonce}/   <- parquet snapshots
         {path}/_CURRENT            <- JSON {"snapshot": current,
-                                             "history": [oldest .. current]}
+                                             "history": [oldest .. current],
+                                             "schemas": {snapshot: schema}}
 
     ``write`` writes the new snapshot fully, then publishes the pointer
-    with the snapshot appended to the history — readers always see a
-    complete snapshot. Only snapshots the pointer records exist for
-    ``list_snapshots``, ``read(snapshot=)`` and ``vacuum``; a snapshot
-    dir left by a crashed write is invisible and reaped after
-    :data:`REAP_GRACE_S`. This is the engine's Delta-less MERGE commit
-    protocol; on a real deployment the same operator writes through
-    Delta/Iceberg.
+    with the snapshot and its schema appended — readers always see a
+    complete snapshot and bind its recorded schema (no inference job).
+    Only snapshots the pointer records exist for ``list_snapshots``,
+    ``read(snapshot=)`` and ``vacuum``; a snapshot dir left by a crashed
+    write is invisible and reaped after :data:`REAP_GRACE_S`. This is
+    the engine's Delta-less MERGE commit protocol; on a real deployment
+    the same operator writes through Delta/Iceberg.
     """
 
     POINTER = "_CURRENT"
@@ -196,58 +200,66 @@ class StateStore:
         self.path = path
         os.makedirs(path, exist_ok=True)
 
-    def _history(self) -> list[str]:
-        # a missing/corrupt pointer is an empty ledger (tolerant-load
-        # parity with state_manager.py:20-40)
+    def _pointer(self) -> tuple[list[str], dict]:
+        # (history, schema per snapshot); a missing/corrupt pointer is an
+        # empty ledger (tolerant-load parity with state_manager.py:20-40)
         man = load_manifest(self.path, self.POINTER) or {}
         snap = man.get("snapshot")
-        return list(man.get("history") or ([snap] if snap else []))
+        history = list(man.get("history") or ([snap] if snap else []))
+        return history, dict(man.get("schemas") or {})
+
+    def _publish(self, history: list[str], schemas: dict, retired=()) -> None:
+        schemas = {s: schemas[s] for s in history if s in schemas}
+        man = {"snapshot": history[-1], "history": history, "schemas": schemas}
+        publish(self.path, self.POINTER, man, retired)
 
     def current_snapshot(self) -> str | None:
-        history = self._history()
-        return history[-1] if history else None
+        return (self.list_snapshots() or [None])[-1]
 
     def list_snapshots(self) -> list[str]:
         """The committed snapshots, oldest first."""
-        return self._history()
+        return self._pointer()[0]
 
     def read(self, spark: SparkSession, snapshot: str | None = None) -> DataFrame:
         """Read the current ledger, or time-travel to a committed
         snapshot (every upsert retains its full predecessor until
-        vacuumed)."""
-        history = self._history()
+        vacuumed). No job runs before an action; an empty store is an
+        empty-RDD relation (no task, no Python worker)."""
+        history, schemas = self._pointer()
         if snapshot is not None and snapshot not in history:
             raise FileNotFoundError(
                 f"{snapshot} is not a committed snapshot of {self.path}"
             )
         snap = snapshot or (history[-1] if history else None)
         if snap is None:
-            return spark.createDataFrame([], STATE_SCHEMA)
-        return spark.read.parquet(os.path.join(self.path, snap))
+            return spark.createDataFrame(spark.sparkContext.emptyRDD(), STATE_SCHEMA)
+        schema = schemas.get(snap)  # None only in a pre-schema pointer: infer
+        reader = spark.read
+        if schema:
+            reader = reader.schema(T.StructType.fromJson(schema))
+        return reader.parquet(os.path.join(self.path, snap))
 
     def vacuum(self, keep: int = 3) -> list[str]:
         """Drop all but the newest ``keep`` snapshots (never the current
-        one): the shorter history is committed first, then the dropped
-        dirs are retired and aged crash leftovers reaped. Returns the
-        removed snapshot names."""
-        history = self._history()
+        one): the shorter history, with the kept snapshots' schemas, is
+        committed first, then the dropped dirs are retired and aged
+        crash leftovers reaped. Returns the removed snapshot names."""
+        history, schemas = self._pointer()
         removed = history[: -max(keep, 1)]
         kept = history[len(removed):]
         if removed:
-            publish(
-                self.path,
-                self.POINTER,
-                {"snapshot": kept[-1], "history": kept},
-                retired=removed,
-            )
+            self._publish(kept, schemas, retired=removed)
         reap(self.path, kept, ("snapshot-",))
         return removed
 
     def write(self, df: DataFrame) -> str:
+        """Commit ``df`` and its schema as a fresh snapshot; ``df`` may
+        lazily read an older snapshot, which the write never replaces."""
         snap = fresh_name("snapshot-")
         df.write.mode("overwrite").parquet(os.path.join(self.path, snap))
-        history = self._history() + [snap]
-        publish(self.path, self.POINTER, {"snapshot": snap, "history": history})
+        history, schemas = self._pointer()
+        schemas[snap] = df.schema.jsonValue()
+        self._publish(history + [snap], schemas)
         return snap
 
     def upsert(
@@ -257,13 +269,10 @@ class StateStore:
         key: str | Sequence[str] = "id",
         version_col: str = "version",
     ) -> DataFrame:
-        """Read-merge-write one batch; returns the merged ledger."""
-        merged = merge_state(self.read(spark), updates, key, version_col)
-        # materialize before the pointer flip so the new snapshot never
-        # lazily re-reads the directory it is replacing
-        merged = merged.localCheckpoint(eager=True)
-        self.write(merged)
-        return merged
+        """Read-merge-write one batch: the MERGE is written straight
+        into the new snapshot. Returns a lazy read of that snapshot."""
+        snap = self.write(merge_state(self.read(spark), updates, key, version_col))
+        return self.read(spark, snap)
 
 
 class AppendIndexStore:

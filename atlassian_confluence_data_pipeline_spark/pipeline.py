@@ -207,14 +207,14 @@ def run_with_store(
     ``processed`` is materialised once (``localCheckpoint``): that pass
     runs the source scan, the CDC and the pandas UDF once and fills the
     run counters (``result.metrics``, the reference's end-of-run report,
-    master_script.py:590-609). The published ledger, ``stats`` and the
-    returned ``processed`` all read the materialised frame, so sinking
-    ``processed`` or collecting ``stats`` re-runs none of them."""
+    master_script.py:590-609). The ledger MERGE (written straight into
+    the new snapshot; ``new_state`` is a lazy read of it), ``stats`` and
+    the returned ``processed`` all read the materialised frame, so
+    sinking ``processed`` or collecting ``stats`` re-runs none of them."""
     state = store.read(spark)
     obs = Observation()
     delta = change_set(pages, state, lookback_cutoff, check_missing)
     processed = _transform(delta, base_url, obs).localCheckpoint(eager=True)
     result = _results(state, processed)
-    merged = result.new_state.localCheckpoint(eager=True)
-    store.write(merged)
-    return RefreshResult(processed, merged, result.stats, dict(obs.get))
+    new_state = store.read(spark, store.write(result.new_state))
+    return RefreshResult(processed, new_state, result.stats, dict(obs.get))

@@ -26,10 +26,7 @@ from atlassian_confluence_data_pipeline_spark.operators.sketches import (
     hll_estimate_sql,
     hll_registers,
 )
-from atlassian_confluence_data_pipeline_spark.operators.state import (
-    StateStore,
-    merge_state,
-)
+from atlassian_confluence_data_pipeline_spark.operators.state import StateStore
 from atlassian_confluence_data_pipeline_spark.plans.registry import query
 
 #: the two batch cutoffs whose snapshots the time-travel query builds
@@ -81,13 +78,7 @@ def state_time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         store = StateStore(scratch)
         store.write(batch_state(None, TT_CUT1))
         snap1 = store.current_snapshot()
-        merged = merge_state(
-            store.read(spark),
-            batch_state(TT_CUT1, TT_CUT2),
-            key="id",
-            version_col="version",
-        )
-        store.write(merged.localCheckpoint(eager=True))
+        store.upsert(spark, batch_state(TT_CUT1, TT_CUT2), "id", "version")
         assert store.current_snapshot() != snap1  # pointer advanced
         asof = store.read(spark, snapshot=snap1).localCheckpoint(eager=True)
     finally:

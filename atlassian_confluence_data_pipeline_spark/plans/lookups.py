@@ -90,8 +90,8 @@ SELECT id, version FROM updates
 def state_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ledger MERGE K3 (state_manager.py:84-102) as a query: matched
     keys take the update's version, unmatched survive, new keys insert —
-    via the merge_state operator (anti-join + union, latest-per-key
-    resolved first)."""
+    via the merge_state operator (one priority window over state ∪
+    updates: update rows first, then the highest version)."""
     from atlassian_confluence_data_pipeline_spark.operators.state import merge_state
 
     orders = load_table(spark, sf_dir, "orders")

@@ -311,12 +311,12 @@ def interpolated_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     / wrong-language candidates a quality gate drops.
 
     Scale shape: unigram and bigram count tables are hash aggregates
-    (vocab / vocab²-bounded) BROADCAST back onto the exploded corpus
-    (round 12: the bigram table was attached with a shuffle join that
-    moved the whole bigram stream; all three model tables are
-    vocab-bounded, so every scoring attach is now broadcast-hash by
-    construction instead of by AQE's runtime estimate, and corpus rows
-    shuffle only into the final per-document rollup); the corpus-total
+    (vocab / vocab²-bounded) joined back onto the exploded corpus. The
+    vocab-bounded unigram and context tables are broadcast by
+    construction; the bigram table is bounded only by vocab², so its
+    join is left to AQE, which broadcasts it when its runtime size
+    fits and otherwise falls back to a shuffle join instead of
+    exceeding the broadcast limit on a large vocabulary; the corpus-total
     scalar folds per-row sizes without an explode. (spread_scan on the
     text projection was measured here and REJECTED: shuffling the text
     payload costs more than the single-split explode saves.) The
@@ -357,7 +357,7 @@ def interpolated_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     lam = F.lit(LM_LAMBDA)
     pu = F.col("cu").cast("double") / F.lit(float(total))
     s1 = (
-        bgd.join(F.broadcast(bc), ["w1", "w2"])
+        bgd.join(bc, ["w1", "w2"])
         .join(F.broadcast(ctx), "w1")
         .join(F.broadcast(freq.withColumnRenamed("word", "w2")), "w2")
         .select(

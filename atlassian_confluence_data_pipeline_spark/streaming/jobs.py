@@ -693,7 +693,7 @@ def foreach_batch_hll_distinct(
             .groupBy("reg")
             .agg(F.max("mx").alias("mx"))
         )
-        register_store.write(merged.localCheckpoint(eager=True))
+        register_store.write(merged)
 
     return events.writeStream.foreachBatch(merge_batch)
 
@@ -783,7 +783,7 @@ def foreach_batch_cms_merge(
             [(CMS_META_ROW, CMS_META_ROW, batch_id)],
             "row int, cell int, cnt bigint",
         )
-        cms_store.write(merged.unionByName(meta).localCheckpoint(eager=True))
+        cms_store.write(merged.unionByName(meta))
 
     return events.writeStream.foreachBatch(merge_batch)
 

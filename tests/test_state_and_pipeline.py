@@ -4,8 +4,10 @@ new versions processes zero rows (state_manager.py:72)."""
 
 from __future__ import annotations
 
+import json
 import os
 import time
+import uuid
 from datetime import datetime
 
 import pytest
@@ -45,6 +47,153 @@ def test_merge_state_last_write_wins(spark):
     assert rows["1"]["version"] == 3  # untouched survivor
     assert rows["99"]["id"] == "99"  # unmatched state row survives
     assert merged.count() == 5
+
+
+def _updates(spark, rows):
+    return spark.createDataFrame(
+        [(i, "t", "ENG", v, "t", {"html": f"h/{i}/{v}"}) for i, v in rows],
+        STATE_SCHEMA,
+    )
+
+
+def _versions(df):
+    return sorted((r["id"], r["version"]) for r in df.collect())
+
+
+def test_merge_state_duplicate_update_keys_resolve_to_newest(spark):
+    updates = _updates(spark, [("2", 5), ("2", 7), ("2", 6), ("50", 1), ("50", 1)])
+    merged = merge_state(make_state(spark), updates)
+    assert _versions(merged) == [
+        ("1", 3), ("2", 7), ("4", 9), ("50", 1), ("99", 1)
+    ]
+    assert {r["output_paths"]["html"] for r in merged.collect() if r["id"] == "2"} == {
+        "h/2/7"
+    }
+
+
+def test_merge_state_update_older_than_state_row_still_wins(spark):
+    # the ledger holds id 4 at version 9; MERGE takes the update as is
+    merged = merge_state(make_state(spark), _updates(spark, [("4", 2)]))
+    assert dict(_versions(merged))["4"] == 2
+    assert merged.count() == 4
+
+
+def test_merge_state_empty_sides(spark):
+    state = make_state(spark)
+    empty = spark.createDataFrame([], STATE_SCHEMA)
+    updates = _updates(spark, [("7", 1), ("7", 3), ("8", 2)])
+    assert _versions(merge_state(empty, updates)) == [("7", 3), ("8", 2)]
+    assert _versions(merge_state(state, empty)) == _versions(state)
+    assert merge_state(state, empty).columns == state.columns
+
+
+def test_merge_state_is_one_shuffle_without_a_join(spark):
+    updates = _updates(spark, [("2", 4), ("50", 1)])
+    plan = (
+        merge_state(make_state(spark), updates)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Join" not in plan, plan
+
+
+def _launched(spark, fn):
+    """Run ``fn`` under a fresh job group; returns ``(fn(), jobs,
+    tasks)`` for the jobs it launched and the tasks they ran, once the
+    listener bus has delivered their events."""
+    sc = spark.sparkContext
+    group = f"launched-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+    stages = [tracker.getStageInfo(s) for j in jobs for s in j.stageIds]
+    return out, len(jobs), sum(s.numCompletedTasks for s in stages if s)
+
+
+def test_state_store_read_binds_recorded_schema_without_a_job(spark, tmp_path):
+    store = StateStore(str(tmp_path / "ledger"))
+    snap = store.write(make_state(spark))
+    pointer = json.loads((tmp_path / "ledger" / "_CURRENT").read_text())
+    assert list(pointer["schemas"]) == [snap]
+    df, jobs, _ = _launched(spark, lambda: store.read(spark))
+    assert jobs == 0  # no schema inference before an action
+    assert df.schema == spark.read.parquet(os.path.join(store.path, snap)).schema
+    assert df.count() == 4
+    # a pointer written before schemas were recorded still reads (inferred)
+    del pointer["schemas"]
+    (tmp_path / "ledger" / "_CURRENT").write_text(json.dumps(pointer))
+    assert store.read(spark).count() == 4
+
+
+def test_time_travel_read_binds_kept_schema_after_vacuum(spark, tmp_path):
+    store = StateStore(str(tmp_path / "ledger"))
+    store.write(make_state(spark))
+    store.upsert(spark, _updates(spark, [("7", 1)]))
+    s3 = store.write(make_state(spark).select("id", "version"))  # new schema
+    s2 = store.list_snapshots()[1]
+    store.vacuum(keep=2)
+    pointer = json.loads((tmp_path / "ledger" / "_CURRENT").read_text())
+    assert sorted(pointer["schemas"]) == sorted([s2, s3])
+    old, jobs, _ = _launched(spark, lambda: store.read(spark, snapshot=s2))
+    assert jobs == 0
+    assert old.columns == STATE_SCHEMA.names and old.count() == 5
+    assert store.read(spark).columns == ["id", "version"]
+
+
+def test_empty_state_store_runs_no_task(spark, tmp_path):
+    store = StateStore(str(tmp_path / "ledger"))
+    rows, _, tasks = _launched(spark, lambda: store.read(spark).collect())
+    assert rows == [] and tasks == 0
+    # count() runs only the single task of its global aggregate: the
+    # empty relation under it has no partition to scan
+    n, _, tasks = _launched(spark, lambda: store.read(spark).count())
+    assert n == 0 and tasks <= 1
+
+
+def _reads_snapshot(store, df) -> bool:
+    snap = os.path.join(store.path, store.current_snapshot())
+    files = df.inputFiles()
+    return bool(files) and all(snap in f for f in files)
+
+
+def test_new_state_is_a_read_of_the_committed_snapshot(spark, tmp_path):
+    """``upsert`` and ``run_with_store`` write the MERGE straight into
+    the new snapshot and return a lazy read of it, which stays readable
+    after ``vacuum(keep=1)``."""
+    store = StateStore(str(tmp_path / "ledger"))
+    store.write(make_state(spark))
+    merged = store.upsert(spark, _updates(spark, [("7", 1)]))
+    assert _reads_snapshot(store, merged)
+    store.vacuum(keep=1)
+    assert merged.count() == 5
+
+    store = StateStore(str(tmp_path / "ledger2"))
+    result = run_with_store(spark, make_pages(spark), store, CUTOFF)
+    assert _reads_snapshot(store, result.new_state)
+    store.vacuum(keep=1)
+    assert result.new_state.count() == 7
+
+
+#: jobs one refresh phase of ``run_with_store`` may launch against a
+#: non-empty ledger: the change set's stages and its materialisation,
+#: then the MERGE's one shuffle and the snapshot write.
+RUN_WITH_STORE_REFRESH_JOBS = 5
+
+
+def test_run_with_store_refresh_job_budget(spark, tmp_path):
+    store = StateStore(str(tmp_path / "ledger"))
+    store.write(make_state(spark))
+    pages = make_pages(spark)
+    result, jobs, _ = _launched(
+        spark, lambda: run_with_store(spark, pages, store, CUTOFF)
+    )
+    assert result.metrics["n_pages"] == 5
+    assert jobs <= RUN_WITH_STORE_REFRESH_JOBS, jobs
 
 
 def test_state_store_atomic_snapshots(spark, tmp_path):

@@ -9,19 +9,24 @@ Runs, in order, and stops at the first failure (exit code 1):
 2. ``python -m pytest perfbench/tests -q``      (self-test of the
    benchmark's event-log fold, which its ``udf_rows`` and
    ``source_scans`` per-layer counters rely on)
-3. ``python tools/driver_sim.py``               (every registry query vs
+3. ``python perfbench/run.py --workload etl_refresh --seconds 15 --trace 0``
+   (etl_smoke: the paper's flow end to end — source scan, CDC against
+   the ledger, clean_html pandas UDF, HTML sink, ledger snapshot —
+   over a backfill and one refresh, ~35 s; fails unless the last
+   stdout line reports ``"correct": true`` and ``"failed": 0``)
+4. ``python tools/driver_sim.py``               (every registry query vs
    its DuckDB oracle at sf0.01 in a VANILLA session from a foreign cwd
    — the superset of the driver's CORRECTNESS gate)
-4. ``python tools/plan_audit.py``               (anti-pattern sweep:
+5. ``python tools/plan_audit.py``               (anti-pattern sweep:
    cartesians, unexpected BNLJ, row-at-a-time Python UDFs, CSE traps)
-5. ``python tools/plan_snapshot.py --check``    (physical-plan shape
+6. ``python tools/plan_snapshot.py --check``    (physical-plan shape
    regression diff vs the committed PLAN_SNAPSHOT.json; intentional
    shape changes are recorded with --write)
-6. ``python tools/plan_snapshot.py --check-warm`` (session-memo gate:
+7. ``python tools/plan_snapshot.py --check-warm`` (session-memo gate:
    with the session memo populated by a first plan-construction pass,
    a second pass must invoke ZERO stage builders — no consumer may
    bypass the shared-stage memo)
-7. ``python tools/qcheck.py --rotation``        (seeded 28-query
+8. ``python tools/qcheck.py --rotation``        (seeded 28-query
    rotation over the registry tail the driver's CORRECTNESS sample
    missed recently — sha256(name:rN) draw, rule in BASELINE.md)
 
@@ -32,6 +37,7 @@ a commit-worthy tree must pass every step.
 from __future__ import annotations
 
 import argparse
+import json
 import subprocess
 import sys
 import time
@@ -42,6 +48,13 @@ REPO = Path(__file__).resolve().parent.parent
 STEPS = [
     ("pytest", [sys.executable, "-m", "pytest", "tests/", "-x", "-q"]),
     ("perfbench_selftest", [sys.executable, "-m", "pytest", "perfbench/tests", "-q"]),
+    (
+        "etl_smoke",
+        [
+            sys.executable, "perfbench/run.py", "--workload", "etl_refresh",
+            "--seconds", "15", "--trace", "0",
+        ],
+    ),
     ("driver_sim", [sys.executable, "tools/driver_sim.py"]),
     ("plan_audit", [sys.executable, "tools/plan_audit.py"]),
     ("plan_snapshot", [sys.executable, "tools/plan_snapshot.py", "--check"]),
@@ -49,12 +62,24 @@ STEPS = [
         "plan_snapshot_warm",
         [sys.executable, "tools/plan_snapshot.py", "--check-warm"],
     ),
-    # 6. seeded rotation re-proof of the registry's long tail: 28
+    # 8. seeded rotation re-proof of the registry's long tail: 28
     #    queries NOT in the last two driver CORRECTNESS samples, drawn
     #    by sha256(name:rN) — makes driver-sample staleness harmless
     #    (round-11 VERDICT item 4; seed rule documented in BASELINE.md)
     ("rotation_qcheck", [sys.executable, "tools/qcheck.py", "--rotation"]),
 ]
+
+
+def _result_failure(stdout: str) -> str | None:
+    """Why a perfbench run's last stdout line is not a correct result
+    with no failed operation; None when it is."""
+    try:
+        last = json.loads(stdout.strip().splitlines()[-1])
+    except (IndexError, ValueError):
+        return "no result line"
+    if last.get("correct") is not True or last.get("failed") != 0:
+        return f"correct={last.get('correct')} failed={last.get('failed')}"
+    return None
 
 
 def main() -> int:
@@ -65,7 +90,18 @@ def main() -> int:
     for name, cmd in steps:
         t0 = time.time()
         print(f"=== {name}: {' '.join(cmd[1:])}", flush=True)
-        rc = subprocess.run(cmd, cwd=REPO).returncode
+        # the smoke run must also print a correct, failure-free result
+        check = _result_failure if name == "etl_smoke" else None
+        proc = subprocess.run(
+            cmd, cwd=REPO, stdout=subprocess.PIPE if check else None, text=True
+        )
+        rc = proc.returncode
+        if check is not None:
+            print(proc.stdout, end="", flush=True)
+            why = check(proc.stdout)
+            if rc == 0 and why:
+                print(f"=== {name}: {why}", flush=True)
+                rc = 1
         print(f"=== {name}: {'OK' if rc == 0 else f'FAILED rc={rc}'} "
               f"({time.time() - t0:.0f}s)", flush=True)
         if rc != 0:
