@@ -69,10 +69,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every fixture table as a temp view (for the SQL surface)."""
-    frames = load_all(spark, sf_dir)
-    for name, df in frames.items():
-        df.createOrReplaceTempView(name)
-    return frames

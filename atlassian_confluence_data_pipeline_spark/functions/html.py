@@ -174,8 +174,3 @@ def make_clean_html_udf(base_url: str = ""):
 
     return clean_html_udf
 
-
-def register_udfs(spark, base_url: str = "") -> None:
-    """Expose the DOM transforms to the SQL surface
-    (``SELECT clean_html(body) FROM ...``)."""
-    spark.udf.register("clean_html", make_clean_html_udf(base_url))

@@ -61,44 +61,9 @@ def cookie_to_map(cookie: Column) -> Column:
     return F.str_to_map(cookie, F.lit("; "), F.lit("="))
 
 
-def strip_cdata(html: Column) -> Column:
-    """CDATA marker removal (html_cleaner.py:39)."""
-    return F.regexp_replace(html, r"<!\[CDATA\[|\]\]>", "")
-
-
-def strip_script_style(html: Column) -> Column:
-    """<script>/<style> subtree removal (html_cleaner.py:26-27) for
-    non-nested tags — the DOM-safe general case is functions/html.py."""
-    return F.regexp_replace(
-        html, r"(?s)<(script|style)[^>]*>.*?</(script|style)>", ""
-    )
-
-
 def substitute_page_id(html: Column, page_id: Column) -> Column:
     """F4 (html_generator.py:75): replace the PAGE_ID template token."""
     return F.replace(html, F.lit("PAGE_ID"), page_id.cast("string"))
-
-
-def data_url(mime: Column, content: Column) -> Column:
-    """F7 (html_generator.py:241-242): binary -> data:{mime};base64,{payload}."""
-    return F.concat(F.lit("data:"), mime, F.lit(";base64,"), F.base64(content))
-
-
-def absolutize_url(src: Column, base: str) -> Column:
-    """F2 subset (html_cleaner.py:164-166): prefix relative URLs with the
-    base; http(s)/data URLs pass through."""
-    is_absolute = src.rlike("^(https?:|data:)")
-    return F.when(is_absolute, src).otherwise(
-        F.concat(F.lit(base.rstrip("/") + "/"), F.regexp_replace(src, "^/", ""))
-    )
-
-
-def join_url(*parts: Column | str) -> Column:
-    """F12 (confluence_client.py:40-54): slash-normalized path join."""
-    cols = [
-        F.rtrim(F.lit(p) if isinstance(p, str) else p, F.lit("/")) for p in parts
-    ]
-    return F.concat_ws("/", *cols)
 
 
 def backoff_delay(

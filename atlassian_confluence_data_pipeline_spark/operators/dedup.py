@@ -1,4 +1,4 @@
-"""Dedup / set operators: exact, latest-per-key, union-dedup.
+"""Dedup / set operators: latest-per-key, union-dedup.
 
 Reference analogs: visited-set dedup during scans (confluence_client.py:
 292,315-318), union of updated+missing phases with skip-seen
@@ -13,24 +13,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def dedup_exact(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """Exact dedup on ``cols`` (or all columns). Reference D1."""
-    return df.dropDuplicates(list(cols) if cols else None)
-
-
-def dedup_by_hash(df: DataFrame, text_col: str, keep_col: str) -> DataFrame:
-    """Exact content dedup via sha2-256 of ``text_col`` (extension X1).
-
-    Hashing first means the shuffle key is a fixed-width 64-char digest
-    rather than an arbitrarily large document body — at 100 TB the
-    exchange moves hashes + small keys, not page-size strings. Keeps the
-    row with the minimal ``keep_col`` per content hash (deterministic).
-    """
-    hashed = df.withColumn("__h", F.sha2(F.col(text_col), 256))
-    w = Window.partitionBy("__h").orderBy(F.col(keep_col).asc())
-    return hashed.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__h", "__rn")
 
 
 def latest_per_key(

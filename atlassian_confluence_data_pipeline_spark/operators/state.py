@@ -341,7 +341,7 @@ class AppendIndexStore:
             man = self._manifest()
             dirs = [os.path.join(self.path, d) for d in self._dirs(man)]
             if not dirs:
-                return spark.createDataFrame([], schema)
+                return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
             try:
                 df = spark.read.schema(schema).parquet(*dirs)
             except Exception as exc:  # a dir retired after the load

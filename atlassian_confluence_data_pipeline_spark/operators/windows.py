@@ -2,9 +2,7 @@
 
 The reference never orders rows (API order taken as-is; its only analog
 is the results[0] first-match pick, confluence_client.py:272-273); the
-engine exposes the standard analytic surface. Top-k goes through
-``TakeOrderedAndProject`` (per-partition heap + driver merge of k rows,
-no global sort) — the plan that survives a 100x scale-up.
+engine exposes the standard analytic surface.
 """
 
 from __future__ import annotations
@@ -13,12 +11,6 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def top_k(df: DataFrame, order_cols: Sequence[Column], k: int) -> DataFrame:
-    """Global top-k. ``order_cols`` must be a total order (add a unique
-    tie-breaker) so results are deterministic across engines."""
-    return df.orderBy(*order_cols).limit(k)
 
 
 def distributed_prefix_rank(

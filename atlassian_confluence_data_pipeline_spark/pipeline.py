@@ -91,7 +91,7 @@ def change_set(
 
 
 def _transform(
-    delta: DataFrame, base_url: str, observation: Observation | None
+    delta: DataFrame, base_url: str, observation: Observation
 ) -> DataFrame:
     """clean_html + PAGE_ID substitution + filename sanitization over the
     change set, with the run counters observed on the result."""
@@ -110,24 +110,22 @@ def _transform(
             sanitize_filename(F.col("title")), F.lit("_"), F.col("id"), F.lit(".html")
         ).alias("filename"),
     )
-    if observation is not None:
-        processed = processed.observe(
-            observation,
-            F.count(F.lit(1)).alias("n_pages"),
-            F.sum(F.when(F.col("change_type") == "new", 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_new"),
-            F.sum(F.when(F.col("change_type") == "updated", 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_updated"),
-            F.sum(F.when(F.col("html").isNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_failed_html"),
-            F.coalesce(F.sum(F.length("html")), F.lit(0))
-            .cast("bigint")
-            .alias("html_chars"),
-        )
-    return processed
+    return processed.observe(
+        observation,
+        F.count(F.lit(1)).alias("n_pages"),
+        F.sum(F.when(F.col("change_type") == "new", 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_new"),
+        F.sum(F.when(F.col("change_type") == "updated", 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_updated"),
+        F.sum(F.when(F.col("html").isNull(), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_failed_html"),
+        F.coalesce(F.sum(F.length("html")), F.lit(0))
+        .cast("bigint")
+        .alias("html_chars"),
+    )
 
 
 def _results(state: DataFrame, processed: DataFrame) -> RefreshResult:
@@ -155,18 +153,19 @@ def _results(state: DataFrame, processed: DataFrame) -> RefreshResult:
     return RefreshResult(processed, merge_state(state, ledger_updates), stats)
 
 
-def incremental_refresh(
+def run_with_store(
+    spark: SparkSession,
     pages: DataFrame,
-    state: DataFrame,
+    store: StateStore,
     lookback_cutoff: str,
     base_url: str = "https://example.org/wiki",
     check_missing: bool = True,
-    observation: Observation | None = None,
 ) -> RefreshResult:
-    """One incremental run over a `pages` frame (FIXTURES.md §B schema),
-    as LAZY frames: nothing runs until the caller acts on them, and each
-    action on ``processed``, ``new_state`` or ``stats`` re-runs the scan,
-    the CDC and the UDF. ``run_with_store`` is the eager form.
+    """One incremental run over a `pages` frame (FIXTURES.md §B schema)
+    against a persistent StateStore: read the ledger, run, atomically
+    publish the merged snapshot. Re-running with no new page versions is
+    a no-op (idempotence — state_manager.py:72 semantics;
+    property-tested).
 
     Phases:
       1-3. change set  — window scan (version.when >= cutoff, S4/P2;
@@ -182,35 +181,14 @@ def incremental_refresh(
       5. state merge   — last-write-wins MERGE (K3)
       6. stats         — grouped outcome counts (A1)
 
-    With ``observation``, ``processed`` is instrumented with
-    ``observe()`` so the run counters the reference tallies row-by-row
-    (master_script.py:106-113, 294-300) are gathered by the first
-    action that runs it; read them with ``observation.get`` afterwards.
-    """
-    delta = change_set(pages, state, lookback_cutoff, check_missing)
-    return _results(state, _transform(delta, base_url, observation))
-
-
-def run_with_store(
-    spark: SparkSession,
-    pages: DataFrame,
-    store: StateStore,
-    lookback_cutoff: str,
-    base_url: str = "https://example.org/wiki",
-    check_missing: bool = True,
-) -> RefreshResult:
-    """incremental_refresh against a persistent StateStore: read ledger,
-    run, atomically publish the merged snapshot. Re-running with no new
-    page versions is a no-op (idempotence — state_manager.py:72
-    semantics; property-tested).
-
     ``processed`` is materialised once (``localCheckpoint``): that pass
     runs the source scan, the CDC and the pandas UDF once and fills the
     run counters (``result.metrics``, the reference's end-of-run report,
-    master_script.py:590-609). The ledger MERGE (written straight into
-    the new snapshot; ``new_state`` is a lazy read of it), ``stats`` and
-    the returned ``processed`` all read the materialised frame, so
-    sinking ``processed`` or collecting ``stats`` re-runs none of them."""
+    master_script.py:106-113, 294-300, 590-609). The ledger MERGE
+    (written straight into the new snapshot; ``new_state`` is a lazy
+    read of it), ``stats`` and the returned ``processed`` all read the
+    materialised frame, so sinking ``processed`` or collecting ``stats``
+    re-runs none of them."""
     state = store.read(spark)
     obs = Observation()
     delta = change_set(pages, state, lookback_cutoff, check_missing)

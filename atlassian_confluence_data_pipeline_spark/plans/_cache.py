@@ -110,21 +110,12 @@ def srp_candidates(
     )
 
 
-def minhash_doc_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized MinHash base frame ``(doc_id, hs)`` over the
-    documents table: per-word rolling-hash fold -> 3-gram shingle-HASH
-    combine — the stage that ``minhash_lsh_pairs``, ``near_dup_pairs_lsh``
-    and ``minhash_estimate_calibration`` each rebuilt per run (round-6
-    item 2; the SRP chain got the same treatment in round 6).
-    Checkpointed UNFILTERED; consumers apply the post-materialization
-    ``size(hs) > 0`` guard themselves (filtering before the checkpoint
-    re-inlines the fold — the textops PERF contract).
-
-    Hash column ONLY (doc_id + array<bigint>): the true string shingles
-    are ~3x the text size and only the Jaccard-verify consumer needs
-    them — they live in the separately-keyed ``minhash_doc_shingles``
-    frame so sessions that never verify never pin them (round-7 ADVICE)."""
-    from atlassian_confluence_data_pipeline_spark.catalog import load_table
+def minhash_shingle_hashes(docs: DataFrame) -> DataFrame:
+    """``(doc_id, hs)`` over ``(doc_id, text)`` rows: per-word
+    rolling-hash fold -> 3-gram shingle-HASH combine. The stage
+    :func:`minhash_doc_hashes` memoizes over the documents table and the
+    streaming MinHash probe (``streaming/jobs._minhash_probe``) runs on
+    each micro-batch."""
     from atlassian_confluence_data_pipeline_spark.functions.text import (
         rolling_hash,
     )
@@ -136,16 +127,34 @@ def minhash_doc_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import functions as F
 
-    def _build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        return (
-            docs.select("doc_id", _words(F.col("text")).alias("w"))
-            .select("doc_id", F.transform(F.col("w"), rolling_hash).alias("wh"))
-            .select(
-                "doc_id",
-                shingle_hashes_from_word_hashes(F.col("wh")).alias("hs"),
-            )
+    return (
+        docs.select("doc_id", _words(F.col("text")).alias("w"))
+        .select("doc_id", F.transform(F.col("w"), rolling_hash).alias("wh"))
+        .select(
+            "doc_id",
+            shingle_hashes_from_word_hashes(F.col("wh")).alias("hs"),
         )
+    )
+
+
+def minhash_doc_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-memoized MinHash base frame ``(doc_id, hs)`` over the
+    documents table (:func:`minhash_shingle_hashes`) — the stage that
+    ``minhash_lsh_pairs``, ``near_dup_pairs_lsh`` and
+    ``minhash_estimate_calibration`` each rebuilt per run (round-6
+    item 2; the SRP chain got the same treatment in round 6).
+    Checkpointed UNFILTERED; consumers apply the post-materialization
+    ``size(hs) > 0`` guard themselves (filtering before the checkpoint
+    re-inlines the fold — the textops PERF contract).
+
+    Hash column ONLY (doc_id + array<bigint>): the true string shingles
+    are ~3x the text size and only the Jaccard-verify consumer needs
+    them — they live in the separately-keyed ``minhash_doc_shingles``
+    frame so sessions that never verify never pin them (round-7 ADVICE)."""
+    from atlassian_confluence_data_pipeline_spark.catalog import load_table
+
+    def _build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return minhash_shingle_hashes(load_table(spark, sf_dir, "documents"))
 
     return shared_pair_table(spark, sf_dir, "minhash_doc_hashes", _build)
 
@@ -505,19 +514,12 @@ def preference_matchups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build(spark: SparkSession, sf_dir: str) -> DataFrame:
         from atlassian_confluence_data_pipeline_spark.plans.preference import (
+            _both_orientations,
             _matchup_matrix,
         )
-        from pyspark.sql import functions as F
 
         cmp = preference_duel_frame(spark, sf_dir)
-        duels = cmp.select(
-            F.col("s_a").alias("i"), F.col("s_b").alias("j"), "winner"
-        ).unionByName(
-            cmp.select(
-                F.col("s_b").alias("i"), F.col("s_a").alias("j"), "winner"
-            )
-        )
-        return _matchup_matrix(duels)
+        return _matchup_matrix(_both_orientations(cmp))
 
     return shared_pair_table(spark, sf_dir, "preference_matchups", _build)
 

@@ -213,19 +213,6 @@ def _annotator_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ordered_fold(struct_key, val_col, init=0.0, mult=False):
-    """F.aggregate over array_sort(collect_list(struct(key, val)))."""
-    op = (lambda a, b: a * b) if mult else (lambda a, b: a + b)
-    return F.aggregate(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(struct_key, val_col))),
-            lambda s: s[val_col],
-        ),
-        F.lit(float(init)),
-        op,
-    )
-
-
 @query(
     "annotator_labels",
     oracle=f"""

@@ -26,11 +26,6 @@ _OUT = 8  # projected dimension
 _A, _B, _M = 1664525, 1013904223, 2147483647
 
 
-def _sign(i: Column, j: int) -> Column:
-    code = (F.lit(_A) * (i * _OUT + F.lit(j)) + F.lit(_B)) % F.lit(_M)
-    return F.when(code % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
-
-
 def _sql_sign(i: str, j: int) -> str:
     return (
         f"CASE WHEN (({_A} * ({i} * {_OUT} + {j}) + {_B}) % {_M}) % 2 = 0 "

@@ -36,7 +36,9 @@ Reference analog: none (the reference has no analytics surface) —
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from atlassian_confluence_data_pipeline_spark.catalog import load_table
@@ -115,20 +117,55 @@ def _duel_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _duels_both(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(i, j, winner) with each duel emitted in both orientations —
-    riding the session-staged duel frame (plans/_cache.py) so the
-    offset-explode corpus join runs once per session, not once per
-    preference consumer."""
-    from atlassian_confluence_data_pipeline_spark.plans._cache import (
-        preference_duel_frame,
-    )
-
-    cmp = preference_duel_frame(spark, sf_dir)
+def _both_orientations(cmp: DataFrame) -> DataFrame:
+    """(i, j, winner): each ``(s_a, s_b, winner)`` duel in both
+    orientations — for the session-staged matchup grid
+    (``_cache.preference_matchups``) and the streaming duel ingestion."""
     return cmp.select(
         F.col("s_a").alias("i"), F.col("s_b").alias("j"), "winner"
     ).unionByName(
         cmp.select(F.col("s_b").alias("i"), F.col("s_a").alias("j"), "winner")
+    )
+
+
+def _duels_both(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`_both_orientations` of the session-staged duel frame
+    (plans/_cache.py), so the offset-explode corpus join runs once per
+    session, not once per preference consumer."""
+    from atlassian_confluence_data_pipeline_spark.plans._cache import (
+        preference_duel_frame,
+    )
+
+    return _both_orientations(preference_duel_frame(spark, sf_dir))
+
+
+def wilson_lb(wins: Column, n: Column) -> Column:
+    """The 95% Wilson LOWER bound on a win rate of ``wins`` in ``n``
+    duels, rounded to 6 places: the one Spark copy, which the batch and
+    streaming win-rate matrices reach through :func:`_winrate_matrix`."""
+    p = wins.cast("double") / n
+    n = n.cast("double")
+    z = F.lit(WILSON_Z)
+    return F.round(
+        (p + z * z / (2 * n) - z * F.sqrt((p * (1 - p) + z * z / (4 * n)) / n))
+        / (1 + z * z / n),
+        6,
+    )
+
+
+def _winrate_matrix(mg: DataFrame) -> DataFrame:
+    """(src, opponent, n_duels, n_wins, winrate, wilson_lb) over an
+    (i, j, n, w) matchup matrix: the projection of
+    ``preference_winrate_matrix`` and of the streaming
+    ``read_preference_state`` / ``foreach_batch_dpo_pairs``."""
+    w, n = F.col("w"), F.col("n")
+    return mg.select(
+        F.col("i").alias("src"),
+        F.col("j").alias("opponent"),
+        n.alias("n_duels"),
+        w.alias("n_wins"),
+        F.round(w.cast("double") / n, 6).alias("winrate"),
+        wilson_lb(w, n).alias("wilson_lb"),
     )
 
 
@@ -160,26 +197,7 @@ def preference_winrate_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same (count, i-wins) hash aggregate as _matchup_matrix — read the
     # session-staged |sources|²-bounded grid instead of re-aggregating
     # the duel stream per build
-    m = preference_matchups(spark, sf_dir).select(
-        F.col("i").alias("src"),
-        F.col("j").alias("opponent"),
-        F.col("n").alias("n_duels"),
-        F.col("w").alias("n_wins"),
-    )
-    p = F.col("n_wins").cast("double") / F.col("n_duels")
-    n = F.col("n_duels").cast("double")
-    z = F.lit(WILSON_Z)
-    wilson = (
-        p + z * z / (2 * n) - z * F.sqrt((p * (1 - p) + z * z / (4 * n)) / n)
-    ) / (1 + z * z / n)
-    return m.select(
-        "src",
-        "opponent",
-        "n_duels",
-        "n_wins",
-        F.round(p, 6).alias("winrate"),
-        F.round(wilson, 6).alias("wilson_lb"),
-    )
+    return _winrate_matrix(preference_matchups(spark, sf_dir))
 
 
 def _bt_blocks() -> tuple[list[str], str]:
@@ -286,9 +304,11 @@ def _n_sources(spark: SparkSession, sf_dir: str) -> int:
 
 
 def _matchup_matrix(duels: DataFrame) -> DataFrame:
-    """(i, j, n, w): duel counts and i-wins per ordered matchup — the
-    sufficient statistics BOTH Bradley-Terry fit paths (and the
-    streaming duel state) reduce to."""
+    """(i, j, n, w): duel counts and i-wins per ordered matchup over
+    :func:`_both_orientations` rows — the sufficient statistics BOTH
+    Bradley-Terry fit paths reduce to. The one copy of this aggregate:
+    the session-staged grid (``_cache.preference_matchups``) and each
+    streaming batch's duel-state increment (``streaming/jobs.py``)."""
     return duels.groupBy("i", "j").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.when(F.col("winner") == F.col("i"), 1).otherwise(0))
@@ -548,9 +568,7 @@ def preference_cycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     duels); each cycle is counted once by anchoring at its smallest
     node."""
     duels = _duels_both(spark, sf_dir)
-    m = duels.groupBy("i", "j").agg(
-        F.sum(F.when(F.col("winner") == F.col("i"), 1).otherwise(0)).alias("w")
-    )
+    m = _matchup_matrix(duels)
     rec = m.alias("a").join(
         m.select(
             F.col("i").alias("j2"), F.col("j").alias("i2"), F.col("w").alias("w_ji")
@@ -701,46 +719,51 @@ def dpo_pair_construction(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_aware_sample_weights,
     )
 
-    cmp = preference_duel_frame(spark, sf_dir)
-    chosen = F.when(F.col("winner") == F.col("s_a"), F.col("id_a")).otherwise(
-        F.col("id_b")
+    dw = dedup_aware_sample_weights(spark, sf_dir).select(
+        F.col("doc_id").alias("chosen_doc_id"), "weight"
     )
-    rejected = F.when(F.col("winner") == F.col("s_a"), F.col("id_b")).otherwise(
-        F.col("id_a")
+    return _dpo_pairs(
+        preference_duel_frame(spark, sf_dir),
+        bradley_terry_strengths(spark, sf_dir),
+        preference_winrate_matrix(spark, sf_dir),
+        lambda pairs: pairs.join(dw, "chosen_doc_id"),
     )
-    rej_src = F.when(F.col("winner") == F.col("s_a"), F.col("s_b")).otherwise(
-        F.col("s_a")
-    )
-    dpo = cmp.select(
-        chosen.alias("chosen_doc_id"),
-        rejected.alias("rejected_doc_id"),
+
+
+def _dpo_pairs(
+    cmp: DataFrame,
+    bt: DataFrame,
+    wl: DataFrame,
+    weigh: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """One (chosen, rejected) pair per ``(id_a, id_b, s_a, s_b, winner)``
+    duel with its Bradley-Terry margin (``bt``: source, strength — both
+    joins are contestant-sized broadcasts) and its matchup's Wilson bound
+    (``wl``: src, opponent, wilson_lb), gated on ``wilson_lb >
+    DPO_WILSON_MIN``. ``weigh`` adds the ``weight`` column: the batch
+    ``dpo_pair_construction`` inner-joins the dedup weights; the
+    streaming ``foreach_batch_dpo_pairs`` left-joins its
+    ``weights_reader`` with a default of 1.0."""
+
+    def pick(if_a_won: str, otherwise: str) -> Column:
+        return F.when(
+            F.col("winner") == F.col("s_a"), F.col(if_a_won)
+        ).otherwise(F.col(otherwise))
+
+    def strength(side: str, alias: str) -> DataFrame:
+        return F.broadcast(
+            bt.select(F.col("source").alias(side), F.col("strength").alias(alias))
+        )
+
+    pairs = cmp.select(
+        pick("id_a", "id_b").alias("chosen_doc_id"),
+        pick("id_b", "id_a").alias("rejected_doc_id"),
         F.col("winner").alias("chosen_source"),
-        rej_src.alias("rejected_source"),
+        pick("s_b", "s_a").alias("rejected_source"),
     )
-    bt = bradley_terry_strengths(spark, sf_dir).select("source", "strength")
-    wl = preference_winrate_matrix(spark, sf_dir).select(
-        "src", "opponent", "wilson_lb"
-    )
-    dw = dedup_aware_sample_weights(spark, sf_dir).select("doc_id", "weight")
-    return (
-        dpo.join(
-            F.broadcast(
-                bt.select(
-                    F.col("source").alias("chosen_source"),
-                    F.col("strength").alias("__sc"),
-                )
-            ),
-            "chosen_source",
-        )
-        .join(
-            F.broadcast(
-                bt.select(
-                    F.col("source").alias("rejected_source"),
-                    F.col("strength").alias("__sr"),
-                )
-            ),
-            "rejected_source",
-        )
+    scored = (
+        pairs.join(strength("chosen_source", "__sc"), "chosen_source")
+        .join(strength("rejected_source", "__sr"), "rejected_source")
         .join(
             F.broadcast(
                 wl.select(
@@ -751,10 +774,9 @@ def dpo_pair_construction(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             ["chosen_source", "rejected_source"],
         )
-        .join(
-            dw.select(F.col("doc_id").alias("chosen_doc_id"), "weight"),
-            "chosen_doc_id",
-        )
+    )
+    return (
+        weigh(scored)
         .filter(F.col("wilson_lb") > DPO_WILSON_MIN)
         .select(
             "chosen_doc_id",

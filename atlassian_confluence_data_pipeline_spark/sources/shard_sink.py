@@ -376,7 +376,7 @@ def read_manifest_batches(
             f"no committed '{fmt}' artifact under {out_path}"
         )
     if man is None or not man["dirs"]:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
     return spark.read.parquet(
         *[os.path.join(out_path, d) for d in man["dirs"]]
     )

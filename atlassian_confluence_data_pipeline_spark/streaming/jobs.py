@@ -11,11 +11,16 @@ Mapping from the reference's incremental poll loop:
   (state_manager.py:84-102)        -> foreachBatch MERGE into StateStore
 - late/missed-data recovery sweep
   (master_script.py:482-579)       -> batch reconciliation job
-                                      (pipeline.incremental_refresh)
+                                      (pipeline.run_with_store, whose
+                                      pipeline.change_set sweeps pages
+                                      missing from the ledger)
 
 Each job returns an *unstarted* streaming DataFrame/writer so callers
 choose sink + trigger; tests drive them with availableNow triggers into
-memory sinks.
+memory sinks. The ``foreachBatch`` jobs call the batch building blocks
+(the MinHash operators, ``plans/preference.py``'s duel reduction, Wilson
+bound and DPO composition) rather than re-deriving them, so each
+streaming-equals-batch contract holds by construction.
 """
 
 from __future__ import annotations
@@ -196,6 +201,115 @@ def foreach_batch_state_merge(events: DataFrame, store) -> "DataStreamWriter":  
     return events.writeStream.foreachBatch(merge_batch)
 
 
+def _commit_index_batch(spark, batch_id: int, compact_every, *writes):  # noqa: ANN001
+    """The index jobs' commit step (minhash, span, curation, fingerprint,
+    video): write each ``(store, frame, schema)`` as batch partition
+    ``batch_id``, then every ``compact_every`` triggers fold each store's
+    older partitions into one (replay-safe, see AppendIndexStore.compact)."""
+    for store, frame, _ in writes:
+        store.write_batch(frame, batch_id)
+    if compact_every and (int(batch_id) + 1) % compact_every == 0:
+        for store, _, schema in writes:
+            store.compact(spark, schema, keep_recent=compact_every)
+
+
+def _probe_pairs(batch, prior, id_col: str, keys: list, carry=None):  # noqa: ANN001
+    """The cross-batch probe of the MinHash, fingerprint and video jobs:
+    each batch row joined on ``keys`` to every row of ``prior`` (the
+    persisted index) or of the batch with another ``id_col``, as
+    ``(id_a, id_b)`` = (least, greatest) id plus ``keys`` — and, with
+    ``carry``, that column's value on the batch row (``x``) and on the
+    matched row (``y``). An equi-join on the keys, never all-pairs."""
+
+    def side(df, id_alias: str, carry_alias: str):  # noqa: ANN001, ANN202
+        extra = [F.col(carry).alias(carry_alias)] if carry else []
+        return df.select(F.col(id_col).alias(id_alias), *keys, *extra)
+
+    return (
+        side(batch, "id_x", "x")
+        .join(side(prior.unionByName(batch), "id_y", "y"), keys)
+        .filter(F.col("id_x") != F.col("id_y"))
+        .select(
+            F.least("id_x", "id_y").alias("id_a"),
+            F.greatest("id_x", "id_y").alias("id_b"),
+            *keys,
+            *(["x", "y"] if carry else []),
+        )
+    )
+
+
+#: index schema for the MinHash band-key state
+_BAND_INDEX_SCHEMA = "doc_id bigint, hs array<bigint>, band_key bigint"
+
+
+def _minhash_probe(docs, prior, jaccard: float):  # noqa: ANN001
+    """The MinHash stage of ``foreach_batch_minhash_dedup`` and
+    ``foreach_batch_curation``: shingle-hash (``_cache.
+    minhash_shingle_hashes``), sign and band (MINHASH_K, MINHASH_BANDS x
+    MINHASH_ROWS) the (doc_id, text) ``docs``, probe the band keys
+    against ``prior`` (the persisted index) and the batch, and verify
+    candidates with exact Jaccard >= ``jaccard``. Returns the batch's
+    (doc_id, hs, band_key) index rows and the (id_a, id_b, jaccard)
+    pairs, both materialised: the band rows feed the probe, the index
+    write and the caller; the pairs must not read ``prior`` after a live
+    replay's ``write_batch`` retires the directory it bound."""
+    from atlassian_confluence_data_pipeline_spark.operators.lsh import (
+        lsh_band_keys,
+        minhash_signature,
+        verify_candidates_jaccard,
+    )
+    from atlassian_confluence_data_pipeline_spark.plans._cache import (
+        minhash_shingle_hashes,
+    )
+    from atlassian_confluence_data_pipeline_spark.plans.multimodal import (
+        MINHASH_BANDS,
+        MINHASH_K,
+        MINHASH_ROWS,
+    )
+
+    # checkpointed UNFILTERED: a size filter above the shingle fold
+    # would be pushed below it and re-inline the fold
+    hs_tbl = (
+        minhash_shingle_hashes(docs)
+        .localCheckpoint(eager=True)
+        .filter(F.size("hs") > 0)
+    )
+    banded = (
+        hs_tbl.select(
+            "doc_id",
+            "hs",
+            minhash_signature(F.col("hs"), k=MINHASH_K, pre_hashed=True).alias(
+                "__sig"
+            ),
+        )
+        .select(
+            "doc_id",
+            "hs",
+            F.explode(
+                F.array(*lsh_band_keys(F.col("__sig"), MINHASH_BANDS, MINHASH_ROWS))
+            ).alias("band_key"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    cand = (
+        _probe_pairs(banded, prior, "doc_id", ["band_key"])
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    verified = (
+        verify_candidates_jaccard(
+            cand,
+            prior.unionByName(banded).select("doc_id", "hs").distinct(),
+            "doc_id",
+            "hs",
+            threshold=jaccard,
+        )
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+        .localCheckpoint(eager=True)
+    )
+    return banded, verified
+
+
 def foreach_batch_minhash_dedup(
     docs,
     index_store,
@@ -223,75 +337,16 @@ def foreach_batch_minhash_dedup(
     overwrites it with identical rows (idempotent at any crash point);
     pair emission is at-least-once (dedup-on-read by (id_a, id_b), the
     same contract as the reference's retry-tolerant output writes)."""
-    from pyspark.sql import functions as F
-
-    from atlassian_confluence_data_pipeline_spark.functions.text import (
-        rolling_hash,
-    )
-    from atlassian_confluence_data_pipeline_spark.operators.lsh import (
-        lsh_band_keys,
-        minhash_signature,
-        shingle_hashes_from_word_hashes,
-        verify_candidates_jaccard,
-    )
 
     def dedup_batch(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        words = F.split(F.trim(F.col("text")), r"\s+")
-        hs_tbl = (
-            batch_df.select("doc_id", words.alias("w"))
-            .select("doc_id", F.transform(F.col("w"), rolling_hash).alias("wh"))
-            .select(
-                "doc_id",
-                shingle_hashes_from_word_hashes(F.col("wh")).alias("hs"),
-            )
-            .localCheckpoint(eager=True)
-            .filter(F.size("hs") > 0)
-        )
-        sig = hs_tbl.select(
-            "doc_id",
-            "hs",
-            minhash_signature(F.col("hs"), k=32, pre_hashed=True).alias("__sig"),
-        ).localCheckpoint(eager=True)
-        banded = sig.select(
-            "doc_id",
-            "hs",
-            F.explode(F.array(*lsh_band_keys(F.col("__sig"), 16, 2))).alias(
-                "band_key"
-            ),
-        )
-        prior = index_store.read(
-            spark, "doc_id bigint, hs array<bigint>, band_key bigint"
-        )
-        universe = prior.unionByName(banded)
-        cand = (
-            banded.select(F.col("doc_id").alias("id_x"), "band_key")
-            .join(
-                universe.select(F.col("doc_id").alias("id_y"), "band_key"),
-                "band_key",
-            )
-            .filter(F.col("id_x") != F.col("id_y"))
-            .select(
-                F.least("id_x", "id_y").alias("id_a"),
-                F.greatest("id_x", "id_y").alias("id_b"),
-            )
-            .distinct()
-        )
-        shingles = universe.select("doc_id", "hs").distinct()
-        verified = verify_candidates_jaccard(
-            cand, shingles, "doc_id", "hs", threshold=jaccard
-        ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+        prior = index_store.read(spark, _BAND_INDEX_SCHEMA)
+        banded, verified = _minhash_probe(batch_df, prior, jaccard)
         verified.write.mode("append").parquet(pairs_out_dir)
-        index_store.write_batch(banded, batch_id)
-        # bounded small-file footprint on long streams: fold old batch
-        # partitions into one consolidated partition every N triggers
-        # (replay-safe — see AppendIndexStore.compact)
-        if compact_every and (int(batch_id) + 1) % compact_every == 0:
-            index_store.compact(
-                spark,
-                "doc_id bigint, hs array<bigint>, band_key bigint",
-                keep_recent=compact_every,
-            )
+        _commit_index_batch(
+            spark, batch_id, compact_every,
+            (index_store, banded, _BAND_INDEX_SCHEMA),
+        )
 
     return docs.writeStream.foreachBatch(dedup_batch)
 
@@ -324,8 +379,6 @@ def foreach_batch_span_dedup(
     point; cross-batch repeats of a hash cost index rows but not
     correctness — the anti-join semantics are set-based); doc emission
     is at-least-once keyed by doc_id (dedup-on-read)."""
-    from pyspark.sql import functions as F
-
     from atlassian_confluence_data_pipeline_spark.functions.text import (
         rolling_hash,
     )
@@ -393,9 +446,10 @@ def foreach_batch_span_dedup(
             F.coalesce("clean_text", F.lit("")).alias("clean_text"),
         )
         out.write.mode("append").parquet(out_dir)
-        index_store.write_batch(spans.select("h").distinct(), batch_id)
-        if compact_every and (int(batch_id) + 1) % compact_every == 0:
-            index_store.compact(spark, "h bigint", keep_recent=compact_every)
+        _commit_index_batch(
+            spark, batch_id, compact_every,
+            (index_store, spans.select("h").distinct(), "h bigint"),
+        )
 
     return docs.writeStream.foreachBatch(dedup_batch)
 
@@ -452,26 +506,15 @@ def foreach_batch_curation(
     the ledger MERGE collapses replays, so no store grows on recovery;
     pair emission is at-least-once (dedup-on-read), the same contract
     as foreach_batch_minhash_dedup."""
-    from pyspark.sql import functions as F
-
-    from atlassian_confluence_data_pipeline_spark.functions.text import (
-        rolling_hash,
-    )
-    from atlassian_confluence_data_pipeline_spark.operators.lsh import (
-        lsh_band_keys,
-        minhash_signature,
-        shingle_hashes_from_word_hashes,
-        verify_candidates_jaccard,
-    )
+    from atlassian_confluence_data_pipeline_spark.plans.textops import _words
 
     def curate_batch(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        words = F.split(F.trim(F.col("text")), r"\s+")
         gated = (
             batch_df.select(
                 "doc_id",
                 "text",
-                F.size(words).cast("int").alias("n_words"),
+                F.size(_words(F.col("text"))).cast("int").alias("n_words"),
                 F.sha2(F.col("text"), 256).alias("fp"),
             )
             .filter(F.col("n_words") >= gate_min_words)
@@ -491,50 +534,8 @@ def foreach_batch_curation(
         # no matter what state exists, which is what makes recovery safe
         # at ANY crash point (an exact-dup twin has identical bands to
         # its original, so acceptance decisions are unchanged)
-        hs_tbl = batch_unique.select(
-            "doc_id",
-            F.transform(words, rolling_hash).alias("wh"),
-        ).select(
-            "doc_id", shingle_hashes_from_word_hashes(F.col("wh")).alias("hs")
-        ).filter(F.size("hs") > 0)
-        banded = hs_tbl.select(
-            "doc_id",
-            "hs",
-            minhash_signature(F.col("hs"), k=32, pre_hashed=True).alias(
-                "__sig"
-            ),
-        ).select(
-            "doc_id",
-            "hs",
-            F.explode(F.array(*lsh_band_keys(F.col("__sig"), 16, 2))).alias(
-                "band_key"
-            ),
-        )
-        prior_idx = index_store.read(
-            spark, "doc_id bigint, hs array<bigint>, band_key bigint"
-        )
-        universe = prior_idx.unionByName(banded).localCheckpoint(eager=True)
-        cand = (
-            banded.select(F.col("doc_id").alias("id_x"), "band_key")
-            .join(
-                universe.select(F.col("doc_id").alias("id_y"), "band_key"),
-                "band_key",
-            )
-            .filter(F.col("id_x") != F.col("id_y"))
-            .select(
-                F.least("id_x", "id_y").alias("id_a"),
-                F.greatest("id_x", "id_y").alias("id_b"),
-            )
-            .distinct()
-        )
-        shingles = universe.select("doc_id", "hs").distinct()
-        verified = (
-            verify_candidates_jaccard(
-                cand, shingles, "doc_id", "hs", threshold=jaccard
-            )
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-            .localCheckpoint(eager=True)
-        )
+        prior_idx = index_store.read(spark, _BAND_INDEX_SCHEMA)
+        banded, verified = _minhash_probe(batch_unique, prior_idx, jaccard)
         verified.write.mode("append").parquet(pairs_out_dir)
         # rejection: a fresh doc near-dupping an earlier-seen doc (either
         # pair side) or a lower-id doc in its own batch (always id_b)
@@ -586,17 +587,12 @@ def foreach_batch_curation(
         # O(batch) state writes AFTER the idempotent ledger MERGE: each
         # partition is a pure function of the batch, so a replay (any
         # crash point) overwrites it with identical rows
-        seen_store.write_batch(batch_unique.select("doc_id", "fp"), batch_id)
-        index_store.write_batch(banded, batch_id)
-        if compact_every and (int(batch_id) + 1) % compact_every == 0:
-            seen_store.compact(
-                spark, "doc_id bigint, fp string", keep_recent=compact_every
-            )
-            index_store.compact(
-                spark,
-                "doc_id bigint, hs array<bigint>, band_key bigint",
-                keep_recent=compact_every,
-            )
+        _commit_index_batch(
+            spark, batch_id, compact_every,
+            (seen_store, batch_unique.select("doc_id", "fp"),
+             "doc_id bigint, fp string"),
+            (index_store, banded, _BAND_INDEX_SCHEMA),
+        )
 
     return docs.writeStream.foreachBatch(curate_batch)
 
@@ -675,8 +671,6 @@ def foreach_batch_hll_distinct(
     This is the streaming analog of the reference's run counters
     (master_script.py:294-300) upgraded to a mergeable sketch: state
     size is CONSTANT regardless of stream length."""
-    from pyspark.sql import functions as F
-
     from atlassian_confluence_data_pipeline_spark.operators.sketches import (
         hll_registers,
     )
@@ -684,16 +678,14 @@ def foreach_batch_hll_distinct(
     def merge_batch(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
         regs = hll_registers(batch_df, F.col(key_col))
-        if register_store.current_snapshot() is None:
-            prior = spark.createDataFrame([], "reg int, mx int")
-        else:
-            prior = register_store.read(spark)
-        merged = (
-            prior.unionByName(regs)
-            .groupBy("reg")
-            .agg(F.max("mx").alias("mx"))
-        )
-        register_store.write(merged)
+        if register_store.current_snapshot() is not None:
+            regs = (
+                register_store.read(spark)
+                .unionByName(regs)
+                .groupBy("reg")
+                .agg(F.max("mx").alias("mx"))
+            )
+        register_store.write(regs)
 
     return events.writeStream.foreachBatch(merge_batch)
 
@@ -727,8 +719,6 @@ def foreach_batch_cms_merge(
     no-op for any ``batch_id <= last_applied`` (the micro-batch replay
     after a failure between store.write and the streaming checkpoint
     commit). Estimate readers must filter ``row >= 0``."""
-    from pyspark.sql import functions as F
-
     from atlassian_confluence_data_pipeline_spark.functions.text import (
         rolling_hash,
     )
@@ -739,10 +729,8 @@ def foreach_batch_cms_merge(
 
     def merge_batch(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if cms_store.current_snapshot() is None:
-            prior = spark.createDataFrame([], "row int, cell int, cnt bigint")
-            last_applied = -1
-        else:
+        prior, last_applied = None, -1
+        if cms_store.current_snapshot() is not None:
             snap = cms_store.read(spark)
             mark = (
                 snap.filter(F.col("row") == CMS_META_ROW)
@@ -771,14 +759,15 @@ def foreach_batch_cms_merge(
                 )
             ).alias("rc")
         ).select("rc.row", "rc.cell")
-        inc = cells.groupBy("row", "cell").agg(
+        merged = cells.groupBy("row", "cell").agg(
             F.count(F.lit(1)).cast("bigint").alias("cnt")
         )
-        merged = (
-            prior.unionByName(inc)
-            .groupBy("row", "cell")
-            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-        )
+        if prior is not None:
+            merged = (
+                prior.unionByName(merged)
+                .groupBy("row", "cell")
+                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
+            )
         meta = spark.createDataFrame(
             [(CMS_META_ROW, CMS_META_ROW, batch_id)],
             "row int, cell int, cnt bigint",
@@ -826,8 +815,6 @@ def foreach_batch_fingerprint_dedup(
     The partition is a pure function of the batch, so a replayed batch
     overwrites it with identical rows (idempotent at any crash point);
     pair emission is at-least-once (dedup-on-read by (id_a, id_b))."""
-    from pyspark.sql import functions as F
-
     width = 64 // chunks
     mask = (1 << width) - 1
 
@@ -853,40 +840,23 @@ def foreach_batch_fingerprint_dedup(
             F.posexplode(chunk_vals).alias("chunk_id", "chunk_val"),
         )
         prior = index_store.read(spark, _FP_INDEX_SCHEMA)
-        universe = prior.unionByName(banded)
         cand = (
-            banded.select(
-                F.col("owner_id").alias("id_x"),
-                F.col("simhash").alias("fp_x"),
-                "chunk_id",
-                "chunk_val",
+            _probe_pairs(
+                banded, prior, "owner_id", ["chunk_id", "chunk_val"], "simhash"
             )
-            .join(
-                universe.select(
-                    F.col("owner_id").alias("id_y"),
-                    F.col("simhash").alias("fp_y"),
-                    "chunk_id",
-                    "chunk_val",
-                ),
-                ["chunk_id", "chunk_val"],
-            )
-            .filter(F.col("id_x") != F.col("id_y"))
             .select(
-                F.least("id_x", "id_y").alias("id_a"),
-                F.greatest("id_x", "id_y").alias("id_b"),
-                F.bit_count(
-                    F.col("fp_x").bitwiseXOR(F.col("fp_y"))
-                ).alias("hamming"),
+                "id_a",
+                "id_b",
+                F.bit_count(F.col("x").bitwiseXOR(F.col("y"))).alias("hamming"),
             )
             .filter(F.col("hamming") <= max_hamming)
             .distinct()
         )
         cand.write.mode("append").parquet(pairs_out_dir)
-        index_store.write_batch(banded, batch_id)
-        if compact_every and (int(batch_id) + 1) % compact_every == 0:
-            index_store.compact(
-                spark, _FP_INDEX_SCHEMA, keep_recent=compact_every
-            )
+        _commit_index_batch(
+            spark, batch_id, compact_every,
+            (index_store, banded, _FP_INDEX_SCHEMA),
+        )
 
     return attachments.writeStream.foreachBatch(dedup_batch)
 
@@ -905,8 +875,6 @@ def foreach_batch_image_dedup(
     )
 
     def _fp(batch_df):  # noqa: ANN001
-        from pyspark.sql import functions as F
-
         return dhash_images(batch_df).select(
             "owner_id", F.col("dhash").alias("simhash")
         )
@@ -931,8 +899,6 @@ def foreach_batch_audio_dedup(
     )
 
     def _fp(batch_df):  # noqa: ANN001
-        from pyspark.sql import functions as F
-
         return fingerprint_audio(batch_df).select(
             "owner_id", F.col("afp").alias("simhash")
         )
@@ -972,8 +938,6 @@ def foreach_batch_video_dedup(
     exact hash-bucket join, never all-pairs of videos. Replayed batches
     overwrite their partition with identical rows (idempotent); pair
     emission is at-least-once (dedup-on-read by (id_a, id_b))."""
-    from pyspark.sql import functions as F
-
     from atlassian_confluence_data_pipeline_spark.plans.multimodal4 import (
         MIN_SHARED_FRAMES,
     )
@@ -992,28 +956,14 @@ def foreach_batch_video_dedup(
             .localCheckpoint(eager=True)
         )
         prior = index_store.read(spark, _FRAME_INDEX_SCHEMA)
-        universe = prior.unionByName(bf)
         pairs = (
-            bf.select(
-                F.col("owner_id").alias("id_x"), "frame_index", "fh"
-            )
-            .join(
-                universe.select(
-                    F.col("owner_id").alias("id_y"), "frame_index", "fh"
-                ),
-                ["fh", "frame_index"],
-            )
-            .filter(F.col("id_x") != F.col("id_y"))
-            .select(
-                F.least("id_x", "id_y").alias("id_a"),
-                F.greatest("id_x", "id_y").alias("id_b"),
-                "frame_index",
-            )
+            _probe_pairs(bf, prior, "owner_id", ["fh", "frame_index"])
+            .select("id_a", "id_b", "frame_index")
             # Count each (pair, frame) ONCE. The join key includes fh AND
             # frame_index, so a given (id_a, id_b, frame_index) can match at
             # most once legitimately; duplicates arise only from (a) a
             # same-batch pair matching in both directions through
-            # universe = prior UNION bf, and (b) a replayed batch whose old
+            # prior UNION bf, and (b) a replayed batch whose old
             # index partition is still readable. Without this, n_shared is
             # 2x (3x on replay) for same-batch pairs and the threshold is
             # effectively halved.
@@ -1023,17 +973,41 @@ def foreach_batch_video_dedup(
             .filter(F.col("n_shared") >= threshold)
         )
         pairs.write.mode("append").parquet(pairs_out_dir)
-        index_store.write_batch(bf, batch_id)
-        if compact_every and (int(batch_id) + 1) % compact_every == 0:
-            index_store.compact(
-                spark, _FRAME_INDEX_SCHEMA, keep_recent=compact_every
-            )
+        _commit_index_batch(
+            spark, batch_id, compact_every,
+            (index_store, bf, _FRAME_INDEX_SCHEMA),
+        )
 
     return videos.writeStream.foreachBatch(dedup_batch)
 
 
 #: index schema for the streaming preference (duel) state
 _DUEL_INDEX_SCHEMA = "i string, j string, n bigint, w bigint"
+
+
+def _duel_increments(batch_df):  # noqa: ANN001
+    """One batch's (i, j, n, w) matchup increments: the batch
+    ``_both_orientations`` + ``_matchup_matrix`` reduction over its raw
+    ``(s_a, s_b, winner)`` duels — a pure function of the batch."""
+    from atlassian_confluence_data_pipeline_spark.plans.preference import (
+        _both_orientations,
+        _matchup_matrix,
+    )
+
+    return _matchup_matrix(_both_orientations(batch_df))
+
+
+def _cumulative_matchups(spark, index_store):  # noqa: ANN001
+    """The (i, j, n, w) matchup matrix over every committed duel
+    partition (counts are an additive monoid over the batches)."""
+    return (
+        index_store.read(spark, _DUEL_INDEX_SCHEMA)
+        .groupBy("i", "j")
+        .agg(
+            F.sum("n").cast("bigint").alias("n"),
+            F.sum("w").cast("bigint").alias("w"),
+        )
+    )
 
 
 def foreach_batch_preference_state(duels, index_store):  # noqa: ANN001
@@ -1051,23 +1025,9 @@ def foreach_batch_preference_state(duels, index_store):  # noqa: ANN001
     monoid) via :func:`read_preference_state`, recovering exactly the
     batch matchup matrix for the same duel multiset no matter how the
     stream was chopped."""
-    from pyspark.sql import functions as F
 
     def ingest_batch(batch_df, batch_id: int) -> None:
-        both = batch_df.select(
-            F.col("s_a").alias("i"), F.col("s_b").alias("j"), "winner"
-        ).unionByName(
-            batch_df.select(
-                F.col("s_b").alias("i"), F.col("s_a").alias("j"), "winner"
-            )
-        )
-        inc = both.groupBy("i", "j").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.when(F.col("winner") == F.col("i"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("w"),
-        )
-        index_store.write_batch(inc, batch_id)
+        index_store.write_batch(_duel_increments(batch_df), batch_id)
 
     return duels.writeStream.foreachBatch(ingest_batch)
 
@@ -1076,34 +1036,11 @@ def read_preference_state(spark, index_store):  # noqa: ANN001
     """Aggregate the persisted duel partitions into the live win-rate
     matrix: (src, opponent, n_duels, n_wins, winrate, wilson_lb) — the
     same columns and Wilson bound as the batch query."""
-    from pyspark.sql import functions as F
-
     from atlassian_confluence_data_pipeline_spark.plans.preference import (
-        WILSON_Z,
+        _winrate_matrix,
     )
 
-    m = (
-        index_store.read(spark, _DUEL_INDEX_SCHEMA)
-        .groupBy(F.col("i").alias("src"), F.col("j").alias("opponent"))
-        .agg(
-            F.sum("n").cast("bigint").alias("n_duels"),
-            F.sum("w").cast("bigint").alias("n_wins"),
-        )
-    )
-    p = F.col("n_wins").cast("double") / F.col("n_duels")
-    n = F.col("n_duels").cast("double")
-    z = F.lit(WILSON_Z)
-    wilson = (
-        p + z * z / (2 * n) - z * F.sqrt((p * (1 - p) + z * z / (4 * n)) / n)
-    ) / (1 + z * z / n)
-    return m.select(
-        "src",
-        "opponent",
-        "n_duels",
-        "n_wins",
-        F.round(p, 6).alias("winrate"),
-        F.round(wilson, 6).alias("wilson_lb"),
-    )
+    return _winrate_matrix(_cumulative_matchups(spark, index_store))
 
 
 #: emitted DPO increment schema (the dpo_pair_construction columns)
@@ -1146,12 +1083,10 @@ def foreach_batch_dpo_pairs(
     index partition overwrite is byte-identical, a committed batch is
     a manifest no-op, and a crashed flip's orphan ``batch-{id}`` dir
     is rebuilt in place."""
-    from pyspark.sql import functions as F
-
     from atlassian_confluence_data_pipeline_spark.plans.preference import (
-        DPO_WILSON_MIN,
-        WILSON_Z,
         _bt_fit,
+        _dpo_pairs,
+        _winrate_matrix,
     )
     from atlassian_confluence_data_pipeline_spark.sources.shard_sink import (
         append_manifest_batch,
@@ -1160,102 +1095,21 @@ def foreach_batch_dpo_pairs(
     def ingest_batch(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.localCheckpoint(eager=True)
-        both = batch_df.select(
-            F.col("s_a").alias("i"), F.col("s_b").alias("j"), "winner"
-        ).unionByName(
-            batch_df.select(
-                F.col("s_b").alias("i"), F.col("s_a").alias("j"), "winner"
-            )
-        )
-        inc = both.groupBy("i", "j").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.when(F.col("winner") == F.col("i"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("w"),
-        )
-        index_store.write_batch(inc, batch_id)
-        # cumulative matchup matrix INCLUDING this batch (counts are an
-        # additive monoid over the batch partitions)
-        m = (
-            index_store.read(spark, _DUEL_INDEX_SCHEMA)
-            .groupBy("i", "j")
-            .agg(
-                F.sum("n").cast("bigint").alias("n"),
-                F.sum("w").cast("bigint").alias("w"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        bt = _bt_fit(m).select("source", "strength")
-        p = F.col("w").cast("double") / F.col("n")
-        n = F.col("n").cast("double")
-        z = F.lit(WILSON_Z)
-        wilson = (
-            p
-            + z * z / (2 * n)
-            - z * F.sqrt((p * (1 - p) + z * z / (4 * n)) / n)
-        ) / (1 + z * z / n)
-        wl = m.select(
-            F.col("i").alias("chosen_source"),
-            F.col("j").alias("rejected_source"),
-            F.round(wilson, 6).alias("wilson_lb"),
-        )
-        chosen = F.when(
-            F.col("winner") == F.col("s_a"), F.col("id_a")
-        ).otherwise(F.col("id_b"))
-        rejected = F.when(
-            F.col("winner") == F.col("s_a"), F.col("id_b")
-        ).otherwise(F.col("id_a"))
-        rej_src = F.when(
-            F.col("winner") == F.col("s_a"), F.col("s_b")
-        ).otherwise(F.col("s_a"))
-        dpo = batch_df.select(
-            chosen.alias("chosen_doc_id"),
-            rejected.alias("rejected_doc_id"),
-            F.col("winner").alias("chosen_source"),
-            rej_src.alias("rejected_source"),
-        )
-        out = (
-            dpo.join(
-                F.broadcast(
-                    bt.select(
-                        F.col("source").alias("chosen_source"),
-                        F.col("strength").alias("__sc"),
-                    )
-                ),
-                "chosen_source",
-            )
-            .join(
-                F.broadcast(
-                    bt.select(
-                        F.col("source").alias("rejected_source"),
-                        F.col("strength").alias("__sr"),
-                    )
-                ),
-                "rejected_source",
-            )
-            .join(
-                F.broadcast(wl), ["chosen_source", "rejected_source"]
-            )
-            .filter(F.col("wilson_lb") > DPO_WILSON_MIN)
-        )
-        if weights_reader is not None:
+        index_store.write_batch(_duel_increments(batch_df), batch_id)
+        # cumulative matchup matrix INCLUDING this batch
+        m = _cumulative_matchups(spark, index_store).localCheckpoint(eager=True)
+
+        def weigh(pairs):  # noqa: ANN001, ANN202
+            if weights_reader is None:
+                return pairs.withColumn("weight", F.lit(1.0))
             dw = weights_reader(spark).select(
                 F.col("doc_id").alias("chosen_doc_id"), "weight"
             )
-            out = out.join(dw, "chosen_doc_id", "left").withColumn(
+            return pairs.join(dw, "chosen_doc_id", "left").withColumn(
                 "weight", F.coalesce("weight", F.lit(1.0))
             )
-        else:
-            out = out.withColumn("weight", F.lit(1.0))
-        out = out.select(
-            "chosen_doc_id",
-            "rejected_doc_id",
-            "chosen_source",
-            "rejected_source",
-            F.round(F.col("__sc") - F.col("__sr"), 6).alias("margin"),
-            "wilson_lb",
-            "weight",
-        )
+
+        out = _dpo_pairs(batch_df, _bt_fit(m), _winrate_matrix(m), weigh)
         append_manifest_batch(
             spark, out, pairs_out_path, batch_id, fmt="dpo_pairs"
         )

@@ -17,13 +17,16 @@ from atlassian_confluence_data_pipeline_spark.operators.dedup import union_dedup
 from atlassian_confluence_data_pipeline_spark.operators.joins import anti_join, cdc_delta
 from atlassian_confluence_data_pipeline_spark.operators.state import (
     STATE_SCHEMA,
+    AppendIndexStore,
     StateStore,
     merge_state,
 )
 from atlassian_confluence_data_pipeline_spark.pipeline import (
     change_set,
-    incremental_refresh,
     run_with_store,
+)
+from atlassian_confluence_data_pipeline_spark.sources.shard_sink import (
+    read_manifest_batches,
 )
 from tests.domain_fixtures import PAGES_SCHEMA, make_pages, make_state
 
@@ -155,6 +158,21 @@ def test_empty_state_store_runs_no_task(spark, tmp_path):
     assert n == 0 and tasks <= 1
 
 
+def test_empty_index_and_manifest_readers_run_no_task(spark, tmp_path):
+    """An empty AppendIndexStore and an empty manifest artifact read as
+    empty-RDD relations: no task, no Python worker."""
+    idx = AppendIndexStore(str(tmp_path / "idx"))
+    rows, _, tasks = _launched(
+        spark, lambda: idx.read(spark, "doc_id bigint, fp string").collect()
+    )
+    assert rows == [] and tasks == 0
+    out = str(tmp_path / "pairs")
+    rows, _, tasks = _launched(
+        spark, lambda: read_manifest_batches(spark, out, "doc_id bigint").collect()
+    )
+    assert rows == [] and tasks == 0
+
+
 def _reads_snapshot(store, df) -> bool:
     snap = os.path.join(store.path, store.current_snapshot())
     files = df.inputFiles()
@@ -259,9 +277,15 @@ def test_state_store_history_shows_committed_snapshots_only(
     assert store.read(spark).count() == 4
 
 
-def test_incremental_refresh_classification(spark):
-    pages, state = make_pages(spark), make_state(spark)
-    result = incremental_refresh(pages, state, CUTOFF)
+def _seeded_store(spark, tmp_path) -> StateStore:
+    store = StateStore(str(tmp_path / "ledger"))
+    store.write(make_state(spark))
+    return store
+
+
+def test_run_with_store_classification(spark, tmp_path):
+    pages, store = make_pages(spark), _seeded_store(spark, tmp_path)
+    result = run_with_store(spark, pages, store, CUTOFF)
     got = {r["id"]: r for r in result.processed.collect()}
     # page 1: version equal to ledger -> skipped (state_manager.py:72)
     assert "1" not in got
@@ -281,9 +305,9 @@ def test_incremental_refresh_classification(spark):
     assert got["5"]["html"] is None
 
 
-def test_incremental_refresh_no_missing_sweep(spark):
-    pages, state = make_pages(spark), make_state(spark)
-    result = incremental_refresh(pages, state, CUTOFF, check_missing=False)
+def test_run_with_store_no_missing_sweep(spark, tmp_path):
+    pages, store = make_pages(spark), _seeded_store(spark, tmp_path)
+    result = run_with_store(spark, pages, store, CUTOFF, check_missing=False)
     ids = {r["id"] for r in result.processed.collect()}
     # only rows inside the lookback window can appear
     assert ids == {"2", "5", "6"}  # 1 skipped (equal version), 2 updated, 5/6 new
@@ -409,9 +433,9 @@ def test_change_set_matches_union_dedup_cdc_reference(spark, check_missing):
             assert kinds["6"] == (7, "new") and "10" not in kinds
 
 
-def test_stats_aggregation(spark):
-    pages, state = make_pages(spark), make_state(spark)
-    stats = incremental_refresh(pages, state, CUTOFF).stats.collect()
+def test_run_with_store_stats_aggregation(spark, tmp_path):
+    pages, store = make_pages(spark), _seeded_store(spark, tmp_path)
+    stats = run_with_store(spark, pages, store, CUTOFF).stats.collect()
     as_map = {(r["space_key"], r["change_type"]): r["n_pages"] for r in stats}
     assert as_map[("ENG", "new")] == 2  # pages 3, 5
     assert as_map[("ENG", "updated")] == 1  # page 2

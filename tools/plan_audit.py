@@ -109,6 +109,10 @@ INTENTIONAL_BNLJ = {
     "modality_component_agreement",  # four 1-row stat frames crossed
     # into the single audit row (scalar-attach); the contingency and
     # size censuses themselves are equi-joins on component reps
+    "categorical_mutual_information",  # every BNLJ builds on the 1-row
+    # total aggregate (marg.crossJoin(F.broadcast(total)), round 12) or
+    # another 1-row scalar (cardinalities, entropies) crossed into the
+    # per-pair row; the joint/marginal joins are broadcast equi-joins
 }
 
 #: queries whose plans legitimately carry many HOF folds (k parallel

@@ -7,13 +7,16 @@
 
 For every registered query, count the plan nodes that define its scale
 posture (exchanges, join strategies, window forms, aggregates, Python
-eval nodes, parquet scans). ``--check`` exits 1 when any query's shape
-changed — a conf bump, Spark upgrade, or refactor that silently flips a
-BroadcastHashJoin into a SortMergeJoin (or sneaks in a
-BroadcastNestedLoopJoin) fails the gate instead of shipping. Shape
-changes made ON PURPOSE are recorded by re-running ``--write`` and
-committing the new snapshot — the diff then documents itself in the
-PR.
+eval nodes, parquet scans) and the explicit broadcast hints in its
+optimized plan (a forced ``F.broadcast`` the planner would pick anyway
+moves no physical node). Hints inside an eagerly checkpointed stage are
+not in the returned plan, so neither count sees them. ``--check``
+exits 1 when any query's shape changed — a conf bump, Spark upgrade,
+or refactor that silently flips a BroadcastHashJoin into a
+SortMergeJoin (or sneaks in a BroadcastNestedLoopJoin) fails the gate
+instead of shipping. Shape changes made ON PURPOSE are recorded by
+re-running ``--write`` and committing the new snapshot — the diff then
+documents itself in the PR.
 
 ``--check-warm`` gates the session memo's one contract (plans/_cache.py
 holds every memoized build: shared stages, model rows, the BPE fit, the
@@ -71,12 +74,16 @@ MARKERS = {
 }
 
 
-def shape_of(phys: str) -> dict[str, int]:
-    return {
-        key: phys.count(marker)
-        for key, marker in MARKERS.items()
-        if phys.count(marker)
-    }
+#: hint markers counted in the OPTIMIZED logical plan: adding or dropping
+#: an explicit ``F.broadcast`` leaves the physical shape unchanged
+#: whenever the planner picks the same join from size estimates
+HINTS = {"broadcast_hints": "strategy=broadcast"}
+
+
+def shape_of(phys: str, optimized: str) -> dict[str, int]:
+    counts = {key: phys.count(marker) for key, marker in MARKERS.items()}
+    counts.update({key: optimized.count(m) for key, m in HINTS.items()})
+    return {key: n for key, n in counts.items() if n}
 
 
 def collect(sf: str) -> dict[str, dict[str, int]]:
@@ -88,8 +95,10 @@ def collect(sf: str) -> dict[str, dict[str, int]]:
     for name in sorted(QUERIES):
         try:
             df = QUERIES[name].fn(spark, sf)
-            phys = df._jdf.queryExecution().executedPlan().toString()
-            shapes[name] = shape_of(phys)
+            qe = df._jdf.queryExecution()
+            shapes[name] = shape_of(
+                qe.executedPlan().toString(), qe.optimizedPlan().toString()
+            )
         except Exception as e:  # pragma: no cover - robustness
             shapes[name] = {"ERROR": 1, "msg": str(e)[:120]}  # type: ignore[dict-item]
     return shapes
