@@ -23,23 +23,23 @@ graph iteration — measure, then pick the plan):
    tests/test_graph_cc.py).
 
 Scale notes (per round, either phase):
-- ONE symmetric projection, ONE min-aggregate by node, ONE equi-join —
-  all shuffling on node id, map-side combine on the min;
+- min-label round 1 is one aggregate over the symmetric edge list
+  (every label starts as the node's own id, so no join is needed);
+  each later round is ONE min-aggregate by node over the neighbour
+  messages (one equi-join on node id) plus the node's own label;
 - per-round frames are eagerly local-checkpointed (lineage stays O(1);
   on a cluster this becomes `checkpoint()` to durable storage);
-- convergence probes are `isEmpty` / count scalars, never data
-  collects;
+- a min-label round counts its changed labels with an ``Observation``
+  on that same checkpoint pass, so deciding convergence costs no job;
+  star rounds compare edge sets with count / ``isEmpty`` scalars,
+  never data collects;
 - a hot node (one doc near-duplicating millions) makes its
   min-aggregate wide but associative — partial aggregation absorbs it.
-
-``connected_components_minlabel`` / ``connected_components_star`` are
-the two pure strategies, kept as independently-simple cross-checks for
-the adaptive default (identical output, proven by property tests).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -61,40 +61,54 @@ def _symmetric_edges(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
     )
 
 
+def _settle(step: DataFrame) -> tuple[DataFrame, int]:
+    """Checkpoint one min-label round's ``(node, component, prev)``
+    frame as ``(node, component)`` labels; returns them with the number
+    of labels that fell below ``prev``, counted on the same pass."""
+    obs = Observation()
+    labels = (
+        step.observe(
+            obs,
+            F.count(F.when(F.col("component") < F.col("prev"), 1)).alias("changed"),
+        )
+        .select("node", "component")
+        .localCheckpoint(eager=True)
+    )
+    return labels, obs.get["changed"]
+
+
 def _minlabel_rounds(
-    edges: DataFrame, labels: DataFrame, max_rounds: int
+    edges: DataFrame, max_rounds: int
 ) -> tuple[DataFrame, bool, int]:
-    """Up to ``max_rounds`` min-label sweeps; returns (labels,
-    converged, rounds_used)."""
-    used = 0
-    for _ in range(max_rounds):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("component").alias("neighbor_component"))
+    """Up to ``max_rounds`` min-label sweeps from every node labelled
+    with its own id; returns (labels, converged, rounds_used). Like an
+    equi-join, a round neither sends to nor receives from a null id, so
+    a null node keeps the null label it starts with."""
+    labels, changed = _settle(
+        edges.groupBy("src")
+        .agg(
+            F.when(
+                F.col("src").isNotNull(), F.least(F.col("src"), F.min("dst"))
+            ).alias("component")
         )
-        updated = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce("neighbor_component", F.col("component")),
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
+        .select(F.col("src").alias("node"), "component", F.col("src").alias("prev"))
+    )
+    used = 1
+    while changed and used < max_rounds:
+        no_prev = F.lit(None).cast(labels.schema["component"].dataType)
+        messages = (
+            edges.filter(F.col("src").isNotNull())
+            .join(labels, edges.dst == labels.node)
+            .select(F.col("src").alias("node"), "component", no_prev.alias("prev"))
         )
-        changed = (
-            updated.alias("new")
-            .join(labels.alias("old"), "node")
-            .filter(F.col("new.component") != F.col("old.component"))
+        own = labels.select("node", "component", F.col("component").alias("prev"))
+        labels, changed = _settle(
+            messages.unionByName(own)
+            .groupBy("node")
+            .agg(F.min("component").alias("component"), F.min("prev").alias("prev"))
         )
-        converged = changed.isEmpty()
-        labels = updated
         used += 1
-        if converged:
-            return labels, True, used
-    return labels, False, used
+    return labels, not changed, used
 
 
 def _star_rounds(
@@ -174,14 +188,8 @@ def connected_components(
     ``stats["rounds"]`` (total) and ``stats["escalated"]``.
     """
     edges = _symmetric_edges(pairs, a_col, b_col)
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component"))
-        .localCheckpoint(eager=True)
-    )
     labels, converged, used = _minlabel_rounds(
-        edges, labels, min(ESCALATE_AFTER, max_iter)
+        edges, min(ESCALATE_AFTER, max_iter)
     )
     if converged:
         if stats is not None:
@@ -227,57 +235,3 @@ def connected_components(
         stats["escalated"] = True
     _record_rounds("connected_components", used + star_used)
     return out
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str,
-    b_col: str,
-    max_iter: int = 50,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Pure alternating star contraction (O(log n) rounds regardless of
-    shape) — the deep-graph strategy, runnable standalone."""
-    nodes = (
-        pairs.select(F.col(a_col).alias("node"))
-        .unionByName(pairs.select(F.col(b_col).alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    e0 = (
-        pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    star_edges, rounds = _star_rounds(e0, max_iter)
-    if stats is not None:
-        stats["rounds"] = rounds
-    _record_rounds("connected_components_star", rounds)
-    # one row per node even if max_iter expired mid-contraction (see
-    # connected_components: un-converged star forests can carry several
-    # edges per node)
-    roots = star_edges.groupBy("a").agg(F.min("b").alias("root"))
-    return nodes.join(
-        roots.select(F.col("a").alias("node"), "root"),
-        "node",
-        "left",
-    ).select(
-        "node", F.coalesce("root", F.col("node")).alias("component")
-    )
-
-
-def connected_components_minlabel(
-    pairs: DataFrame, a_col: str, b_col: str, max_iter: int = 50
-) -> DataFrame:
-    """Pure min-label propagation — O(component diameter) rounds; the
-    independently-simple cross-check implementation."""
-    edges = _symmetric_edges(pairs, a_col, b_col)
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component"))
-        .localCheckpoint(eager=True)
-    )
-    labels, _, _ = _minlabel_rounds(edges, labels, max_iter)
-    return labels

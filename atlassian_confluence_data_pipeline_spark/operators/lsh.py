@@ -1,9 +1,14 @@
 """Locality-sensitive hashing for near-duplicate detection at scale
 (extension X2): MinHash + banded LSH, and SimHash with chunk-banding.
 
-All pure built-in expressions (higher-order array functions, modular
-arithmetic, bit ops) — JVM-side, no UDFs, no ML-pipeline fitting step,
-fully deterministic. The candidate-pair joins are *equi-joins on band
+MinHash and SimHash are pure built-in expressions (higher-order array
+functions, modular arithmetic, bit ops) — JVM-side, no UDFs, no
+ML-pipeline fitting step, fully deterministic. The one exception is the
+SRP fingerprint of dense vectors (:func:`with_srp_fingerprint`): a
+``mapInArrow`` numpy kernel, because its 64 interpreted per-row folds
+cost about a second of plan building and a second of execution per 500
+64-d rows; the kernel keeps the fold's exact summation order, so it is
+just as deterministic. The candidate-pair joins are *equi-joins on band
 keys*: each document only ever meets documents sharing a band bucket,
 so the pair count stays near-linear in corpus size — the property that
 makes near-dup feasible at 100 TB where exact all-pairs Jaccard is
@@ -111,123 +116,61 @@ def with_srp_fingerprint(
     The hyperplane matrix is never stored: its sign at dimension j is
     the affine-hash bit ``(a_i*j + b_i) mod M >= M/2`` — the same
     formula regenerates it in any engine, which is what lets DuckDB
-    reproduce every fingerprint bit-for-bit. Each of the ``bits``
-    running dots is its own plain-double left fold (inner
-    ``F.aggregate`` inside one ``F.transform`` over the bit index, with
-    the affine constants shipped as literal arrays), staged across
-    THREE projections so the zipped vector and the dot array are bound
-    columns, never re-inlined per reference.
+    reproduce every fingerprint bit-for-bit. One ``mapInArrow`` kernel
+    computes all ``bits`` dots of a batch at once, but each dot is
+    still the plain-double LEFT fold ``acc + (±v_j)`` from 0.0 over the
+    dimensions in order (vectorised over rows x bits, never a matmul,
+    whose summation order differs), so it is bit-identical to Spark's
+    ``aggregate`` fold over the same terms and to the oracle's
+    ``list_sum``. Bit 63 lands on the two's-complement sign bit —
+    downstream chunking uses unsigned shifts (simhash_near_pairs).
 
-    PERF: this replaced a single fold with a ``bits``-slot struct
-    accumulator — which rebuilt a 64-field struct per element, ~25x
-    slower (2.9s -> 0.1s warm for 2000x64-d) with bit-identical output.
-    Each fold accumulates left-to-right in double precision,
-    bit-identical to the oracle's list_sum. Bit 63 lands on the
-    two's-complement sign bit — downstream chunking uses unsigned
-    shifts (simhash_near_pairs)."""
-    # stage construction notes (both measured): the affine constants
-    # must be F.lit ARRAY LITERALS — an `array(1L, 2L, ...)` inside an
-    # expr-string lambda is NOT constant-folded and would be rebuilt
-    # per fold step; and the 64-term bit-pack must be ONE expr string —
-    # building its OR-chain through the Column API costs hundreds of
-    # py4j roundtrips (~1s of driver time per plan build)
-    perms = SRP_PERMS[:bits]
-    a_lit = F.lit([a for a, _ in perms])
-    b_lit = F.lit([b for _, b in perms])
-    vec = F.col(vec_col)
-    zipped = F.zip_with(
-        vec,
-        F.sequence(F.lit(0).cast("bigint"), F.size(vec).cast("bigint") - 1),
-        lambda x, i: F.struct(x.cast("double").alias("val"), i.alias("pos")),
-    )
-    cols = list(df.columns)
-    z = df.select(*cols, zipped.alias("__srp_z"))
-    dots = F.transform(
-        F.sequence(F.lit(0), F.lit(bits - 1)),
-        lambda i: F.aggregate(
-            F.col("__srp_z"),
-            F.lit(0.0),
-            lambda acc, e: acc
-            + F.when(
-                (F.element_at(a_lit, i + 1) * e["pos"] + F.element_at(b_lit, i + 1))
-                % ROLLING_MOD
-                >= SIMHASH_THRESHOLD,
-                e["val"],
-            ).otherwise(-e["val"]),
-        ),
-    )
-    d = z.select(*cols, dots.alias("__srp_d"))
-    pack = " | ".join(
-        f"IF(element_at(__srp_d, {i + 1}) >= CAST(0.0 AS DOUBLE), "
-        f"SHIFTLEFT(CAST(1 AS BIGINT), {i}), CAST(0 AS BIGINT))"
-        for i in range(bits)
-    )
-    return d.select(*cols, F.expr(pack).alias(out_col))
-
-
-def with_srp_fingerprint_arrow(
-    df: DataFrame, vec_col: str, out_col: str = "simhash", bits: int = 64
-) -> DataFrame:
-    """PRODUCTION-scale variant of :func:`with_srp_fingerprint`: one
-    numpy matmul per Arrow batch (``mapInPandas``) instead of the
-    interpreted per-bit HOF folds — same affine hyperplane family, so
-    the two agree except when a running dot sits within float round-off
-    of ZERO (numpy's pairwise summation reorders the adds). That sign-
-    boundary slack is exactly what the candidate/verify split absorbs:
-    SRP candidates are approximate by construction and every surviving
-    pair is re-checked with EXACT cosine downstream, so swapping this in
-    for the fold changes recall by at most the measure-zero boundary
-    set — not correctness. The oracle-paired queries keep the portable
-    fold (bit-reproducible in DuckDB); point a production job here when
-    the corpus is large enough that interpreted HOF cost dominates
-    (~64*dim interpreted steps/row vs one BLAS GEMM per batch).
-
-    Requires a fixed vector dimension within each Arrow batch (the
-    standard embedding-corpus contract); the hyperplane matrix is
-    rebuilt per observed dimension, never shipped."""
+    Edge rows follow Spark's semantics for that fold: a NaN dot sets
+    its bit (NaN >= 0.0 is true in Spark); a null vector, a null
+    element or an empty array gives fingerprint 0; vectors of different
+    dimensions may share a batch (shorter rows are padded with 0.0,
+    which leaves a running sum that starts at +0.0 unchanged)."""
     from pyspark.sql import types as T
 
-    from atlassian_confluence_data_pipeline_spark.pyfiles import (
-        ensure_package_on_workers,
-    )
-
-    ensure_package_on_workers()
     perms = SRP_PERMS[:bits]
     mod, thr = ROLLING_MOD, SIMHASH_THRESHOLD
+    names = list(df.columns) + [out_col]
     schema = T.StructType(
         list(df.schema.fields) + [T.StructField(out_col, T.LongType())]
     )
 
-    def _fp(batches):
+    def _kernel(batches):
         import numpy as np
-        import pandas as pd  # noqa: F401  (Arrow batches arrive as pandas)
+        import pyarrow as pa
 
-        planes: dict[int, "np.ndarray"] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vs = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            dim = vs.shape[1]
-            if dim not in planes:
-                planes[dim] = np.array(
-                    [
-                        [
-                            1.0 if (a * j + b) % mod >= thr else -1.0
-                            for (a, b) in perms
-                        ]
-                        for j in range(dim)
-                    ]
-                )
-            dots = vs @ planes[dim]
-            bitm = (dots >= 0.0).astype(np.uint64)
-            fp = np.zeros(len(pdf), dtype=np.uint64)
-            for i in range(bits):
-                fp |= bitm[:, i] << np.uint64(i)
-            out = pdf.copy()
-            out[out_col] = fp.view(np.int64)
-            yield out
+        a = np.array([p[0] for p in perms], dtype=np.int64)
+        b = np.array([p[1] for p in perms], dtype=np.int64)
+        bit_values = np.uint64(1) << np.arange(len(perms), dtype=np.uint64)
+        for batch in batches:
+            vecs = batch.column(vec_col)
+            lens = vecs.value_lengths().fill_null(0).to_numpy(zero_copy_only=False)
+            flat = vecs.flatten().cast(pa.float64())
+            rows = np.repeat(np.arange(len(lens)), lens)
+            pos = np.arange(len(flat)) - np.repeat(np.cumsum(lens) - lens, lens)
+            null_elem = np.bincount(
+                rows[flat.is_null().to_numpy(zero_copy_only=False)],
+                minlength=len(lens),
+            )
+            valid = (lens > 0) & (null_elem == 0)
+            x = np.zeros((len(lens), int(lens.max(initial=0))))
+            x[rows, pos] = flat.fill_null(0.0).to_numpy(zero_copy_only=False)
+            acc = np.zeros((len(lens), len(perms)))
+            with np.errstate(over="ignore", invalid="ignore"):  # inf/NaN rows
+                for j in range(x.shape[1]):
+                    sign = np.where((a * j + b) % mod >= thr, 1.0, -1.0)
+                    acc += x[:, j, None] * sign
+            set_bits = ((acc >= 0.0) | np.isnan(acc)) & valid[:, None]
+            fp = (set_bits * bit_values).sum(axis=1, dtype=np.uint64)
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + [pa.array(fp.view(np.int64))], names=names
+            )
 
-    return df.mapInPandas(_fp, schema=schema)
+    return df.mapInArrow(_kernel, schema)
 
 
 def minhash_signature(

@@ -23,7 +23,7 @@ training-data pipeline runs:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -544,6 +544,15 @@ BPE_MERGES = 8
 #: do contain it are excluded in BOTH engines)
 _BPE_D = "\x01"
 
+#: distinct words the BPE fit collects to the driver to pick its
+#: merges; a larger vocabulary raises :class:`BpeVocabularyTooLarge`
+#: instead of being collected
+BPE_MAX_VOCAB = 1_000_000
+
+
+class BpeVocabularyTooLarge(ValueError):
+    """The corpus has more distinct words than ``BPE_MAX_VOCAB``."""
+
 
 def _bpe_blocks() -> tuple[list, str]:
     """The BPE training CTE chain; returns (blocks, final it-table) so
@@ -623,9 +632,9 @@ def bpe_merge_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (the standard tokenizer-training reduction): the corpus
     is touched ONCE by the word-count aggregate; the loop then runs
-    over the vocab-sized (word, freq, symbols) table — checkpointed to
-    one partition — so each round is one small aggregate job
-    (collect-model: the argmax row only). The merge-apply is a pure
+    on the driver over the vocab-sized (word, freq, symbols) table,
+    checkpointed to one partition and collected once (bounded by
+    BPE_MAX_VOCAB), so a round launches no job. The merge-apply is a pure
     string rewrite (sentinel-join + replace + split) with identical
     greedy non-overlapping left-to-right semantics in Spark and DuckDB,
     which is what lets the unrolled-CTE oracle reproduce the rewrites
@@ -645,11 +654,9 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     """The trained tokenizer: (final (word, freq, seq) frame with all
     learned merges applied, merge list). Four registry queries (merge
     table, census, tokenized packing, per-source fertility) need the
-    SAME BPE_MERGES-round fit, and each fit is ~9 sequential driver
-    jobs (word-count checkpoint + one argmax collect per round), so it
-    is trained once per session through the session memo
-    (plans/_cache.py) — model-sized state, rebuilt from the fixtures by
-    every new session."""
+    SAME BPE_MERGES-round fit, so it is trained once per session
+    through the session memo (plans/_cache.py) — model-sized state,
+    rebuilt from the fixtures by every new session."""
     from atlassian_confluence_data_pipeline_spark.plans._cache import (
         shared_pair_table,
     )
@@ -657,11 +664,32 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     return shared_pair_table(spark, sf_dir, "bpe_train", _bpe_fit)
 
 
+def _bpe_rewrite(seq, s1: str, s2: str):
+    """Merge every (s1, s2) in a symbol sequence, greedily left to
+    right without overlap: the sentinel string rewrite, written once
+    for a ``seq`` Column and once for a Python list."""
+    d = _BPE_D
+    pair, merged = d + s1 + d + d + s2 + d, d + s1 + s2 + d
+    if isinstance(seq, list):
+        joined = d + (d + d).join(seq) + d
+        return joined.replace(pair, merged).strip(d).split(d + d)
+    joined = F.concat(F.lit(d), F.array_join(seq, d + d), F.lit(d))
+    rewritten = F.replace(joined, F.lit(pair), F.lit(merged))
+    return F.split(F.btrim(rewritten, F.lit(d)), d + d)
+
+
 def _bpe_fit(spark: SparkSession, sf_dir: str):
-    """Run the BPE training loop behind :func:`_bpe_train`. The fit is
-    a deterministic function of the fixtures; the final frame is an
-    eager localCheckpoint so consumers also skip re-running the
-    BPE_MERGES row-local rewrites."""
+    """Run the BPE training loop behind :func:`_bpe_train`. The
+    vocabulary-sized (word, freq, seq) table is checkpointed once and
+    its (freq, seq) rows collected; each round's pair count and argmax
+    (weight desc, then s1 and s2 by code point, Spark's string order)
+    runs in Python over them, stopping early when no word has two
+    symbols left. The final frame chains the learned rewrites lazily
+    over the checkpointed table and is checkpointed once, so consumers
+    skip re-running them. Raises
+    :class:`BpeVocabularyTooLarge` (observed on the table's own
+    checkpoint pass) rather than collect more than ``BPE_MAX_VOCAB``
+    rows."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         F.explode(
@@ -672,57 +700,39 @@ def _bpe_fit(spark: SparkSession, sf_dir: str):
         F.sequence(F.lit(1), F.length("word")),
         lambda i: F.col("word").substr(i, F.lit(1)),
     )
+    obs = Observation()
     wf = (
         toks.filter(~F.col("word").contains(_BPE_D))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select("word", "freq", chars.alias("seq"))
         .coalesce(1)
+        .observe(obs, F.count(F.lit(1)).alias("n_words"))
         .localCheckpoint(eager=True)
     )
-    cur = wf
+    if obs.get["n_words"] > BPE_MAX_VOCAB:
+        raise BpeVocabularyTooLarge(
+            f"{obs.get['n_words']} distinct words > BPE_MAX_VOCAB={BPE_MAX_VOCAB}"
+        )
+    vocab = [(r["freq"], r["seq"]) for r in wf.select("freq", "seq").collect()]
     merges = []
     for step in range(1, BPE_MERGES + 1):
-        pairs = cur.filter(F.size("seq") >= 2).select(
-            "freq",
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("seq"), 1, F.size("seq") - 1),
-                    F.slice(F.col("seq"), 2, F.size("seq") - 1),
-                    lambda a, b: F.struct(a.alias("s1"), b.alias("s2")),
-                )
-            ).alias("pr"),
-        )
-        best = (
-            pairs.groupBy(F.col("pr.s1").alias("s1"), F.col("pr.s2").alias("s2"))
-            .agg(F.sum("freq").cast("bigint").alias("w"))
-            .orderBy(F.desc("w"), F.asc("s1"), F.asc("s2"))
-            .limit(1)
-            .collect()[0]
-        )
-        s1, s2, w = best["s1"], best["s2"], int(best["w"])
+        weights: dict[tuple[str, str], int] = {}
+        for freq, seq in vocab:
+            for pair in zip(seq, seq[1:]):
+                weights[pair] = weights.get(pair, 0) + freq
+        if not weights:
+            break
+        (s1, s2), w = min(weights.items(), key=lambda kv: (-kv[1], kv[0]))
         merges.append((step, s1, s2, s1 + s2, w))
-        joined = F.concat(
-            F.lit(_BPE_D), F.array_join("seq", _BPE_D + _BPE_D), F.lit(_BPE_D)
-        )
-        rewritten = F.replace(
-            joined,
-            F.lit(_BPE_D + s1 + _BPE_D + _BPE_D + s2 + _BPE_D),
-            F.lit(_BPE_D + s1 + s2 + _BPE_D),
-        )
-        # lazy chain over the checkpointed vocab table: round t redoes
-        # t-1 row-local string rewrites (vocab-sized, trivial) instead
-        # of paying a checkpoint job per round
-        cur = cur.select(
-            "word",
-            "freq",
-            F.split(F.btrim(rewritten, F.lit(_BPE_D)), _BPE_D + _BPE_D).alias(
-                "seq"
-            ),
-        )
+        vocab = [(freq, _bpe_rewrite(seq, s1, s2)) for freq, seq in vocab]
+    cur = wf
+    for _step, s1, s2, _merged, _w in merges:
+        seq = _bpe_rewrite(F.col("seq"), s1, s2)
+        cur = cur.select("word", "freq", seq.alias("seq"))
     from atlassian_confluence_data_pipeline_spark import iterstats
 
-    iterstats.record("bpe_merge_iterations", BPE_MERGES)
+    iterstats.record("bpe_merge_iterations", len(merges))
     return cur.localCheckpoint(eager=True), merges
 
 

@@ -396,7 +396,11 @@ def shingle_df_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _srp_fingerprint_cte() -> str:
     """Oracle CTEs reproducing operators/lsh.with_srp_fingerprint bit-
     for-bit (same affine hyperplane family as the embedding_lsh_pairs
-    oracle in plans/curation.py)."""
+    oracle in plans/curation.py): each ``list_sum`` adds the signed
+    terms left to right from 0, the order of the kernel's fold. It does
+    not copy the kernel's null rules (``list_sum`` skips a null
+    element, where the kernel gives fingerprint 0); the embeddings
+    fixtures hold no nulls."""
     dots = ",\n         ".join(
         f"list_sum(list_transform(range(1, len(v)+1), j -> "
         f"CASE WHEN ({a} * (j-1) + {b}) % {ROLLING_MOD} >= {SIMHASH_THRESHOLD} "

@@ -128,17 +128,6 @@ def _both_orientations(cmp: DataFrame) -> DataFrame:
     )
 
 
-def _duels_both(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """:func:`_both_orientations` of the session-staged duel frame
-    (plans/_cache.py), so the offset-explode corpus join runs once per
-    session, not once per preference consumer."""
-    from atlassian_confluence_data_pipeline_spark.plans._cache import (
-        preference_duel_frame,
-    )
-
-    return _both_orientations(preference_duel_frame(spark, sf_dir))
-
-
 def wilson_lb(wins: Column, n: Column) -> Column:
     """The 95% Wilson LOWER bound on a win rate of ``wins`` in ``n``
     duels, rounded to 6 places: the one Spark copy, which the batch and
@@ -566,9 +555,13 @@ def preference_cycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     or genuinely non-transitive — audit BEFORE fitting. Joins run on
     the matchup-level edge list (bounded by contestant pairs, not
     duels); each cycle is counted once by anchoring at its smallest
-    node."""
-    duels = _duels_both(spark, sf_dir)
-    m = _matchup_matrix(duels)
+    node. Reads the session-staged matchup grid
+    (``_cache.preference_matchups``) its three sibling queries share."""
+    from atlassian_confluence_data_pipeline_spark.plans._cache import (
+        preference_matchups,
+    )
+
+    m = preference_matchups(spark, sf_dir)
     rec = m.alias("a").join(
         m.select(
             F.col("i").alias("j2"), F.col("j").alias("i2"), F.col("w").alias("w_ji")
@@ -599,9 +592,7 @@ def preference_cycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(e3t, ["x", "z"])
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_transitive_triples"))
     )
-    n_sources = duels.agg(
-        F.count_distinct("i").cast("bigint").alias("n_sources")
-    )
+    n_sources = m.agg(F.count_distinct("i").cast("bigint").alias("n_sources"))
     n_edges = edges.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
     out = (
         n_sources.crossJoin(n_edges).crossJoin(cycles).crossJoin(transitive)

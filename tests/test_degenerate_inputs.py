@@ -1,11 +1,20 @@
 """Queries on degenerate inputs: an empty documents table and one whose
 text is all null must return the query's declared schema with no rows,
-not raise on an undefined eager scalar."""
+not raise on an undefined eager scalar. Likewise a BPE fit with no
+adjacent symbol pair to merge, and connected components over no
+pairs."""
 
 from __future__ import annotations
 
 import pytest
 
+from atlassian_confluence_data_pipeline_spark.operators.graph import (
+    connected_components,
+)
+from atlassian_confluence_data_pipeline_spark.plans.curation2 import (
+    bpe_merge_iterations,
+    bpe_token_census,
+)
 from atlassian_confluence_data_pipeline_spark.plans.pretrain import (
     interpolated_lm_perplexity,
 )
@@ -25,3 +34,33 @@ def test_interpolated_lm_perplexity_on_no_text(spark, sf_dir, tmp_path, n_docs):
     out = interpolated_lm_perplexity(spark, str(tmp_path))
     assert out.schema == declared
     assert out.collect() == []
+
+
+@pytest.mark.parametrize(
+    "texts, census",
+    [([], []), (["a b a", "c"], [("a", 2, 1), ("b", 1, 2), ("c", 1, 3)])],
+    ids=["empty", "one_symbol_words"],
+)
+def test_bpe_token_census_with_no_pair_to_merge(spark, sf_dir, tmp_path, texts, census):
+    """No word with two symbols means no merge: the fit stops, and the
+    census counts the unmerged symbols (none on an empty table)."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    declared = bpe_token_census(spark, sf_dir).schema
+    rows = docs.limit(len(texts)).collect()
+    degenerate = spark.createDataFrame(
+        [r.asDict() | {"text": t} for r, t in zip(rows, texts)], docs.schema
+    )
+    degenerate.write.parquet(str(tmp_path / "documents.parquet"))
+    out = bpe_token_census(spark, str(tmp_path))
+    assert out.schema == declared
+    assert [tuple(r) for r in out.orderBy("rnk").collect()] == census
+    assert bpe_merge_iterations(spark, str(tmp_path)).collect() == []
+
+
+def test_connected_components_over_no_pairs(spark):
+    pairs = spark.createDataFrame([], "a bigint, b bigint")
+    stats: dict = {}
+    out = connected_components(pairs, "a", "b", stats=stats)
+    assert out.collect() == []
+    assert stats == {"rounds": 1, "escalated": False}
+    assert out.columns == ["node", "component"]

@@ -2,20 +2,121 @@
 first, star contraction on the label-contracted graph for deep shapes.
 Output equivalence with both pure strategies on random graphs, the
 O(log n) total-round bound on the adversarial deep path, and the
-cheap-path guarantee that shallow graphs never escalate."""
+cheap-path guarantee that shallow graphs never escalate.
+
+The two pure strategies live here as references. The min-label one
+keeps the earlier round loop verbatim (join → aggregate → join per
+round, then an ``isEmpty`` join for convergence), so the package's
+one-aggregate rounds are checked against it for labels, round counts
+and the job budget."""
 
 from __future__ import annotations
 
 import math
 import random
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from atlassian_confluence_data_pipeline_spark.operators.graph import (
+    _star_rounds,
+    _symmetric_edges,
     connected_components,
-    connected_components_minlabel,
-    connected_components_star,
 )
+from tests.test_state_and_pipeline import _launched
+
+
+def _minlabel_rounds(
+    edges: DataFrame, labels: DataFrame, max_rounds: int
+) -> tuple[DataFrame, bool, int]:
+    """Up to ``max_rounds`` min-label sweeps; returns (labels,
+    converged, rounds_used)."""
+    used = 0
+    for _ in range(max_rounds):
+        neighbor_min = (
+            edges.join(labels, edges.dst == labels.node)
+            .groupBy("src")
+            .agg(F.min("component").alias("neighbor_component"))
+        )
+        updated = (
+            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
+            .select(
+                "node",
+                F.least(
+                    F.col("component"),
+                    F.coalesce("neighbor_component", F.col("component")),
+                ).alias("component"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        changed = (
+            updated.alias("new")
+            .join(labels.alias("old"), "node")
+            .filter(F.col("new.component") != F.col("old.component"))
+        )
+        converged = changed.isEmpty()
+        labels = updated
+        used += 1
+        if converged:
+            return labels, True, used
+    return labels, False, used
+
+
+def _minlabel_reference(pairs, a_col, b_col, max_iter):
+    edges = _symmetric_edges(pairs, a_col, b_col)
+    labels = (
+        edges.select(F.col("src").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("component"))
+        .localCheckpoint(eager=True)
+    )
+    return _minlabel_rounds(edges, labels, max_iter)
+
+
+def connected_components_minlabel(
+    pairs: DataFrame, a_col: str, b_col: str, max_iter: int = 50
+) -> DataFrame:
+    """Pure min-label propagation — O(component diameter) rounds; the
+    independently-simple cross-check implementation."""
+    labels, _, _ = _minlabel_reference(pairs, a_col, b_col, max_iter)
+    return labels
+
+
+def connected_components_star(
+    pairs: DataFrame,
+    a_col: str,
+    b_col: str,
+    max_iter: int = 50,
+    stats: dict | None = None,
+) -> DataFrame:
+    """Pure alternating star contraction (O(log n) rounds regardless of
+    shape) — the deep-graph strategy, runnable standalone."""
+    nodes = (
+        pairs.select(F.col(a_col).alias("node"))
+        .unionByName(pairs.select(F.col(b_col).alias("node")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    e0 = (
+        pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    star_edges, rounds = _star_rounds(e0, max_iter)
+    if stats is not None:
+        stats["rounds"] = rounds
+    # one row per node even if max_iter expired mid-contraction (see
+    # connected_components: un-converged star forests can carry several
+    # edges per node)
+    roots = star_edges.groupBy("a").agg(F.min("b").alias("root"))
+    return nodes.join(
+        roots.select(F.col("a").alias("node"), "root"),
+        "node",
+        "left",
+    ).select(
+        "node", F.coalesce("root", F.col("node")).alias("component")
+    )
 
 
 def _labels(df):
@@ -95,11 +196,6 @@ def test_exhausted_star_budget_still_one_row_per_node(spark):
     may carry partial components, but it must still be exactly ONE row
     per node (un-converged star forests hold several edges per label —
     the root join reduces them, never fans out)."""
-    from atlassian_confluence_data_pipeline_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
     n = 64
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "a bigint, b bigint"
@@ -113,3 +209,44 @@ def test_exhausted_star_budget_still_one_row_per_node(spark):
         rows = fn(pairs, "a", "b", max_iter=max_iter).collect()
         assert len(rows) == n, f"{fn.__name__} max_iter={max_iter}"
         assert len({r["node"] for r in rows}) == n
+
+
+def test_rounds_match_reference_on_shallow_graphs_with_null_ids(spark):
+    """Where min-label converges within the budget, the package's
+    rounds give the reference loop's labels in the same round count —
+    null ids included (an equi-join never matches them, so a null node
+    keeps a null label and passes none on)."""
+    rng = random.Random(9)
+    cliques = [
+        (base + rng.randrange(6), base + rng.randrange(6))
+        for base in range(0, 60, 6)
+        for _ in range(10)
+    ]
+    nulls = [(None, 3), (4, None), (None, None), (70, 70)]
+    pairs = spark.createDataFrame(cliques + nulls, "a bigint, b bigint")
+    ref, converged, used = _minlabel_reference(pairs, "a", "b", 8)
+    stats: dict = {}
+    got = _labels(connected_components(pairs, "a", "b", stats=stats))
+    assert converged and stats == {"rounds": used, "escalated": False}
+    assert got == _labels(ref) and (None, None) in got
+
+
+def test_path_rounds_fit_half_the_reference_jobs(spark):
+    """A 6-edge path takes 7 min-label rounds either way (6 hops, then
+    one round that changes nothing). The reference loop launches 81
+    jobs there: one aggregate per round, with its change count observed
+    on the round's checkpoint pass, must launch at most half of that."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], "a bigint, b bigint"
+    )
+    (ref, converged, used), _, _ = _launched(
+        spark, lambda: _minlabel_reference(pairs, "a", "b", 8)
+    )
+    stats: dict = {}
+    out, jobs, _ = _launched(
+        spark, lambda: connected_components(pairs, "a", "b", stats=stats)
+    )
+    assert converged and used == 7
+    assert stats == {"rounds": 7, "escalated": False}
+    assert _labels(out) == _labels(ref) == {(i, 0) for i in range(7)}
+    assert jobs <= 81 // 2, jobs

@@ -5,17 +5,26 @@ a brute-force Jaccard computation."""
 
 from __future__ import annotations
 
+import os
 import random
 
+import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from atlassian_confluence_data_pipeline_spark.catalog import load_table
+from atlassian_confluence_data_pipeline_spark.functions.text import ROLLING_MOD
 from atlassian_confluence_data_pipeline_spark.operators.lsh import (
+    SIMHASH_THRESHOLD,
+    SRP_PERMS,
     minhash_lsh_candidates,
     simhash,
     simhash_near_pairs,
     verify_candidates_jaccard,
+    with_srp_fingerprint,
 )
 from atlassian_confluence_data_pipeline_spark.plans.textops import _shingles, _words
+from perfbench.tables import build_tables
 
 
 def _corpus(spark):
@@ -112,24 +121,93 @@ def test_srp_fingerprint_recalls_planted_vector_pair(spark):
     assert got == {(1, 2)}
 
 
-def test_srp_arrow_variant_matches_portable_fold(spark, sf_dir):
-    """The production numpy-matmul SRP path must produce the same
-    fingerprints as the oracle-portable HOF fold on the fixture corpus
-    (they can differ only when a running dot sits within float
-    round-off of zero — absent from the fixture by measure)."""
-    from atlassian_confluence_data_pipeline_spark.catalog import load_table
-    from atlassian_confluence_data_pipeline_spark.operators.lsh import (
-        with_srp_fingerprint,
-        with_srp_fingerprint_arrow,
+def _reference_srp_fingerprint(
+    df: DataFrame, vec_col: str, out_col: str = "simhash", bits: int = 64
+) -> DataFrame:
+    """The SRP fingerprint as 64 interpreted Spark folds: each bit's dot
+    is an ``F.aggregate`` left fold in double precision over the
+    (value, position) pairs, and the bits pack in one expression. The
+    kernel in operators/lsh.py must match it bit for bit."""
+    perms = SRP_PERMS[:bits]
+    a_lit = F.lit([a for a, _ in perms])
+    b_lit = F.lit([b for _, b in perms])
+    vec = F.col(vec_col)
+    zipped = F.zip_with(
+        vec,
+        F.sequence(F.lit(0).cast("bigint"), F.size(vec).cast("bigint") - 1),
+        lambda x, i: F.struct(x.cast("double").alias("val"), i.alias("pos")),
     )
+    cols = list(df.columns)
+    z = df.select(*cols, zipped.alias("__srp_z"))
+    dots = F.transform(
+        F.sequence(F.lit(0), F.lit(bits - 1)),
+        lambda i: F.aggregate(
+            F.col("__srp_z"),
+            F.lit(0.0),
+            lambda acc, e: acc
+            + F.when(
+                (F.element_at(a_lit, i + 1) * e["pos"] + F.element_at(b_lit, i + 1))
+                % ROLLING_MOD
+                >= SIMHASH_THRESHOLD,
+                e["val"],
+            ).otherwise(-e["val"]),
+        ),
+    )
+    d = z.select(*cols, dots.alias("__srp_d"))
+    pack = " | ".join(
+        f"IF(element_at(__srp_d, {i + 1}) >= CAST(0.0 AS DOUBLE), "
+        f"SHIFTLEFT(CAST(1 AS BIGINT), {i}), CAST(0 AS BIGINT))"
+        for i in range(bits)
+    )
+    return d.select(*cols, F.expr(pack).alias(out_col))
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    fold = {
+
+def _fingerprints(fn, df):
+    return {
         r["vec_id"]: r["simhash"]
-        for r in with_srp_fingerprint(emb, "embedding").select("vec_id", "simhash").collect()
+        for r in fn(df, "embedding").select("vec_id", "simhash").collect()
     }
-    arrow = {
-        r["vec_id"]: r["simhash"]
-        for r in with_srp_fingerprint_arrow(emb, "embedding").select("vec_id", "simhash").collect()
-    }
-    assert fold == arrow
+
+
+@pytest.mark.parametrize("fixture", ["sf0.001", "sf0.01", "sf0.1", "generated_sf0.01"])
+def test_srp_kernel_matches_reference_fold_on_embeddings(spark, sf_dir, fixture):
+    """The three fixture scales beside the test fixture, and the
+    generated benchmark embeddings (perfbench/tables.py, sf=0.01)."""
+    if fixture.startswith("generated"):
+        table = build_tables(1, 0.01)["embeddings"].select(["vec_id", "embedding"])
+        emb = spark.createDataFrame(table.to_pandas())
+    else:
+        path = os.path.join(os.path.dirname(sf_dir), fixture)
+        emb = load_table(spark, path, "embeddings").select("vec_id", "embedding")
+    want = _fingerprints(_reference_srp_fingerprint, emb)
+    assert len(want) >= 500
+    assert _fingerprints(with_srp_fingerprint, emb) == want
+
+
+def test_srp_kernel_matches_reference_fold_on_edge_rows(spark):
+    """Null vector, null element, NaN, ±inf, empty array, one element,
+    −0.0 and ragged dimensions, all in one Arrow batch."""
+    nan, inf = float("nan"), float("inf")
+    rng = random.Random(3)
+    rows = [
+        (1, None),
+        (2, [0.25, None, -1.0]),
+        (3, [nan, 1.0]),
+        (4, [inf, -inf]),
+        (5, [inf, 2.0, -3.0]),
+        (6, [-inf]),
+        (7, []),
+        (8, [0.5]),
+        (9, [-0.0]),
+        (10, [-0.0, 0.0, -0.0]),
+        (11, [1e308, 1e308, -1e308]),
+    ] + [
+        (100 + k, [rng.uniform(-1, 1) for _ in range(rng.randrange(1, 130))])
+        for k in range(40)
+    ]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>").coalesce(1)
+    want = _fingerprints(_reference_srp_fingerprint, df)
+    got = _fingerprints(with_srp_fingerprint, df)
+    assert got == want
+    assert got[1] == got[2] == got[7] == 0  # null vector / element, empty
+    assert got[3] == -1  # a NaN dot sets its bit

@@ -92,6 +92,9 @@ def test_bt_packed_vs_joined_paths_identical(spark, tmp_path):
     from atlassian_confluence_data_pipeline_spark.plans import (
         preference as P,
     )
+    from atlassian_confluence_data_pipeline_spark.plans._cache import (
+        preference_matchups,
+    )
 
     # 200 distinct sources -> above the 128-contestant packed bound
     rows = [
@@ -99,7 +102,7 @@ def test_bt_packed_vs_joined_paths_identical(spark, tmp_path):
         for d in range(400)
     ]
     sf = _mk_docs(spark, tmp_path, rows)
-    mg = P._matchup_matrix(P._duels_both(spark, sf))
+    mg = preference_matchups(spark, sf)
     packed = {r.source: r for r in P._bt_fit_packed(mg).collect()}
     joined = {r.source: r for r in P._bt_fit_joined(mg).collect()}
     assert packed.keys() == joined.keys() and len(packed) > P.BT_PACKED_MAX_CONTESTANTS

@@ -96,6 +96,114 @@ def test_bpe_weights_non_increasing_and_symbols_shrink(spark):
         assert r.merged == r.left_sym + r.right_sym
 
 
+def _spark_loop_bpe(spark, sf_dir):
+    """The BPE fit as a Spark loop: one argmax ``collect`` per merge
+    over the checkpointed vocabulary table, each round's rewrite
+    chained lazily. ``_bpe_fit`` picks the same merges on the driver."""
+    from atlassian_confluence_data_pipeline_spark.catalog import load_table
+    from atlassian_confluence_data_pipeline_spark.plans.curation2 import (
+        _BPE_D,
+        BPE_MERGES,
+        WS,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(
+        F.explode(
+            F.filter(F.split(F.trim("text"), WS), lambda x: x != F.lit(""))
+        ).alias("word")
+    )
+    chars = F.transform(
+        F.sequence(F.lit(1), F.length("word")),
+        lambda i: F.col("word").substr(i, F.lit(1)),
+    )
+    wf = (
+        toks.filter(~F.col("word").contains(_BPE_D))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("freq"))
+        .select("word", "freq", chars.alias("seq"))
+        .coalesce(1)
+        .localCheckpoint(eager=True)
+    )
+    cur = wf
+    merges = []
+    for step in range(1, BPE_MERGES + 1):
+        pairs = cur.filter(F.size("seq") >= 2).select(
+            "freq",
+            F.explode(
+                F.zip_with(
+                    F.slice(F.col("seq"), 1, F.size("seq") - 1),
+                    F.slice(F.col("seq"), 2, F.size("seq") - 1),
+                    lambda a, b: F.struct(a.alias("s1"), b.alias("s2")),
+                )
+            ).alias("pr"),
+        )
+        best = (
+            pairs.groupBy(F.col("pr.s1").alias("s1"), F.col("pr.s2").alias("s2"))
+            .agg(F.sum("freq").cast("bigint").alias("w"))
+            .orderBy(F.desc("w"), F.asc("s1"), F.asc("s2"))
+            .limit(1)
+            .collect()[0]
+        )
+        s1, s2, w = best["s1"], best["s2"], int(best["w"])
+        merges.append((step, s1, s2, s1 + s2, w))
+        joined = F.concat(
+            F.lit(_BPE_D), F.array_join("seq", _BPE_D + _BPE_D), F.lit(_BPE_D)
+        )
+        rewritten = F.replace(
+            joined,
+            F.lit(_BPE_D + s1 + _BPE_D + _BPE_D + s2 + _BPE_D),
+            F.lit(_BPE_D + s1 + s2 + _BPE_D),
+        )
+        cur = cur.select(
+            "word",
+            "freq",
+            F.split(F.btrim(rewritten, F.lit(_BPE_D)), _BPE_D + _BPE_D).alias(
+                "seq"
+            ),
+        )
+    return cur, merges
+
+
+def test_bpe_driver_merges_match_spark_loop_within_job_budget(spark, tmp_path):
+    """Ties between pairs resolve by code point, as Spark orders
+    strings: U+FF21 sorts before U+1D400 here, though UTF-16 order
+    would put the surrogate pair first. The census build (the fit
+    included) launches at most 6 jobs; the Spark loop took 20."""
+    from tests.test_state_and_pipeline import _launched
+
+    from atlassian_confluence_data_pipeline_spark.plans.curation2 import (
+        BPE_MERGES,
+        _bpe_fit,
+        bpe_token_census,
+    )
+
+    texts = [
+        "\uff21x \uff21x \uff21x \U0001d400x \U0001d400x \U0001d400x",
+        "\u00e9\u00df\u00e9 \u00e9\u00df\u00e9 banana bandana",
+        "\u65e5\u672c\u8a9e \u65e5\u672c ab ba ab",
+    ]
+    sf = _mk_docs(spark, tmp_path, texts)
+    _, jobs, _ = _launched(spark, lambda: bpe_token_census(spark, sf))
+    assert jobs <= 6, jobs
+    ref_cur, ref_merges = _spark_loop_bpe(spark, sf)
+    cur, merges = _bpe_fit(spark, sf)
+    assert len(merges) == BPE_MERGES and merges == ref_merges
+    assert merges[1][1:3] == ("\uff21", "x") and merges[2][1:3] == ("\U0001d400", "x")
+    assert sorted(map(tuple, cur.collect())) == sorted(map(tuple, ref_cur.collect()))
+
+
+def test_bpe_fit_refuses_a_vocabulary_over_its_bound(spark, tmp_path, monkeypatch):
+    import pytest
+
+    from atlassian_confluence_data_pipeline_spark.plans import curation2
+
+    sf = _mk_docs(spark, tmp_path, ["one two three", "four five six seven"])
+    monkeypatch.setattr(curation2, "BPE_MAX_VOCAB", 6)
+    with pytest.raises(curation2.BpeVocabularyTooLarge, match="7 distinct words"):
+        curation2._bpe_fit(spark, sf)
+
+
 def test_pq_adc_topk_structure_and_audit(spark):
     """ADC ranking: k rows per query, ranks 1..k, non-decreasing
     distances, exact_hit consistent with a brute-force reference on

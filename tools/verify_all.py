@@ -14,19 +14,24 @@ Runs, in order, and stops at the first failure (exit code 1):
    the ledger, clean_html pandas UDF, HTML sink, ledger snapshot —
    over a backfill and one refresh, ~35 s; fails unless the last
    stdout line reports ``"correct": true`` and ``"failed": 0``)
-4. ``python tools/driver_sim.py``               (every registry query vs
+4. ``python perfbench/run.py --workload sweep_curation --seconds 15 --trace 0``
+   (sweep_smoke: first builds and runs of the curation sweep's
+   near-duplicate clustering, LSH, embedding and BPE queries, each
+   result checked against its expected schema; fails on the same
+   last-line rule as etl_smoke)
+5. ``python tools/driver_sim.py``               (every registry query vs
    its DuckDB oracle at sf0.01 in a VANILLA session from a foreign cwd
    — the superset of the driver's CORRECTNESS gate)
-5. ``python tools/plan_audit.py``               (anti-pattern sweep:
+6. ``python tools/plan_audit.py``               (anti-pattern sweep:
    cartesians, unexpected BNLJ, row-at-a-time Python UDFs, CSE traps)
-6. ``python tools/plan_snapshot.py --check``    (physical-plan shape
+7. ``python tools/plan_snapshot.py --check``    (physical-plan shape
    regression diff vs the committed PLAN_SNAPSHOT.json; intentional
    shape changes are recorded with --write)
-7. ``python tools/plan_snapshot.py --check-warm`` (session-memo gate:
+8. ``python tools/plan_snapshot.py --check-warm`` (session-memo gate:
    with the session memo populated by a first plan-construction pass,
    a second pass must invoke ZERO stage builders — no consumer may
    bypass the shared-stage memo)
-8. ``python tools/qcheck.py --rotation``        (seeded 28-query
+9. ``python tools/qcheck.py --rotation``        (seeded 28-query
    rotation over the registry tail the driver's CORRECTNESS sample
    missed recently — sha256(name:rN) draw, rule in BASELINE.md)
 
@@ -55,6 +60,13 @@ STEPS = [
             "--seconds", "15", "--trace", "0",
         ],
     ),
+    (
+        "sweep_smoke",
+        [
+            sys.executable, "perfbench/run.py", "--workload", "sweep_curation",
+            "--seconds", "15", "--trace", "0",
+        ],
+    ),
     ("driver_sim", [sys.executable, "tools/driver_sim.py"]),
     ("plan_audit", [sys.executable, "tools/plan_audit.py"]),
     ("plan_snapshot", [sys.executable, "tools/plan_snapshot.py", "--check"]),
@@ -62,7 +74,7 @@ STEPS = [
         "plan_snapshot_warm",
         [sys.executable, "tools/plan_snapshot.py", "--check-warm"],
     ),
-    # 8. seeded rotation re-proof of the registry's long tail: 28
+    # 9. seeded rotation re-proof of the registry's long tail: 28
     #    queries NOT in the last two driver CORRECTNESS samples, drawn
     #    by sha256(name:rN) — makes driver-sample staleness harmless
     #    (round-11 VERDICT item 4; seed rule documented in BASELINE.md)
@@ -90,8 +102,8 @@ def main() -> int:
     for name, cmd in steps:
         t0 = time.time()
         print(f"=== {name}: {' '.join(cmd[1:])}", flush=True)
-        # the smoke run must also print a correct, failure-free result
-        check = _result_failure if name == "etl_smoke" else None
+        # a smoke run must also print a correct, failure-free result
+        check = _result_failure if name.endswith("_smoke") else None
         proc = subprocess.run(
             cmd, cwd=REPO, stdout=subprocess.PIPE if check else None, text=True
         )
