@@ -3,8 +3,10 @@
 Several registry queries consume the same intermediate: the LSH dedup
 chains' pair tables, the per-modality fingerprint frames, the BPE
 tokenizer fit, label centroids, the spectral covariance matrix, a
-scan's probed split count. ``shared_pair_table(spark, sf_dir, name,
-builder)`` is the one entry point for all of them:
+scan's probed split count, a table's inferred parquet schema
+(``catalog.load_table``, named ``schema:{table}``).
+``shared_pair_table(spark, sf_dir, name, builder)`` is the one entry
+point for all of them:
 
 - **Key.** ``(applicationId, sf_dir, name)``. ``sf_dir`` names the
   inputs (a fixture directory, or any string that identifies the
@@ -18,8 +20,8 @@ builder)`` is the one entry point for all of them:
   materialised with an eager ``localCheckpoint`` so every consumer
   reads the same stage; any other value (a list of centroid rows, a
   tuple of loop-control scalars, an int, a fit's ``(frame, merges)``
-  pair) is stored as returned. Those must stay model-sized, never
-  corpus rows.
+  pair, a ``StructType``) is stored as returned. Those must stay
+  model-sized, never corpus rows.
 
 Only consumers go through the memo: each registry query's own ``fn``
 still builds its full plan, so plan snapshots and audits see the honest

@@ -606,25 +606,10 @@ EMB_LSH_CHUNKS = 8
 
 
 def _embedding_lsh_oracle() -> str:
-    from atlassian_confluence_data_pipeline_spark.operators.lsh import (
-        SIMHASH_THRESHOLD,
-        SRP_PERMS,
+    from atlassian_confluence_data_pipeline_spark.plans.curation3 import (
+        _srp_fingerprint_cte,
     )
 
-    dots = ",\n         ".join(
-        f"list_sum(list_transform(range(1, len(v)+1), j -> "
-        f"CASE WHEN ({a} * (j-1) + {b}) % {ROLLING_MOD} >= {SIMHASH_THRESHOLD} "
-        f"THEN v[j] ELSE -v[j] END)) AS d{i}"
-        for i, (a, b) in enumerate(SRP_PERMS)
-    )
-    fp_terms = [
-        f"CASE WHEN d{i} >= 0 THEN CAST({1 << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-        for i in range(63)
-    ] + [
-        "CASE WHEN d63 >= 0 THEN CAST(-9223372036854775808 AS BIGINT)"
-        " ELSE CAST(0 AS BIGINT) END"
-    ]
-    fp = "\n       + ".join(fp_terms)
     width = 64 // EMB_LSH_CHUNKS
     mask = (1 << width) - 1
     chunk_eq = " OR ".join(
@@ -637,18 +622,7 @@ def _embedding_lsh_oracle() -> str:
         " * sqrt(list_sum(list_transform(b.v, x -> x * x))))"
     )
     return f"""
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), d AS (
-  SELECT vec_id, v,
-         {dots}
-  FROM e
-), f AS (
-  SELECT vec_id, v,
-       {fp}
-         AS fp
-  FROM d
-), cand AS (
+WITH {_srp_fingerprint_cte()}, cand AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.v AS va, b.v AS vb,
          bit_count(xor(a.fp, b.fp)) AS hamming
   FROM f a JOIN f b ON a.vec_id < b.vec_id AND ({chunk_eq})

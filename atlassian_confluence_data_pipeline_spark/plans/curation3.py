@@ -394,13 +394,14 @@ def shingle_df_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _srp_fingerprint_cte() -> str:
-    """Oracle CTEs reproducing operators/lsh.with_srp_fingerprint bit-
-    for-bit (same affine hyperplane family as the embedding_lsh_pairs
-    oracle in plans/curation.py): each ``list_sum`` adds the signed
-    terms left to right from 0, the order of the kernel's fold. It does
-    not copy the kernel's null rules (``list_sum`` skips a null
-    element, where the kernel gives fingerprint 0); the embeddings
-    fixtures hold no nulls."""
+    """Oracle CTEs ``e, d, f`` reproducing
+    operators/lsh.with_srp_fingerprint bit-for-bit: ``f(vec_id, v,
+    fp)``, the fingerprint of every SRP consumer's oracle. Each
+    ``list_sum`` adds the signed terms left to right from 0, the order
+    of the kernel's fold. The kernel's edge rules hold too: a vector
+    with a null element gives 0 (``list_sum`` alone would skip the
+    element), a null vector or an empty array gives 0 (its dots are
+    null), and a NaN dot sets its bit (NaN sorts above 0 in DuckDB)."""
     dots = ",\n         ".join(
         f"list_sum(list_transform(range(1, len(v)+1), j -> "
         f"CASE WHEN ({a} * (j-1) + {b}) % {ROLLING_MOD} >= {SIMHASH_THRESHOLD} "
@@ -424,8 +425,9 @@ e AS (
   FROM e
 ), f AS (
   SELECT vec_id, v,
+       CASE WHEN list_count(v) < len(v) THEN CAST(0 AS BIGINT) ELSE
        {fp}
-         AS fp
+       END AS fp
   FROM d
 )"""
 

@@ -13,8 +13,12 @@ rounding discipline so both engines iterate bit-identically).
 
 from __future__ import annotations
 
+import struct
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from atlassian_confluence_data_pipeline_spark.catalog import load_table
 from atlassian_confluence_data_pipeline_spark.plans.registry import query
@@ -25,6 +29,16 @@ _MAX_HOPS = 10
 
 #: power-iteration depth for the stationary distribution
 _POWER_ITERS = 8
+
+#: transition-grid rows (distinct ``(prev_type, event_type)`` pairs)
+#: the Markov fit collects to the driver; a larger grid raises
+#: :class:`MarkovGridTooLarge` instead of being collected
+MARKOV_MAX_TRANSITIONS = 10_000
+
+
+class MarkovGridTooLarge(ValueError):
+    """The events have more distinct transitions than
+    ``MARKOV_MAX_TRANSITIONS``."""
 
 
 def _lsh_pairs_sql() -> str:
@@ -280,6 +294,66 @@ FROM {last} JOIN {prev} ON {prev}.s = {last}.s
 """
 
 
+def _jvm_round9_nanos(spark: SparkSession, xs: list[float]) -> list[int]:
+    """Spark's ``round(x, 9)`` of each double, as an integer count of
+    1e-9 units. Spark rounds the decimal string ``Double.toString(x)``
+    HALF_UP; JDK 17's ``Double.toString`` is not always the shortest
+    round-trip string that Python's ``repr`` gives, and the two can
+    round differently next to a 9-decimal half boundary, so the strings
+    are made by the JVM, the whole batch in a few py4j calls."""
+    if not xs:
+        return []
+    sc = spark.sparkContext
+    doubles = sc._gateway.new_array(sc._jvm.double, len(xs))
+    packed = bytearray(struct.pack(f">{len(xs)}d", *xs))
+    sc._jvm.java.nio.ByteBuffer.wrap(packed).asDoubleBuffer().get(doubles)
+    strings = sc._jvm.java.util.Arrays.toString(doubles)[1:-1].split(", ")
+    return [
+        int(Decimal(s).scaleb(9).to_integral_value(ROUND_HALF_UP))
+        for s in strings
+    ]
+
+
+def _power_iterate(
+    spark: SparkSession, grid: list[tuple]
+) -> list[tuple[object, float, float]]:
+    """The ``_POWER_ITERS``-step power iteration of the SQL form
+    (:func:`_stationary_sql`) over a collected count grid
+    ``[(i, j, c)]``, on the driver; returns ``(s, v, v_prev)`` per
+    state, sorted by state.
+
+    Same arithmetic: ``p = double(c) / double(t)`` with ``t`` the row
+    total of ``i``; ``v0 = round(1.0 / n, 9)`` over the ``n`` distinct
+    ``i``; each term ``round(v * p, 9)`` is summed exactly (as integer
+    1e-9 units, which the DECIMAL(28,12) cast holds exactly) and the sum
+    converted to double with correct rounding, as Spark's decimal cast
+    does. Keys follow the inner joins: a state only reached (no outgoing
+    row) carries mass one step and then drops out, a null key never
+    joins, and only states present in the last two vectors are
+    reported."""
+    totals: dict = {}
+    for i, _, c in grid:
+        totals[i] = totals.get(i, 0) + c
+    if not totals:
+        return []
+    p = [(i, j, float(c) / float(totals[i])) for i, j, c in grid]
+    states = list(totals)
+    (v0,) = _jvm_round9_nanos(spark, [1.0 / len(states)])
+    v = dict.fromkeys(states, v0 / 10**9)
+    prev = v
+    for _ in range(_POWER_ITERS):
+        terms = [(j, v[i] * pij) for i, j, pij in p if i in v]
+        sums: dict = {}
+        for (j, _), n in zip(
+            terms, _jvm_round9_nanos(spark, [x for _, x in terms])
+        ):
+            sums[j] = sums.get(j, 0) + n
+        prev, v = v, {j: n / 10**9 for j, n in sums.items()}
+    return sorted(
+        (s, v[s], prev[s]) for s in v if s is not None and s in prev
+    )
+
+
 @query(
     "markov_stationary_events",
     oracle=_stationary_sql(),
@@ -294,51 +368,45 @@ def markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     certificate.
 
     Scale shape: the transition counts are the standard user-keyed lag
-    window + one hash aggregate (corpus-sized work ends there); the
-    {_POWER_ITERS} unrolled iterations are joins over the
-    |event_types|²-bounded matrix — constant-size frames regardless of
-    corpus. Each product is 9-rounded and DECIMAL-summed, so Spark and
-    DuckDB iterate through bit-identical vectors."""
+    window + one hash aggregate, staged once per session (corpus-sized
+    work ends there). The |event_types|²-bounded grid is collected once,
+    at most ``MARKOV_MAX_TRANSITIONS`` rows (a larger grid raises
+    :class:`MarkovGridTooLarge`), and the ``_POWER_ITERS`` iterations
+    run on the driver in O(iters·k²) over its k² cells
+    (:func:`_power_iterate`), launching no job. Each product is
+    9-rounded and DECIMAL-summed exactly as the SQL form does, so the
+    driver, Spark and DuckDB iterate through bit-identical vectors. The
+    k result rows are literals in the plan (no Python-backed relation),
+    and the final 6-rounding happens in Spark."""
     from atlassian_confluence_data_pipeline_spark.plans._cache import (
         event_transition_counts,
     )
 
-    # the session-staged transition grid (shared with
-    # event_transition_matrix / transition_entropy_rate) replaces both
-    # the per-build lag window AND the per-build localCheckpoint
-    cnt = event_transition_counts(spark, sf_dir).select(
-        F.col("prev_type").alias("i"),
-        F.col("event_type").alias("j"),
-        "c",
-    )
-    rowt = cnt.groupBy("i").agg(F.sum("c").alias("t"))
-    p = cnt.join(rowt, "i").select(
-        "i", "j", (F.col("c").cast("double") / F.col("t")).alias("p")
-    ).localCheckpoint(eager=True)
-    n_states = p.select("i").distinct().count()
-    v = p.select("i").distinct().select(
-        F.col("i").alias("s"),
-        F.round(F.lit(1.0) / n_states, 9).alias("v"),
-    )
-    prev = v
-    for _ in range(_POWER_ITERS):
-        prev = v
-        v = (
-            v.join(p, v.s == p.i)
-            .groupBy(F.col("j").alias("s"))
-            .agg(
-                F.sum(
-                    F.round(F.col("v") * F.col("p"), 9).cast(
-                        "decimal(28,12)"
-                    )
-                )
-                .cast("double")
-                .alias("v")
-            )
+    # the session-staged transition grid, shared with
+    # event_transition_matrix / transition_entropy_rate
+    cnt = event_transition_counts(spark, sf_dir)
+    grid = cnt.limit(MARKOV_MAX_TRANSITIONS + 1).collect()
+    if len(grid) > MARKOV_MAX_TRANSITIONS:
+        raise MarkovGridTooLarge(
+            f"more than MARKOV_MAX_TRANSITIONS={MARKOV_MAX_TRANSITIONS} "
+            "event-type transitions"
         )
-    return v.join(
-        prev.select(F.col("s"), F.col("v").alias("pv")), "s"
-    ).select(
+    fit = T.ArrayType(
+        T.StructType(
+            [
+                T.StructField("s", cnt.schema["event_type"].dataType),
+                T.StructField("v", T.DoubleType()),
+                T.StructField("pv", T.DoubleType()),
+            ]
+        )
+    )
+    rows = F.array(
+        *[
+            F.struct(F.lit(s), F.lit(v), F.lit(pv))
+            for s, v, pv in _power_iterate(spark, grid)
+        ]
+    ).cast(fit)
+    return spark.range(1, numPartitions=1).select(F.inline(rows)).select(
         F.col("s").alias("event_type"),
         F.round("v", 6).alias("stationary_prob"),
         F.round(F.abs(F.col("v") - F.col("pv")), 6).alias("residual"),

@@ -11,6 +11,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from atlassian_confluence_data_pipeline_spark.catalog import load_table
 from atlassian_confluence_data_pipeline_spark.operators.skew import spread_scan
 from atlassian_confluence_data_pipeline_spark.plans import _cache
 from atlassian_confluence_data_pipeline_spark.plans.curation2 import _bpe_train
@@ -127,7 +128,8 @@ def _doc_ids(s, d):
 
 #: one of each kind of memoized value: a checkpointed stage, collected
 #: model rows, the BPE fit ((frame, merges) tuple), the contestant count
-#: (int) and a scan's split-count probe (keyed by its files)
+#: (int), a scan's split-count probe (keyed by its files) and a table's
+#: inferred schema (keyed by its files)
 _MEMOIZED_BUILDS = {
     "stage": lambda spark, sf: _cache.shared_pair_table(
         spark, sf, "tapp", _doc_ids
@@ -140,6 +142,7 @@ _MEMOIZED_BUILDS = {
     "split_probe": lambda spark, sf: spread_scan(
         spark.read.parquet(f"{sf}/documents.parquet")
     ),
+    "schema": lambda spark, sf: load_table(spark, sf, "documents"),
 }
 
 

@@ -1,11 +1,14 @@
 """Queries on degenerate inputs: an empty documents table and one whose
 text is all null must return the query's declared schema with no rows,
 not raise on an undefined eager scalar. Likewise a BPE fit with no
-adjacent symbol pair to merge, and connected components over no
-pairs."""
+adjacent symbol pair to merge, connected components over no pairs, and
+the Markov fit over events with no transition, one event type, or more
+transitions than its bound."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from atlassian_confluence_data_pipeline_spark.operators.graph import (
@@ -15,8 +18,16 @@ from atlassian_confluence_data_pipeline_spark.plans.curation2 import (
     bpe_merge_iterations,
     bpe_token_census,
 )
+from atlassian_confluence_data_pipeline_spark.plans import structure
+from atlassian_confluence_data_pipeline_spark.plans._cache import (
+    event_transition_counts,
+)
 from atlassian_confluence_data_pipeline_spark.plans.pretrain import (
     interpolated_lm_perplexity,
+)
+from atlassian_confluence_data_pipeline_spark.plans.structure import (
+    MarkovGridTooLarge,
+    markov_stationary_events,
 )
 
 
@@ -64,3 +75,43 @@ def test_connected_components_over_no_pairs(spark):
     assert out.collect() == []
     assert stats == {"rounds": 1, "escalated": False}
     assert out.columns == ["node", "component"]
+
+
+def _events_variant(sf_dir, tmp_path, case):
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    if case == "empty":
+        ev = ev.slice(0, 0)
+    elif case == "one_event_per_user":
+        first = ev.to_pandas().drop_duplicates("user_id").index.to_numpy()
+        ev = ev.take(pa.array(first))
+    elif case == "one_event_type":
+        i = ev.schema.get_field_index("event_type")
+        ev = ev.set_column(i, "event_type", pa.array(["view"] * ev.num_rows))
+    pq.write_table(ev, str(tmp_path / "events.parquet"))
+    return str(tmp_path)
+
+
+@pytest.mark.parametrize(
+    "case, want",
+    [("empty", []), ("one_event_per_user", []), ("one_event_type", [("view", 1.0, 0.0)])],
+)
+def test_markov_stationary_events_on_degenerate_events(spark, sf_dir, tmp_path, case, want):
+    """No transition gives no state; one event type is its own fixpoint.
+    The result is literal rows in the plan: no Python-backed relation
+    and no Python evaluation, so an empty result starts no Python
+    worker."""
+    declared = markov_stationary_events(spark, sf_dir).schema
+    out = markov_stationary_events(spark, _events_variant(sf_dir, tmp_path, case))
+    assert out.schema == declared
+    assert [tuple(r) for r in out.collect()] == want
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Python" not in plan and "ExistingRDD" not in plan, plan
+
+
+def test_markov_stationary_events_refuses_a_grid_over_its_bound(
+    spark, sf_dir, monkeypatch
+):
+    n_cells = event_transition_counts(spark, sf_dir).count()
+    monkeypatch.setattr(structure, "MARKOV_MAX_TRANSITIONS", n_cells - 1)
+    with pytest.raises(MarkovGridTooLarge):
+        markov_stationary_events(spark, sf_dir)

@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 import random
 
+import duckdb
 import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -22,6 +23,9 @@ from atlassian_confluence_data_pipeline_spark.operators.lsh import (
     simhash_near_pairs,
     verify_candidates_jaccard,
     with_srp_fingerprint,
+)
+from atlassian_confluence_data_pipeline_spark.plans.curation3 import (
+    _srp_fingerprint_cte,
 )
 from atlassian_confluence_data_pipeline_spark.plans.textops import _shingles, _words
 from perfbench.tables import build_tables
@@ -211,3 +215,34 @@ def test_srp_kernel_matches_reference_fold_on_edge_rows(spark):
     assert got == want
     assert got[1] == got[2] == got[7] == 0  # null vector / element, empty
     assert got[3] == -1  # a NaN dot sets its bit
+
+
+def test_srp_kernel_matches_duckdb_oracle_on_edge_rows(spark, tmp_path):
+    """The oracle CTE every SRP consumer's oracle builds on gives the
+    kernel's fingerprint on a null element, a null vector, an empty
+    array and a NaN element."""
+    nan = float("nan")
+    rng = random.Random(5)
+    rows = [
+        (1, [0.25, None, -1.0]),
+        (2, None),
+        (3, []),
+        (4, [nan, 1.0]),
+        (5, [None]),
+    ] + [(100 + k, [rng.uniform(-1, 1) for _ in range(16)]) for k in range(20)]
+    path = str(tmp_path / "embeddings.parquet")
+    spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<double>"
+    ).write.parquet(path)
+    want = _fingerprints(with_srp_fingerprint, spark.read.parquet(path))
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}/*.parquet'")
+        got = dict(
+            con.sql(f"WITH {_srp_fingerprint_cte()} SELECT vec_id, fp FROM f")
+            .fetchall()
+        )
+    finally:
+        con.close()
+    assert got == want
+    assert got[1] == got[2] == got[3] == got[5] == 0
