@@ -102,6 +102,17 @@ def rolling_hash(text: Column) -> Column:
     )
 
 
+def rolling_hash_sql(expr: str) -> str:
+    """DuckDB rendering of :func:`rolling_hash` over the SQL expression
+    ``expr``: the same char-code fold, for the oracles."""
+    return (
+        f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
+        f"list_transform(regexp_split_to_array({expr}, ''), "
+        f"c -> CAST(ascii(c) AS BIGINT))), "
+        f"(h, c) -> (h * {ROLLING_BASE} + c) % {ROLLING_MOD})"
+    )
+
+
 def encrypt_column(col: Column, key: str) -> Column:
     """F15 engine analog (secure_cookie_manager.py:46-70, 90-134: PBKDF2 +
     Fernet over the cookie JSON): AES-GCM column encryption with Spark's

@@ -14,25 +14,26 @@ so the pair count stays near-linear in corpus size — the property that
 makes near-dup feasible at 100 TB where exact all-pairs Jaccard is
 O(n^2).
 
-Hashing is ENGINE-PORTABLE by default: the base hash is the same
-Rabin-Karp polynomial rolling hash as ``functions.text.rolling_hash``
-(char-code fold mod a Mersenne prime), and the k MinHash permutations /
-64 SimHash bit projections are affine transforms ``(a_i*h + b_i) mod M``
-with constants drawn from a seeded RNG shared with the DuckDB oracle
+Hashing is ENGINE-PORTABLE: the base hash is the same Rabin-Karp
+polynomial rolling hash as ``functions.text.rolling_hash`` (char-code
+fold mod a Mersenne prime), and the k MinHash permutations / 64 SimHash
+bit projections are affine transforms ``(a_i*h + b_i) mod M`` with
+constants drawn from a seeded RNG shared with the DuckDB oracle
 generator (plans/multimodal.py). Every value — signatures, band keys,
 fingerprints — is therefore reproducible bit-for-bit in any engine with
 64-bit integer arithmetic, which is what lets the driver hash-check
-these paths instead of a rows-only count. An ``portable=False`` flag
-keeps the previous xxhash64 fast path for callers that do not need
-cross-engine parity.
+these paths instead of a rows-only count. Each hash decision has one
+Spark definition here (:func:`word_hashes`,
+:func:`shingle_hashes_from_word_hashes`, :func:`minhash_signatures`,
+:func:`lsh_band_candidates`) and the combine one DuckDB rendering
+(:func:`shingle_hashes_sql`).
 
-PERF note (the projection-CSE trap, see PLANS.md): the MinHash
-signature is ONE ``F.aggregate`` fold with a k-field struct accumulator
-— the shingle-hash array is referenced exactly once, so Catalyst cannot
-re-inline the (expensive) rolling-hash fold k times, and the signature
-costs a single pass over the shingles instead of k ``array_min``
-passes. Signatures are localCheckpoint-materialized before band keys
-reference them element-wise.
+PERF note (the projection-CSE trap, see PLANS.md): the per-word fold
+is staged as a real ``wh`` column before the shingle combine references
+it n times, and the MinHash signature is explode -> ONE HashAggregate
+with k ``min`` slots, so no expensive fold is re-inlined per
+reference. Signatures are materialized before band keys reference them
+element-wise.
 """
 
 from __future__ import annotations
@@ -68,41 +69,57 @@ SRP_PERMS = _affine_perms(0x0EED, 64)
 SIMHASH_THRESHOLD = 1 << 30
 
 
-def _portable_hash(s: Column) -> Column:
-    """Engine-portable base hash in [0, ROLLING_MOD): the rolling-hash
-    char fold (same family as doc_rolling_fingerprints, oracle-proven)."""
-    return rolling_hash(s)
+def word_hashes(df: DataFrame) -> DataFrame:
+    """``df`` with its ``text`` column replaced by ``wh``: the rolling
+    hash of each whitespace-split word, as a real column. The one
+    word-hash stage of every shingle, n-gram and SimHash consumer; the
+    combine below references ``wh`` n times, so it must read this
+    projected column, never an inline fold (Catalyst would copy the
+    fold per reference)."""
+    from atlassian_confluence_data_pipeline_spark.plans.textops import _words
 
-
-def _fast_hash(s: Column) -> Column:
-    """xxhash64 masked to 32 bits — cheaper, engine-specific (rows-only
-    checks when used)."""
-    return F.xxhash64(s).bitwiseAND(F.lit(0xFFFFFFFF))
+    keep = [c for c in df.columns if c != "text"]
+    return df.select(
+        *keep, F.transform(_words(F.col("text")), rolling_hash).alias("wh")
+    )
 
 
 def shingle_hashes_from_word_hashes(
-    wh: Column, n: int = 3, base: int = BAND_BASE, distinct: bool = True
+    wh: Column, n: int = 3, distinct: bool = True
 ) -> Column:
     """n-gram shingle hashes combined from PER-WORD rolling hashes with
     a polynomial fold ``((h1*B + h2) % M * B + h3) % M`` — each word is
     char-folded ONCE even though it participates in n shingles (~n-fold
     less hashing than folding each shingle string). Distinct-deduped:
-    MinHash and Jaccard both operate on shingle *sets*. ``wh`` must be a
-    real column (slices reference it n times; CollapseProject keeps the
-    projection boundary because the defining expression is non-cheap).
-    Reproduced verbatim by the DuckDB oracle (plans/multimodal.py).
-    Overflow-free: h < 2^31, B ~ 2^20, so h*B + h' < 2^52."""
+    MinHash and Jaccard both operate on shingle *sets*. ``wh`` must be
+    the :func:`word_hashes` column. Rendered for DuckDB by
+    :func:`shingle_hashes_sql`. Overflow-free: h < 2^31, B ~ 2^20, so
+    h*B + h' < 2^52."""
     count = F.greatest(F.size(wh) - (n - 1), F.lit(0))
     acc = F.slice(wh, 1, count)
     for i in range(1, n):
         acc = F.zip_with(
             acc,
             F.slice(wh, i + 1, count),
-            lambda a, b: (a * base + b) % ROLLING_MOD,
+            lambda a, b: (a * BAND_BASE + b) % ROLLING_MOD,
         )
     # distinct=False keeps POSITIONAL order (winnowing needs windows
     # over the shingle sequence, not the shingle set)
     return F.array_distinct(acc) if distinct else acc
+
+
+def shingle_hashes_sql(n: int = 3, distinct: bool = True) -> str:
+    """DuckDB rendering of :func:`shingle_hashes_from_word_hashes` over
+    a ``wh`` list column: the same positional fold, ``[]`` below n
+    words and NULL for a NULL ``wh``. ``list_distinct`` does not keep
+    first-occurrence order, so only the distinct form's SET matches."""
+    comb = "wh[i]"
+    for k in range(1, n):
+        comb = f"({comb} * {BAND_BASE} + wh[i + {k}]) % {ROLLING_MOD}"
+    hs = f"list_transform(range(1, greatest(len(wh) - {n - 2}, 1)), i -> {comb})"
+    if distinct:
+        hs = f"list_distinct({hs})"
+    return f"CASE WHEN wh IS NOT NULL THEN {hs} END"
 
 
 def with_srp_fingerprint(
@@ -173,50 +190,6 @@ def with_srp_fingerprint(
     return df.mapInArrow(_kernel, schema)
 
 
-def minhash_signature(
-    shingles: Column, k: int = 32, portable: bool = True, pre_hashed: bool = False
-) -> Column:
-    """k-permutation MinHash signature of a shingle *set*.
-
-    Cost shape: each shingle is base-hashed ONCE; the k permutations are
-    affine transforms ``(a_i*h + b_i) mod M`` — integer multiply/add per
-    permutation instead of k string hashes. The whole signature is a
-    SINGLE ``F.aggregate`` fold with a k-field struct accumulator
-    (init = M, merge = least(acc_i, perm_i(h))), so the shingle-hash
-    array is referenced once (no Catalyst re-inlining) and the data is
-    scanned once (not k times). Overflow-free: a, h < 2^31 so
-    a*h + b < 2^63. Empty sets keep the init value M — callers filter
-    size(shingles) > 0 (as does the oracle SQL).
-
-    NB: per-element lambdas must take exactly ONE parameter — a
-    two-parameter lambda is interpreted by Spark as (element, index).
-
-    ``pre_hashed=True`` means ``shingles`` already holds base-hash
-    values in [0, M) (see :func:`shingle_hashes_from_word_hashes`) and
-    skips the per-element string fold."""
-    perms = MINHASH_PERMS[:k]
-    hash_fn = _portable_hash if portable else _fast_hash
-    hs = shingles if pre_hashed else F.transform(shingles, hash_fn)
-    init = F.struct(
-        *[F.lit(ROLLING_MOD).cast("bigint").alias(f"m{i}") for i in range(k)]
-    )
-
-    def merge(acc: Column, h: Column) -> Column:
-        return F.struct(
-            *[
-                F.least(acc[f"m{i}"], (F.lit(a) * h + F.lit(b)) % ROLLING_MOD).alias(
-                    f"m{i}"
-                )
-                for i, (a, b) in enumerate(perms)
-            ]
-        )
-
-    def finish(acc: Column) -> Column:
-        return F.array(*[acc[f"m{i}"] for i in range(k)])
-
-    return F.aggregate(hs, init, merge, finish)
-
-
 def lsh_band_keys(signature: Column, bands: int, rows: int) -> list[Column]:
     """One key per band (``rows`` consecutive signature slots): a
     positional polynomial fold seeded with the band index, so the key
@@ -236,56 +209,44 @@ def lsh_band_keys(signature: Column, bands: int, rows: int) -> list[Column]:
     return keys
 
 
-def minhash_lsh_candidates(
-    docs: DataFrame,
-    id_col: str,
-    shingles_col: str,
-    k: int = 32,
-    bands: int = 16,
-    portable: bool = True,
-    pre_hashed: bool = False,
-) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b) via banded MinHash LSH.
+def minhash_signatures(docs: DataFrame, id_col: str, k: int = 32) -> DataFrame:
+    """``(id_col, sig)``: the k-permutation MinHash signature of each
+    non-empty shingle-hash set ``hs`` (values in [0, M), see
+    :func:`shingle_hashes_from_word_hashes`).
 
-    The signature is computed as explode -> ONE HashAggregate with k
-    ``min`` aggregates (identical values to the :func:`minhash_signature`
-    fold, measured ~3x faster: the k mins run in whole-stage codegen
-    while HOF folds are interpreted; partial aggregation combines
-    map-side so the exchange carries one row per document, not per
-    shingle). Signatures are materialized via eager localCheckpoint so
-    the band keys read a stored column instead of re-deriving the
-    aggregation 2*bands times; an explode produces band-key rows; a
-    self-equi-join on the tagged key yields candidates, deduped because
-    a pair can collide in several bands."""
-    rows = k // bands
-    perms = MINHASH_PERMS[:k]
-    hash_fn = _portable_hash if portable else _fast_hash
-    base = (
-        F.col(shingles_col)
-        if pre_hashed
-        else F.transform(F.col(shingles_col), hash_fn)
-    )
-    ex = docs.filter(F.size(F.col(shingles_col)) > 0).select(
-        F.col(id_col).alias("__id"), F.explode(base).alias("__h")
-    )
+    Each permutation is an affine transform ``(a_i*h + b_i) mod M``, and
+    the signature is explode -> ONE HashAggregate with k ``min`` slots:
+    the k mins run in whole-stage codegen (a higher-order fold is
+    interpreted, ~3x slower), and partial aggregation combines
+    map-side, so the exchange carries one row per document, not per
+    shingle. Overflow-free: a, h < 2^31 so a*h + b < 2^63."""
     mins = [
         F.min((F.lit(a) * F.col("__h") + F.lit(b)) % ROLLING_MOD).alias(f"__m{i}")
-        for i, (a, b) in enumerate(perms)
+        for i, (a, b) in enumerate(MINHASH_PERMS[:k])
     ]
-    sig = (
-        ex.groupBy("__id")
-        .agg(*mins)
-        .select(
-            "__id", F.array(*[F.col(f"__m{i}") for i in range(k)]).alias("__sig")
-        )
-        .localCheckpoint(eager=True)
-    )
-    keys = lsh_band_keys(F.col("__sig"), bands, rows)
-    banded = sig.select("__id", F.explode(F.array(*keys)).alias("band_key"))
-    left = banded.select(F.col("__id").alias("id_a"), "band_key")
-    right = banded.select(F.col("__id").alias("id_b"), "band_key")
     return (
-        left.join(right, "band_key")
+        docs.filter(F.size("hs") > 0)
+        .select(id_col, F.explode("hs").alias("__h"))
+        .groupBy(id_col)
+        .agg(*mins)
+        .select(id_col, F.array(*[F.col(f"__m{i}") for i in range(k)]).alias("sig"))
+    )
+
+
+def lsh_band_candidates(
+    sig: DataFrame, id_col: str, bands: int, rows: int
+) -> DataFrame:
+    """Candidate near-dup pairs ``(id_a, id_b)`` (id_a < id_b) via
+    banded MinHash LSH over a MATERIALIZED ``(id_col, sig)`` frame (a
+    lazy one would re-derive the signature aggregation 2*bands times):
+    an explode produces band-key rows and a self-equi-join on the tagged
+    key yields candidates, deduped because a pair can collide in several
+    bands."""
+    keys = lsh_band_keys(F.col("sig"), bands, rows)
+    banded = sig.select(id_col, F.explode(F.array(*keys)).alias("band_key"))
+    return (
+        banded.select(F.col(id_col).alias("id_a"), "band_key")
+        .join(banded.select(F.col(id_col).alias("id_b"), "band_key"), "band_key")
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
@@ -334,22 +295,12 @@ def verify_candidates_jaccard(
 # ---------------------------------------------------------------------------
 
 
-def simhash(
-    docs: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    bits: int = 64,
-    portable: bool = True,
-) -> DataFrame:
-    """64-bit SimHash per document: sign of the per-bit weighted sum of
-    token-hash projections (+1 / -1 votes).
-
-    Portable path: one rolling hash per token (hashed at the ARRAY level
-    *before* explode, so the fold runs once per token and the 64 vote
-    expressions reference the generator's output attribute — Catalyst
-    cannot re-inline through Generate); bit i votes +1 when the affine
-    projection ``(a_i*h + b_i) mod M`` lands in the top half of the
-    range. xxhash64 path (portable=False): bit i of the 64-bit hash.
+def simhash(docs: DataFrame, id_col: str) -> DataFrame:
+    """64-bit SimHash per document over its token hashes ``wh`` (the
+    :func:`word_hashes` column): sign of the per-bit weighted sum
+    of token-hash projections (+1 / -1 votes). Bit i votes +1 when the
+    affine projection ``(a_i*h + b_i) mod M`` lands in the top half of
+    the range.
 
     Implemented as explode -> one HashAggregate with 64 conditional sums
     -> bit reassembly. SCALE NOTE: this shape beats a per-row
@@ -358,34 +309,22 @@ def simhash(
     interpreted, measured ~30%% slower here), and partial aggregation
     combines map-side so the exchange carries ONE row per document, not
     per token. No Python anywhere."""
-    hash_fn = _portable_hash if portable else (lambda t: F.xxhash64(t))
     tok = docs.select(
-        F.col(id_col).alias("__id"),
-        F.explode(F.transform(F.col(tokens_col), hash_fn)).alias("__h"),
+        F.col(id_col).alias("__id"), F.explode("wh").alias("__h")
     )
-    if portable:
-        votes = [
-            F.sum(
-                F.when(
-                    (F.lit(a) * F.col("__h") + F.lit(b)) % ROLLING_MOD
-                    >= SIMHASH_THRESHOLD,
-                    1,
-                ).otherwise(-1)
-            ).alias(f"__b{i}")
-            for i, (a, b) in enumerate(SIMHASH_PERMS[:bits])
-        ]
-    else:
-        votes = [
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("__h"), b).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-            ).alias(f"__b{b}")
-            for b in range(bits)
-        ]
+    votes = [
+        F.sum(
+            F.when(
+                (F.lit(a) * F.col("__h") + F.lit(b)) % ROLLING_MOD
+                >= SIMHASH_THRESHOLD,
+                1,
+            ).otherwise(-1)
+        ).alias(f"__b{i}")
+        for i, (a, b) in enumerate(SIMHASH_PERMS)
+    ]
     agg = tok.groupBy("__id").agg(*votes)
     fingerprint = None
-    for b in range(bits):
+    for b in range(len(SIMHASH_PERMS)):
         term = F.when(
             F.col(f"__b{b}") > 0, F.shiftleft(F.lit(1).cast("bigint"), b)
         ).otherwise(F.lit(0).cast("bigint"))

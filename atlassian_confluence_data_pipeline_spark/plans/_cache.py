@@ -113,29 +113,18 @@ def srp_candidates(
 
 
 def minhash_shingle_hashes(docs: DataFrame) -> DataFrame:
-    """``(doc_id, hs)`` over ``(doc_id, text)`` rows: per-word
-    rolling-hash fold -> 3-gram shingle-HASH combine. The stage
-    :func:`minhash_doc_hashes` memoizes over the documents table and the
-    streaming MinHash probe (``streaming/jobs._minhash_probe``) runs on
-    each micro-batch."""
-    from atlassian_confluence_data_pipeline_spark.functions.text import (
-        rolling_hash,
-    )
+    """``(doc_id, hs)`` over ``(doc_id, text)`` rows: the word-hash stage
+    -> 3-gram shingle-HASH combine. The stage :func:`minhash_doc_hashes`
+    memoizes over the documents table and the streaming MinHash probe
+    (``streaming/jobs._minhash_probe``) runs on each micro-batch."""
     from atlassian_confluence_data_pipeline_spark.operators.lsh import (
         shingle_hashes_from_word_hashes,
-    )
-    from atlassian_confluence_data_pipeline_spark.plans.textops import (
-        _words,
+        word_hashes,
     )
     from pyspark.sql import functions as F
 
-    return (
-        docs.select("doc_id", _words(F.col("text")).alias("w"))
-        .select("doc_id", F.transform(F.col("w"), rolling_hash).alias("wh"))
-        .select(
-            "doc_id",
-            shingle_hashes_from_word_hashes(F.col("wh")).alias("hs"),
-        )
+    return word_hashes(docs).select(
+        "doc_id", shingle_hashes_from_word_hashes(F.col("wh")).alias("hs")
     )
 
 
@@ -185,40 +174,18 @@ def minhash_doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized ``(doc_id, sig)`` MinHash signature frame:
-    explode of the shared shingle hashes -> ONE HashAggregate with k
-    ``min`` slots (the minhash_lsh_candidates construction, identical
-    values). Shared by the banded-candidate stage and the estimator
+    """Session-memoized ``(doc_id, sig)`` MinHash signature frame
+    (``operators/lsh.minhash_signatures`` over the shared shingle
+    hashes). Shared by the banded-candidate stage and the estimator
     calibration (which reads the raw signature arrays)."""
-    from atlassian_confluence_data_pipeline_spark.functions.text import (
-        ROLLING_MOD,
-    )
-    from atlassian_confluence_data_pipeline_spark.operators.lsh import (
-        MINHASH_PERMS,
-    )
+    from atlassian_confluence_data_pipeline_spark.operators import lsh
     from atlassian_confluence_data_pipeline_spark.plans.multimodal import (
         MINHASH_K,
     )
-    from pyspark.sql import functions as F
 
     def _build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        base = minhash_doc_hashes(spark, sf_dir).filter(F.size("hs") > 0)
-        ex = base.select("doc_id", F.explode("hs").alias("__h"))
-        mins = [
-            F.min((F.lit(a) * F.col("__h") + F.lit(b)) % ROLLING_MOD).alias(
-                f"__m{i}"
-            )
-            for i, (a, b) in enumerate(MINHASH_PERMS[:MINHASH_K])
-        ]
-        return (
-            ex.groupBy("doc_id")
-            .agg(*mins)
-            .select(
-                "doc_id",
-                F.array(*[F.col(f"__m{i}") for i in range(MINHASH_K)]).alias(
-                    "sig"
-                ),
-            )
+        return lsh.minhash_signatures(
+            minhash_doc_hashes(spark, sf_dir), "doc_id", k=MINHASH_K
         )
 
     return shared_pair_table(spark, sf_dir, "minhash_signatures", _build)
@@ -229,30 +196,16 @@ def minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     (id_a < id_b, distinct) from the shared signature frame — the
     equi-join stage every MinHash consumer funnels through."""
     from atlassian_confluence_data_pipeline_spark.operators.lsh import (
-        lsh_band_keys,
+        lsh_band_candidates,
     )
     from atlassian_confluence_data_pipeline_spark.plans.multimodal import (
         MINHASH_BANDS,
-        MINHASH_K,
+        MINHASH_ROWS,
     )
-    from pyspark.sql import functions as F
 
     def _build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        sig = minhash_signatures(spark, sf_dir)
-        rows = MINHASH_K // MINHASH_BANDS
-        keys = lsh_band_keys(F.col("sig"), MINHASH_BANDS, rows)
-        banded = sig.select(
-            "doc_id", F.explode(F.array(*keys)).alias("band_key")
-        )
-        return (
-            banded.select(F.col("doc_id").alias("id_a"), "band_key")
-            .join(
-                banded.select(F.col("doc_id").alias("id_b"), "band_key"),
-                "band_key",
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
+        return lsh_band_candidates(
+            minhash_signatures(spark, sf_dir), "doc_id", MINHASH_BANDS, MINHASH_ROWS
         )
 
     return shared_pair_table(spark, sf_dir, "minhash_band_candidates", _build)
@@ -429,14 +382,14 @@ def text_simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's symbolic rendering; later consumers in the session read
     the checkpointed fingerprint table."""
     from atlassian_confluence_data_pipeline_spark.catalog import load_table
-    from atlassian_confluence_data_pipeline_spark.operators.lsh import simhash
-    from atlassian_confluence_data_pipeline_spark.plans.textops import _words
-    from pyspark.sql import functions as F
+    from atlassian_confluence_data_pipeline_spark.operators.lsh import (
+        simhash,
+        word_hashes,
+    )
 
     def _build(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
-        toks = docs.select("doc_id", _words(F.col("text")).alias("toks"))
-        return simhash(toks, "doc_id", "toks")
+        return simhash(word_hashes(docs), "doc_id")
 
     return shared_pair_table(spark, sf_dir, "text_simhash_fp", _build)
 

@@ -754,16 +754,11 @@ def _cms_perms():
 
 def _cms_oracle() -> str:
     from atlassian_confluence_data_pipeline_spark.functions.text import (
-        ROLLING_BASE,
         ROLLING_MOD,
+        rolling_hash_sql,
     )
 
-    rh = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        "list_transform(regexp_split_to_array(word, ''), "
-        "c -> CAST(ascii(c) AS BIGINT))), "
-        f"(h, c) -> (h * {ROLLING_BASE} + c) % {ROLLING_MOD})"
-    )
+    rh = rolling_hash_sql("word")
     buckets = ", ".join(
         f"(({a} * wh + {b}) % {ROLLING_MOD}) % {CMS_WIDTH} AS b{r}"
         for r, (a, b) in enumerate(_cms_perms())

@@ -10,9 +10,8 @@ from pyspark.sql import functions as F
 
 from atlassian_confluence_data_pipeline_spark.catalog import load_table
 from atlassian_confluence_data_pipeline_spark.functions.text import (
-    ROLLING_BASE,
-    ROLLING_MOD,
     rolling_hash,
+    rolling_hash_sql,
 )
 from atlassian_confluence_data_pipeline_spark.plans.registry import query
 from atlassian_confluence_data_pipeline_spark.plans.textops import _words
@@ -142,12 +141,7 @@ FP_PREFIX_LEN = 80
     "doc_rolling_fingerprints",
     oracle=f"""
 SELECT doc_id,
-       list_reduce(
-         list_prepend(CAST(0 AS BIGINT),
-           list_transform(regexp_split_to_array(substr(text, 1, {FP_PREFIX_LEN}), ''),
-                          c -> CAST(ascii(c) AS BIGINT))),
-         (h, c) -> (h * {ROLLING_BASE} + c) % {ROLLING_MOD}
-       ) AS fingerprint
+       {rolling_hash_sql(f"substr(text, 1, {FP_PREFIX_LEN})")} AS fingerprint
 FROM documents
 """,
     tags=("text", "fingerprint", "hash"),
@@ -254,12 +248,7 @@ DECONTAM_N = 8
 #: fixture stand-in for the benchmark/eval set: the first 20 documents
 DECONTAM_HOLDOUT = 20
 
-_RH_DOCID_SQL = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(regexp_split_to_array(CAST(doc_id AS VARCHAR), ''), "
-    "c -> CAST(ascii(c) AS BIGINT))), "
-    f"(h, c) -> (h * {ROLLING_BASE} + c) % {ROLLING_MOD})"
-)
+_RH_DOCID_SQL = rolling_hash_sql("CAST(doc_id AS VARCHAR)")
 
 
 @query(
@@ -347,28 +336,17 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decontam_oracle() -> str:
-    from atlassian_confluence_data_pipeline_spark.operators.lsh import BAND_BASE
+    from atlassian_confluence_data_pipeline_spark.operators.lsh import (
+        shingle_hashes_sql,
+    )
 
-    rh_tok = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        "list_transform(regexp_split_to_array(t, ''), "
-        "c -> CAST(ascii(c) AS BIGINT))), "
-        f"(h, c) -> (h * {ROLLING_BASE} + c) % {ROLLING_MOD})"
-    )
-    comb = (
-        f"list_reduce(list_transform(range(0, {DECONTAM_N}), k -> wh[i + k]), "
-        f"(a, b) -> (a * {BAND_BASE} + b) % {ROLLING_MOD})"
-    )
     return f"""
 WITH w AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents
 ), wht AS (
-  SELECT doc_id, list_transform(w, t -> {rh_tok}) AS wh FROM w
+  SELECT doc_id, list_transform(w, t -> {rolling_hash_sql('t')}) AS wh FROM w
 ), t AS (
-  SELECT doc_id, list_distinct(list_transform(
-      range(1, greatest(len(wh) - {DECONTAM_N - 2}, 1)),
-      i -> {comb})) AS hs
-  FROM wht
+  SELECT doc_id, {shingle_hashes_sql(DECONTAM_N)} AS hs FROM wht
 ), b AS (
   SELECT DISTINCT unnest(hs) AS h FROM t WHERE doc_id < {DECONTAM_HOLDOUT}
 ), c AS (
@@ -395,6 +373,7 @@ def decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     family so DuckDB reproduces every n-gram hash bit-for-bit."""
     from atlassian_confluence_data_pipeline_spark.operators.lsh import (
         shingle_hashes_from_word_hashes,
+        word_hashes,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -405,8 +384,7 @@ def decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same localCheckpoint discipline as the LSH band tables; on a real
     # cluster this becomes a reliable checkpoint / cached table.
     hs = (
-        docs.select("doc_id", _words(F.col("text")).alias("w"))
-        .select("doc_id", F.transform(F.col("w"), rolling_hash).alias("wh"))
+        word_hashes(docs)
         .select(
             "doc_id",
             shingle_hashes_from_word_hashes(F.col("wh"), n=DECONTAM_N).alias("hs"),
@@ -824,18 +802,10 @@ WINNOW_W = 4
 
 
 def _winnow_oracle() -> str:
-    from atlassian_confluence_data_pipeline_spark.operators.lsh import BAND_BASE
+    from atlassian_confluence_data_pipeline_spark.operators.lsh import (
+        shingle_hashes_sql,
+    )
 
-    rh_tok = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        "list_transform(regexp_split_to_array(t, ''), "
-        "c -> CAST(ascii(c) AS BIGINT))), "
-        f"(h, c) -> (h * {ROLLING_BASE} + c) % {ROLLING_MOD})"
-    )
-    comb = (
-        "list_reduce(list_transform(range(0, 3), k -> wh[i + k]), "
-        f"(a, b) -> (a * {BAND_BASE} + b) % {ROLLING_MOD})"
-    )
     winmin = (
         f"list_reduce(list_transform(range(0, {WINNOW_W}), k -> hs[i + k]), "
         "(a, b) -> least(a, b))"
@@ -844,11 +814,9 @@ def _winnow_oracle() -> str:
 WITH w AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents
 ), wht AS (
-  SELECT doc_id, list_transform(w, t -> {rh_tok}) AS wh FROM w
+  SELECT doc_id, list_transform(w, t -> {rolling_hash_sql('t')}) AS wh FROM w
 ), sh AS (
-  SELECT doc_id, list_transform(
-      range(1, greatest(len(wh) - 1, 1)), i -> {comb}) AS hs
-  FROM wht
+  SELECT doc_id, {shingle_hashes_sql(distinct=False)} AS hs FROM wht
 ), fp AS (
   SELECT doc_id, list_distinct(list_transform(
       range(1, greatest(len(hs) - {WINNOW_W - 2}, 1)), i -> {winmin})) AS fps
@@ -875,12 +843,12 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle sequence — constant reference count, no re-inlining)."""
     from atlassian_confluence_data_pipeline_spark.operators.lsh import (
         shingle_hashes_from_word_hashes,
+        word_hashes,
     )
 
     docs = load_table(spark, sf_dir, "documents")
     sh = (
-        docs.select("doc_id", _words(F.col("text")).alias("w"))
-        .select("doc_id", F.transform(F.col("w"), rolling_hash).alias("wh"))
+        word_hashes(docs)
         .select(
             "doc_id",
             shingle_hashes_from_word_hashes(F.col("wh"), distinct=False).alias(

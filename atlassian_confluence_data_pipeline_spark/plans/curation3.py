@@ -28,10 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from atlassian_confluence_data_pipeline_spark.catalog import load_table
 from atlassian_confluence_data_pipeline_spark.functions.text import (
     ROLLING_MOD,
     rolling_hash,
+    rolling_hash_sql,
 )
 from atlassian_confluence_data_pipeline_spark.operators.lsh import (
     BAND_BASE,
@@ -39,17 +39,14 @@ from atlassian_confluence_data_pipeline_spark.operators.lsh import (
     MINHASH_PERMS,
     SIMHASH_THRESHOLD,
     SRP_PERMS,
-    lsh_band_keys,
-    shingle_hashes_from_word_hashes,
+    shingle_hashes_sql,
     with_srp_fingerprint,
 )
 from atlassian_confluence_data_pipeline_spark.plans.multimodal import (
     MINHASH_BANDS,
     MINHASH_K,
-    _rh_sql,
 )
 from atlassian_confluence_data_pipeline_spark.plans.registry import query
-from atlassian_confluence_data_pipeline_spark.plans.textops import _words
 
 #: hashed-feature space for DSIR / the linear classifier — small enough
 #: that the per-bucket stats table broadcasts everywhere, large enough
@@ -81,7 +78,7 @@ w AS (
   SELECT doc_id, lang, unnest(w) AS word, generate_subscripts(w, 1) AS pos
   FROM w
 ), tb AS (
-  SELECT doc_id, lang, pos, {_rh_sql('word')} % {N_BUCKETS} AS b FROM tok
+  SELECT doc_id, lang, pos, {rolling_hash_sql('word')} % {N_BUCKETS} AS b FROM tok
 )"""
 
 
@@ -326,22 +323,15 @@ def word_entropy_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shingle_cte(src: str = "documents") -> str:
-    """Shared oracle CTE: per-document distinct hashed 3-shingles (the
-    identical portable combine as plans/multimodal._minhash_oracle)."""
-    comb = (
-        f"((wh[i] * {BAND_BASE} + wh[i+1]) % {ROLLING_MOD}"
-        f" * {BAND_BASE} + wh[i+2]) % {ROLLING_MOD}"
-    )
+    """Shared oracle CTE: per-document distinct hashed 3-shingles ``hs``
+    (``t``), and the documents that have any (``ne``)."""
     return f"""
 w AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM {src}
 ), wht AS (
-  SELECT doc_id, list_transform(w, t -> {_rh_sql('t')}) AS wh FROM w
+  SELECT doc_id, list_transform(w, t -> {rolling_hash_sql('t')}) AS wh FROM w
 ), t AS (
-  SELECT doc_id, list_distinct(list_transform(
-      range(1, greatest(len(wh) - 1, 1)),
-      i -> {comb})) AS hs
-  FROM wht
+  SELECT doc_id, {shingle_hashes_sql()} AS hs FROM wht
 ), ne AS (
   SELECT doc_id, hs FROM t WHERE len(hs) > 0
 )"""
@@ -372,21 +362,15 @@ def shingle_df_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: two cascaded hash aggregates (shingle -> df, df ->
     count), both with map-side partials; per-document shingle sets are
-    already distinct so no distinct aggregate is needed."""
-    docs = load_table(spark, sf_dir, "documents")
-    # staged projections (shingle_hashes_from_word_hashes contract) +
-    # a checkpoint barrier before the explode: InferFiltersFromGenerate
-    # synthesizes a size(hs) > 0 filter under the Generate and would
-    # re-inline the whole shingle fold into it (the CSE trap plan_audit
-    # sweeps for)
-    hs = (
-        docs.select(
-            "doc_id", F.transform(_words(F.col("text")), rolling_hash).alias("wh")
-        )
-        .select("doc_id", shingle_hashes_from_word_hashes(F.col("wh")).alias("hs"))
-        .localCheckpoint(eager=False)
+    already distinct so no distinct aggregate is needed. The shingle
+    hashes are the session-shared ``minhash_doc_hashes`` stage."""
+    from atlassian_confluence_data_pipeline_spark.plans._cache import (
+        minhash_doc_hashes,
     )
-    s = hs.select("doc_id", F.explode("hs").alias("h"))
+
+    s = minhash_doc_hashes(spark, sf_dir).select(
+        "doc_id", F.explode("hs").alias("h")
+    )
     dfreq = s.groupBy("h").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     return dfreq.groupBy("df").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_shingles")

@@ -40,12 +40,14 @@ from pyspark.sql import functions as F
 from atlassian_confluence_data_pipeline_spark.catalog import load_table
 from atlassian_confluence_data_pipeline_spark.functions.text import (
     ROLLING_MOD,
-    rolling_hash,
+    rolling_hash_sql,
 )
 from atlassian_confluence_data_pipeline_spark.operators.lsh import (
     BAND_BASE,
     MINHASH_PERMS,
     shingle_hashes_from_word_hashes,
+    shingle_hashes_sql,
+    word_hashes,
 )
 from atlassian_confluence_data_pipeline_spark.operators.similarity import (
     dot,
@@ -58,9 +60,7 @@ from atlassian_confluence_data_pipeline_spark.plans.curation import (
 from atlassian_confluence_data_pipeline_spark.plans.curation3 import (
     _srp_fingerprint_cte,
 )
-from atlassian_confluence_data_pipeline_spark.plans.multimodal import _rh_sql
 from atlassian_confluence_data_pipeline_spark.plans.registry import query
-from atlassian_confluence_data_pipeline_spark.plans.textops import _words
 
 #: chunking: 32-token windows advancing 24 tokens (8-token overlap) —
 #: the context-window prep shape; constants are per-run config
@@ -102,7 +102,7 @@ def _chunk_oracle() -> str:
 WITH w AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents
 ), wht AS (
-  SELECT doc_id, list_transform(w, t -> {_rh_sql('t')}) AS wh FROM w
+  SELECT doc_id, list_transform(w, t -> {rolling_hash_sql('t')}) AS wh FROM w
 ), nc AS (
   SELECT doc_id, wh,
          1 + (greatest(len(wh) - {CHUNK_W}, 0) + {CHUNK_S} - 1) // {CHUNK_S}
@@ -144,9 +144,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows by ~n/{S} — the expected output geometry, not a blow-up."""
     docs = load_table(spark, sf_dir, "documents")
     wh = (
-        docs.select(
-            "doc_id", F.transform(_words(F.col("text")), rolling_hash).alias("wh")
-        )
+        word_hashes(docs.select("doc_id", "text"))
         # barrier: the per-chunk slices reference wh n_chunks times;
         # without it CollapseProject re-inlines the char fold per slice
         .localCheckpoint(eager=False)
@@ -308,11 +306,6 @@ def docs_per_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _bloom_oracle() -> str:
-    rh_tok = _rh_sql("t")
-    comb = (
-        f"list_reduce(list_transform(range(0, {DECONTAM_N}), k -> wh[i + k]), "
-        f"(a, b) -> (a * {BAND_BASE} + b) % {ROLLING_MOD})"
-    )
     probe_exprs = [
         f"(({a} * h + {b}) % {ROLLING_MOD}) % {BLOOM_BITS}"
         for a, b in BLOOM_PROBES
@@ -328,12 +321,9 @@ def _bloom_oracle() -> str:
 WITH w AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents
 ), wht AS (
-  SELECT doc_id, list_transform(w, t -> {rh_tok}) AS wh FROM w
+  SELECT doc_id, list_transform(w, t -> {rolling_hash_sql('t')}) AS wh FROM w
 ), t AS (
-  SELECT doc_id, list_distinct(list_transform(
-      range(1, greatest(len(wh) - {DECONTAM_N - 2}, 1)),
-      i -> {comb})) AS hs
-  FROM wht
+  SELECT doc_id, {shingle_hashes_sql(DECONTAM_N)} AS hs FROM wht
 ), bh AS (
   SELECT DISTINCT unnest(hs) AS h FROM t WHERE doc_id < {DECONTAM_HOLDOUT}
 ), pos AS (
@@ -387,8 +377,7 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same class as k-means centroids, never corpus-scale."""
     docs = load_table(spark, sf_dir, "documents")
     hs = (
-        docs.select("doc_id", _words(F.col("text")).alias("w"))
-        .select("doc_id", F.transform(F.col("w"), rolling_hash).alias("wh"))
+        word_hashes(docs)
         .select(
             "doc_id",
             shingle_hashes_from_word_hashes(F.col("wh"), n=DECONTAM_N).alias("hs"),

@@ -15,32 +15,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from atlassian_confluence_data_pipeline_spark.catalog import load_table
 from atlassian_confluence_data_pipeline_spark.functions.text import (
-    ROLLING_MOD,
-    rolling_hash,
+    rolling_hash_sql,
 )
 from atlassian_confluence_data_pipeline_spark.operators.lsh import (
-    BAND_BASE,
-    shingle_hashes_from_word_hashes,
+    shingle_hashes_sql,
 )
-from atlassian_confluence_data_pipeline_spark.plans.multimodal import _rh_sql
 from atlassian_confluence_data_pipeline_spark.plans.registry import query
-from atlassian_confluence_data_pipeline_spark.plans.textops import _words
 
-#: DuckDB rendering of the 3-word shingle-hash set (mirrors
-#: operators/lsh.py shingle_hashes_from_word_hashes — the idiom already
-#: hash-proven by the minhash oracles)
+#: oracle CTEs ``w, wht, t``: the 3-word shingle-hash set ``hs`` per document
 _SH_CTES = f"""w AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents
 ), wht AS (
-  SELECT doc_id, list_transform(w, t -> {_rh_sql('t')}) AS wh FROM w
+  SELECT doc_id, list_transform(w, t -> {rolling_hash_sql('t')}) AS wh FROM w
 ), t AS (
-  SELECT doc_id, list_distinct(list_transform(
-      range(1, greatest(len(wh) - 1, 1)),
-      i -> ((wh[i] * {BAND_BASE} + wh[i+1]) % {ROLLING_MOD}
-            * {BAND_BASE} + wh[i+2]) % {ROLLING_MOD})) AS hs
-  FROM wht
+  SELECT doc_id, {shingle_hashes_sql()} AS hs FROM wht
 )"""
 
 

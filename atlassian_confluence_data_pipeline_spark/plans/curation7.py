@@ -13,14 +13,14 @@ from pyspark.sql import functions as F
 
 from atlassian_confluence_data_pipeline_spark.catalog import load_table
 from atlassian_confluence_data_pipeline_spark.functions.text import (
-    ROLLING_MOD,
     rolling_hash,
+    rolling_hash_sql,
 )
 from atlassian_confluence_data_pipeline_spark.operators.lsh import (
-    BAND_BASE,
     shingle_hashes_from_word_hashes,
+    shingle_hashes_sql,
+    word_hashes,
 )
-from atlassian_confluence_data_pipeline_spark.plans.multimodal import _rh_sql
 from atlassian_confluence_data_pipeline_spark.plans.registry import query
 from atlassian_confluence_data_pipeline_spark.plans.textops import _words
 
@@ -31,13 +31,9 @@ N_SHARDS = 64
 _POS_SH_CTES = f"""w AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents
 ), wht AS (
-  SELECT doc_id, list_transform(w, t -> {_rh_sql('t')}) AS wh FROM w
+  SELECT doc_id, list_transform(w, t -> {rolling_hash_sql('t')}) AS wh FROM w
 ), t AS (
-  SELECT doc_id, list_transform(
-      range(1, greatest(len(wh) - 1, 1)),
-      i -> ((wh[i] * {BAND_BASE} + wh[i+1]) % {ROLLING_MOD}
-            * {BAND_BASE} + wh[i+2]) % {ROLLING_MOD}) AS hs
-  FROM wht
+  SELECT doc_id, {shingle_hashes_sql(distinct=False)} AS hs FROM wht
 )"""
 
 
@@ -77,8 +73,7 @@ def doc_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-inline the whole shingle fold into it (the CSE trap the plan
     # audit sweeps for — it caught this query's first draft)
     sh = (
-        docs.select("doc_id", _words(F.col("text")).alias("w"))
-        .select("doc_id", F.transform(F.col("w"), rolling_hash).alias("wh"))
+        word_hashes(docs)
         .select(
             "doc_id",
             shingle_hashes_from_word_hashes(
@@ -102,20 +97,10 @@ def doc_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ngram_comb_sql(n: int) -> str:
-    """DuckDB rendering of shingle_hashes_from_word_hashes for n-grams:
-    the positional polynomial fold over per-word rolling hashes."""
-    expr = "wh[i]"
-    for k in range(1, n):
-        expr = f"({expr} * {BAND_BASE} + wh[i+{k}]) % {ROLLING_MOD}"
-    return expr
-
-
 def _rep_profile_oracle() -> str:
     arms = "\n    UNION ALL\n".join(
         f"""    SELECT doc_id, CAST({n} AS INT) AS n,
-           list_transform(range(1, greatest(len(wh) - {n - 2}, 1)),
-                          i -> {_ngram_comb_sql(n)}) AS hs
+           {shingle_hashes_sql(n, distinct=False)} AS hs
     FROM wht"""
         for n in (2, 3, 4)
     )
@@ -123,7 +108,7 @@ def _rep_profile_oracle() -> str:
 WITH w AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents
 ), wht AS MATERIALIZED (
-  SELECT doc_id, list_transform(w, t -> {_rh_sql('t')}) AS wh FROM w
+  SELECT doc_id, list_transform(w, t -> {rolling_hash_sql('t')}) AS wh FROM w
 ), t AS (
   SELECT doc_id, n, unnest(hs) AS h FROM (
 {arms}
@@ -171,9 +156,7 @@ def doc_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    wh = spread_scan(docs.select("doc_id", "text")).select(
-        "doc_id", _words(F.col("text")).alias("w")
-    ).select("doc_id", F.transform(F.col("w"), rolling_hash).alias("wh"))
+    wh = word_hashes(spread_scan(docs.select("doc_id", "text")))
 
     def _top_count(hs):
         # max multiplicity == longest equal-run in the sorted array
@@ -243,7 +226,7 @@ def doc_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH t AS (
   SELECT doc_id,
          CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS tok,
-         {_rh_sql("CAST(doc_id AS VARCHAR)")} % {N_SHARDS} AS shard_id
+         {rolling_hash_sql("CAST(doc_id AS VARCHAR)")} % {N_SHARDS} AS shard_id
   FROM documents
 ), s AS (
   SELECT shard_id, CAST(count(*) AS BIGINT) AS n_docs,

@@ -16,12 +16,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from atlassian_confluence_data_pipeline_spark.catalog import load_table
-from atlassian_confluence_data_pipeline_spark.functions.text import rolling_hash
+from atlassian_confluence_data_pipeline_spark.functions.text import (
+    rolling_hash,
+    rolling_hash_sql,
+)
 from atlassian_confluence_data_pipeline_spark.plans.curation7 import N_SHARDS
 from atlassian_confluence_data_pipeline_spark.plans.multimodal import (
     MINHASH_JACCARD,
     _minhash_oracle,
-    _rh_sql,
 )
 from atlassian_confluence_data_pipeline_spark.plans.packing import CTX_TOKENS
 from atlassian_confluence_data_pipeline_spark.plans.registry import query
@@ -31,7 +33,7 @@ def _shard_sql(col: str) -> str:
     rendered per call site instead of string-replacing 'doc_id' inside
     one pre-rendered template (which would silently corrupt the oracle
     if the hash rendering ever mentioned doc_id itself; round-7 advice)."""
-    return f"{_rh_sql(f'CAST({col} AS VARCHAR)')} % {N_SHARDS}"
+    return f"{rolling_hash_sql(f'CAST({col} AS VARCHAR)')} % {N_SHARDS}"
 
 
 def shard_packed_frame(t: DataFrame) -> DataFrame:

@@ -460,16 +460,10 @@ _CONF_SPLIT_MOD = 5  # hash % 5 == 0 -> calibration split (~20%)
 
 def _conformal_oracle() -> str:
     from atlassian_confluence_data_pipeline_spark.functions.text import (
-        ROLLING_BASE,
-        ROLLING_MOD,
+        rolling_hash_sql,
     )
 
-    rh = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        "list_transform(regexp_split_to_array(CAST(doc_id AS VARCHAR), ''), "
-        "c -> CAST(ascii(c) AS BIGINT))), "
-        f"(h, c) -> (h * {ROLLING_BASE} + c) % {ROLLING_MOD})"
-    )
+    rh = rolling_hash_sql("CAST(doc_id AS VARCHAR)")
     return f"""
 WITH s AS (
   SELECT doc_id,

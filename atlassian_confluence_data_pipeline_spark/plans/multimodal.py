@@ -19,8 +19,8 @@ from pyspark.sql import functions as F
 
 from atlassian_confluence_data_pipeline_spark.catalog import load_table
 from atlassian_confluence_data_pipeline_spark.functions.text import (
-    ROLLING_BASE,
     ROLLING_MOD,
+    rolling_hash_sql,
 )
 from atlassian_confluence_data_pipeline_spark.operators.lsh import (
     BAND_BASE,
@@ -28,10 +28,13 @@ from atlassian_confluence_data_pipeline_spark.operators.lsh import (
     MINHASH_PERMS,
     SIMHASH_PERMS,
     SIMHASH_THRESHOLD,
-    minhash_lsh_candidates,
-    simhash,
+    lsh_band_candidates,
+    minhash_signatures,
+    shingle_hashes_from_word_hashes,
+    shingle_hashes_sql,
     simhash_near_pairs,
     verify_candidates_jaccard,
+    word_hashes,
 )
 from atlassian_confluence_data_pipeline_spark.plans.registry import query
 from atlassian_confluence_data_pipeline_spark.plans.textops import _words
@@ -130,18 +133,6 @@ SIMHASH_MAX_HAMMING = 12
 SIMHASH_CHUNKS = 4
 
 
-def _rh_sql(expr: str) -> str:
-    """DuckDB rendering of functions.text.rolling_hash (char-code fold
-    mod the Mersenne prime) — the idiom already hash-proven by the
-    doc_rolling_fingerprints oracle."""
-    return (
-        f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        f"list_transform(regexp_split_to_array({expr}, ''), "
-        f"c -> CAST(ascii(c) AS BIGINT))), "
-        f"(h, c) -> (h * {ROLLING_BASE} + c) % {ROLLING_MOD})"
-    )
-
-
 def _minhash_oracle() -> str:
     mins = ",\n         ".join(
         f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {ROLLING_MOD}))"
@@ -151,22 +142,13 @@ def _minhash_oracle() -> str:
         "CAST(len(list_intersect(hs_a, hs_b)) AS DOUBLE)"
         " / (len(hs_a) + len(hs_b) - len(list_intersect(hs_a, hs_b)))"
     )
-    # shingle hash = polynomial combine of PER-WORD rolling hashes —
-    # mirrors operators/lsh.py shingle_hashes_from_word_hashes exactly
-    comb = (
-        f"((wh[i] * {BAND_BASE} + wh[i+1]) % {ROLLING_MOD}"
-        f" * {BAND_BASE} + wh[i+2]) % {ROLLING_MOD}"
-    )
     return f"""
 WITH w AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents
 ), wht AS (
-  SELECT doc_id, list_transform(w, t -> {_rh_sql('t')}) AS wh FROM w
+  SELECT doc_id, list_transform(w, t -> {rolling_hash_sql('t')}) AS wh FROM w
 ), t AS (
-  SELECT doc_id, list_distinct(list_transform(
-      range(1, greatest(len(wh) - 1, 1)),
-      i -> {comb})) AS hs
-  FROM wht
+  SELECT doc_id, {shingle_hashes_sql()} AS hs FROM wht
 ), ne AS (
   SELECT doc_id, hs FROM t WHERE len(hs) > 0
 ), sig AS (
@@ -207,20 +189,14 @@ def _neardup_lsh_oracle(docs_src: str = "documents") -> str:
         "CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)"
         " / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b)))"
     )
-    comb = (
-        f"((wh[i] * {BAND_BASE} + wh[i+1]) % {ROLLING_MOD}"
-        f" * {BAND_BASE} + wh[i+2]) % {ROLLING_MOD}"
-    )
     return f"""
 WITH w AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM {docs_src}
 ), wht AS (
-  SELECT doc_id, w, list_transform(w, t -> {_rh_sql('t')}) AS wh FROM w
+  SELECT doc_id, w, list_transform(w, t -> {rolling_hash_sql('t')}) AS wh FROM w
 ), t AS (
   SELECT doc_id,
-         list_distinct(list_transform(
-             range(1, greatest(len(wh) - 1, 1)),
-             i -> {comb})) AS hs,
+         {shingle_hashes_sql()} AS hs,
          list_distinct(list_transform(
              range(1, greatest(len(w) - 1, 1)),
              i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS sh
@@ -278,7 +254,7 @@ def _simhash_oracle() -> str:
 WITH w AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents
 ), h AS (
-  SELECT doc_id, unnest(list_transform(toks, t -> {_rh_sql('t')})) AS h
+  SELECT doc_id, unnest(list_transform(toks, t -> {rolling_hash_sql('t')})) AS h
   FROM w
 ), v AS (
   SELECT doc_id,
@@ -337,19 +313,13 @@ def neardup_lsh_pairs_frame(docs: DataFrame) -> DataFrame:
     strings. Returns (doc_a, doc_b, jaccard). `near_dup_pairs_lsh` runs
     it on the raw table; `full_curation_pipeline` on its filtered
     survivor set."""
-    from atlassian_confluence_data_pipeline_spark.functions.text import rolling_hash
-    from atlassian_confluence_data_pipeline_spark.operators.lsh import (
-        shingle_hashes_from_word_hashes,
-    )
     from atlassian_confluence_data_pipeline_spark.plans.textops import _shingles
 
     base = (
-        docs.select("doc_id", _words(F.col("text")).alias("w"))
+        word_hashes(docs.select("doc_id", "text", _words(F.col("text")).alias("w")))
         .select(
             "doc_id",
-            shingle_hashes_from_word_hashes(
-                F.transform(F.col("w"), rolling_hash)
-            ).alias("hs"),
+            shingle_hashes_from_word_hashes(F.col("wh")).alias("hs"),
             _shingles(F.col("w")).alias("sh"),
         )
         # checkpoint BEFORE the size filter (textops/minhash PERF note:
@@ -357,9 +327,8 @@ def neardup_lsh_pairs_frame(docs: DataFrame) -> DataFrame:
         .localCheckpoint(eager=True)
         .filter(F.size("hs") > 0)
     )
-    cand = minhash_lsh_candidates(
-        base, "doc_id", "hs", k=MINHASH_K, bands=MINHASH_BANDS, pre_hashed=True
-    )
+    sig = minhash_signatures(base, "doc_id", k=MINHASH_K).localCheckpoint(eager=True)
+    cand = lsh_band_candidates(sig, "doc_id", MINHASH_BANDS, MINHASH_ROWS)
     return verify_candidates_jaccard(
         cand, base, "doc_id", "sh", threshold=MINHASH_JACCARD
     ).select(
@@ -432,21 +401,14 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _source_overlap_oracle() -> str:
-    comb = (
-        f"((wh[i] * {BAND_BASE} + wh[i+1]) % {ROLLING_MOD}"
-        f" * {BAND_BASE} + wh[i+2]) % {ROLLING_MOD}"
-    )
     return f"""
 WITH w AS (
   SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS w
   FROM documents
 ), wht AS (
-  SELECT doc_id, source, list_transform(w, t -> {_rh_sql('t')}) AS wh FROM w
+  SELECT doc_id, source, list_transform(w, t -> {rolling_hash_sql('t')}) AS wh FROM w
 ), t AS (
-  SELECT source, unnest(list_distinct(list_transform(
-      range(1, greatest(len(wh) - 1, 1)),
-      i -> {comb}))) AS h
-  FROM wht
+  SELECT source, unnest({shingle_hashes_sql()}) AS h FROM wht
 ), ss AS (
   SELECT DISTINCT source, h FROM t
 ), cnt AS (

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from atlassian_confluence_data_pipeline_spark.catalog import load_table
+from atlassian_confluence_data_pipeline_spark.functions.text import rolling_hash_sql
 from atlassian_confluence_data_pipeline_spark.plans.registry import query
 from atlassian_confluence_data_pipeline_spark.plans.textops import _words
 
@@ -175,12 +176,9 @@ wins AS (
   SELECT DISTINCT window_id FROM w
 ), keyed AS (
   SELECT e.epoch, wins.window_id,
-         list_reduce(list_prepend(CAST(0 AS BIGINT),
-           list_transform(regexp_split_to_array(
-             CAST(wins.window_id AS VARCHAR) || ':' ||
-             CAST(e.epoch AS VARCHAR), ''),
-             c -> CAST(ascii(c) AS BIGINT))),
-           (h, c) -> (h * 257 + c) % 2147483647) AS skey
+         {rolling_hash_sql(
+             "CAST(wins.window_id AS VARCHAR) || ':' || CAST(e.epoch AS VARCHAR)"
+         )} AS skey
   FROM wins, (SELECT unnest(range(0, {N_EPOCHS})) AS epoch) e
 )
 SELECT CAST(epoch AS INT) AS epoch, window_id,

@@ -9,7 +9,7 @@ pointless on Spark — the equivalent result comes from fixed-K rolling
 window hashes + island detection:
 
 1. per-word rolling hashes (ONE char fold per word, the
-   ``minhash_doc_hashes`` idiom) combined into POSITIONAL K-token
+   ``word_hashes`` stage) combined into POSITIONAL K-token
    window hashes (``shingle_hashes_from_word_hashes`` with
    ``distinct=False``);
 2. a doc-frequency gate keeps window hashes shared by >= 2 documents
@@ -45,14 +45,13 @@ from pyspark.sql import functions as F
 
 from atlassian_confluence_data_pipeline_spark.catalog import load_table
 from atlassian_confluence_data_pipeline_spark.functions.text import (
-    ROLLING_MOD,
-    rolling_hash,
+    rolling_hash_sql,
 )
 from atlassian_confluence_data_pipeline_spark.operators.lsh import (
-    BAND_BASE,
     shingle_hashes_from_word_hashes,
+    shingle_hashes_sql,
+    word_hashes,
 )
-from atlassian_confluence_data_pipeline_spark.plans.multimodal import _rh_sql
 from atlassian_confluence_data_pipeline_spark.plans.registry import query
 from atlassian_confluence_data_pipeline_spark.plans.textops import _words
 
@@ -73,19 +72,14 @@ def _runs_cte() -> str:
     runs`` producing the maximal-run table (doc_a, doc_b, start_a,
     start_b, len_tokens) — shared by every oracle in this family."""
     k = MIN_OVERLAP_TOKENS
-    comb = "wh[i]"
-    for j in range(1, k):
-        comb = f"(({comb}) * {BAND_BASE} + wh[i+{j}]) % {ROLLING_MOD}"
     return f"""w AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents
 ), wht AS (
-  SELECT doc_id, list_transform(w, t -> {_rh_sql('t')}) AS wh FROM w
+  SELECT doc_id, list_transform(w, t -> {rolling_hash_sql('t')}) AS wh FROM w
 ), sp AS (
-  SELECT doc_id, wh,
-         unnest(range(1, greatest(len(wh) - {k - 2}, 1))) AS i
-  FROM wht
+  SELECT doc_id, {shingle_hashes_sql(k, distinct=False)} AS hs FROM wht
 ), win AS (
-  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, {comb} AS h FROM sp
+  SELECT doc_id, unnest(range(0, len(hs))) AS pos, unnest(hs) AS h FROM sp
 ), hd AS (
   SELECT h FROM win GROUP BY h
   HAVING count(DISTINCT doc_id) BETWEEN 2 AND {MAX_WINDOW_DF}
@@ -131,11 +125,7 @@ def overlap_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _build_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = MIN_OVERLAP_TOKENS
     docs = load_table(spark, sf_dir, "documents")
-    wh = docs.select(
-        "doc_id",
-        F.transform(_words(F.col("text")), rolling_hash).alias("wh"),
-    )
-    win = wh.select(
+    win = word_hashes(docs).select(
         "doc_id",
         F.posexplode(
             shingle_hashes_from_word_hashes(F.col("wh"), n=k, distinct=False)

@@ -119,21 +119,13 @@ def probe_ngram_index(
     ``n_buckets`` directories, never the whole index). Returns
     (probe_id, doc_id, n_shared) — corpus documents sharing at least
     one shingle with each probe."""
-    from atlassian_confluence_data_pipeline_spark.functions.text import (
-        rolling_hash,
-    )
     from atlassian_confluence_data_pipeline_spark.operators.lsh import (
         shingle_hashes_from_word_hashes,
+        word_hashes,
     )
 
     probe = (
-        probe_docs.select(
-            "probe_id", F.split(F.trim(F.col("text")), r"\s+").alias("w")
-        )
-        .select(
-            "probe_id",
-            F.transform(F.col("w"), rolling_hash).alias("wh"),
-        )
+        word_hashes(probe_docs)
         .select(
             "probe_id",
             F.explode(

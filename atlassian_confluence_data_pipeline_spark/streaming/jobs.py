@@ -246,7 +246,8 @@ def _minhash_probe(docs, prior, jaccard: float):  # noqa: ANN001
     """The MinHash stage of ``foreach_batch_minhash_dedup`` and
     ``foreach_batch_curation``: shingle-hash (``_cache.
     minhash_shingle_hashes``), sign and band (MINHASH_K, MINHASH_BANDS x
-    MINHASH_ROWS) the (doc_id, text) ``docs``, probe the band keys
+    MINHASH_ROWS) the (doc_id, text) ``docs`` (one row per doc_id: the
+    signature is grouped by it and joined back), probe the band keys
     against ``prior`` (the persisted index) and the batch, and verify
     candidates with exact Jaccard >= ``jaccard``. Returns the batch's
     (doc_id, hs, band_key) index rows and the (id_a, id_b, jaccard)
@@ -255,7 +256,7 @@ def _minhash_probe(docs, prior, jaccard: float):  # noqa: ANN001
     replay's ``write_batch`` retires the directory it bound."""
     from atlassian_confluence_data_pipeline_spark.operators.lsh import (
         lsh_band_keys,
-        minhash_signature,
+        minhash_signatures,
         verify_candidates_jaccard,
     )
     from atlassian_confluence_data_pipeline_spark.plans._cache import (
@@ -275,18 +276,12 @@ def _minhash_probe(docs, prior, jaccard: float):  # noqa: ANN001
         .filter(F.size("hs") > 0)
     )
     banded = (
-        hs_tbl.select(
-            "doc_id",
-            "hs",
-            minhash_signature(F.col("hs"), k=MINHASH_K, pre_hashed=True).alias(
-                "__sig"
-            ),
-        )
+        hs_tbl.join(minhash_signatures(hs_tbl, "doc_id", k=MINHASH_K), "doc_id")
         .select(
             "doc_id",
             "hs",
             F.explode(
-                F.array(*lsh_band_keys(F.col("__sig"), MINHASH_BANDS, MINHASH_ROWS))
+                F.array(*lsh_band_keys(F.col("sig"), MINHASH_BANDS, MINHASH_ROWS))
             ).alias("band_key"),
         )
         .localCheckpoint(eager=True)

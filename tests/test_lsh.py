@@ -14,18 +14,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from atlassian_confluence_data_pipeline_spark.catalog import load_table
-from atlassian_confluence_data_pipeline_spark.functions.text import ROLLING_MOD
+from atlassian_confluence_data_pipeline_spark.functions.text import (
+    ROLLING_MOD,
+    rolling_hash_sql,
+)
 from atlassian_confluence_data_pipeline_spark.operators.lsh import (
     SIMHASH_THRESHOLD,
     SRP_PERMS,
-    minhash_lsh_candidates,
+    lsh_band_candidates,
+    minhash_signatures,
+    shingle_hashes_from_word_hashes,
+    shingle_hashes_sql,
     simhash,
     simhash_near_pairs,
     verify_candidates_jaccard,
     with_srp_fingerprint,
+    word_hashes,
 )
+from atlassian_confluence_data_pipeline_spark.plans.curation import DECONTAM_N
 from atlassian_confluence_data_pipeline_spark.plans.curation3 import (
     _srp_fingerprint_cte,
+)
+from atlassian_confluence_data_pipeline_spark.plans.substring import (
+    MIN_OVERLAP_TOKENS,
 )
 from atlassian_confluence_data_pipeline_spark.plans.textops import _shingles, _words
 from perfbench.tables import build_tables
@@ -50,10 +61,20 @@ def _corpus(spark):
 PLANTED = {(0, 100), (3, 101), (7, 102)}
 
 
+def _candidates(docs):
+    """Banded MinHash candidates over the shingle hashes of the one
+    word-hash stage (the verify step below still takes string shingles)."""
+    hs = word_hashes(docs).select(
+        "doc_id", shingle_hashes_from_word_hashes(F.col("wh")).alias("hs")
+    )
+    sig = minhash_signatures(hs, "doc_id").localCheckpoint(eager=True)
+    return lsh_band_candidates(sig, "doc_id", bands=16, rows=2)
+
+
 def test_minhash_lsh_recalls_planted_pairs(spark):
     docs = _corpus(spark)
     sh = docs.select("doc_id", _shingles(_words(F.col("text"))).alias("sh")).persist()
-    cand = minhash_lsh_candidates(sh, "doc_id", "sh")
+    cand = _candidates(docs)
     verified = verify_candidates_jaccard(cand, sh, "doc_id", "sh", threshold=0.5)
     got = {(r["id_a"], r["id_b"]) for r in verified.collect()}
     assert PLANTED <= got
@@ -69,7 +90,7 @@ def test_minhash_no_false_high_jaccard(spark):
     docs = _corpus(spark)
     sh = docs.select("doc_id", _shingles(_words(F.col("text"))).alias("sh")).persist()
     verified = verify_candidates_jaccard(
-        minhash_lsh_candidates(sh, "doc_id", "sh"), sh, "doc_id", "sh", 0.5
+        _candidates(docs), sh, "doc_id", "sh", 0.5
     )
     got = {(r["id_a"], r["id_b"]) for r in verified.collect()}
     assert got == PLANTED
@@ -77,8 +98,7 @@ def test_minhash_no_false_high_jaccard(spark):
 
 def test_simhash_pairs_planted(spark):
     docs = _corpus(spark)
-    toks = docs.select("doc_id", _words(F.col("text")).alias("toks"))
-    fp = simhash(toks, "doc_id", "toks")
+    fp = simhash(word_hashes(docs), "doc_id")
     assert fp.count() == 13
     pairs = simhash_near_pairs(fp, "doc_id", max_hamming=16)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
@@ -246,3 +266,77 @@ def test_srp_kernel_matches_duckdb_oracle_on_edge_rows(spark, tmp_path):
         con.close()
     assert got == want
     assert got[1] == got[2] == got[3] == got[5] == 0
+
+
+def _edge_texts(n: int) -> list[str | None]:
+    words = [f"w{i}" for i in range(n)]
+    return [
+        None,
+        "",
+        "   ",
+        " ".join(words[: n - 1]),  # one word short of a shingle
+        " ".join(words),  # exactly one shingle
+        "\tone two\nthree\t\tfour  five six\n seven\r\neight nine ten",
+        "the cat sat " * 12,  # a looping phrase: repeated shingles
+    ]
+
+
+@pytest.mark.parametrize("distinct", [True, False], ids=["set", "positional"])
+@pytest.mark.parametrize("n", [2, 3, 4, DECONTAM_N, MIN_OVERLAP_TOKENS])
+def test_shingle_hashes_sql_matches_spark_stage(spark, sf_dir, n, distinct):
+    """The DuckDB rendering of the word-hash stage + combine gives the
+    Spark stage's shingle hashes on edge texts and the fixture corpus:
+    NULL for NULL text, [] below n words, the same positional sequence
+    (or, with ``distinct``, the same set)."""
+    edges = spark.createDataFrame(
+        [(-1 - i, t) for i, t in enumerate(_edge_texts(n))],
+        "doc_id bigint, text string",
+    )
+    docs = edges.unionByName(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    )
+    got = {
+        r["doc_id"]: r["hs"]
+        for r in word_hashes(docs)
+        .select(
+            "doc_id",
+            shingle_hashes_from_word_hashes(
+                F.col("wh"), n=n, distinct=distinct
+            ).alias("hs"),
+        )
+        .collect()
+    }
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    want = dict(
+        con.execute(
+            f"""
+WITH w AS (
+  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents
+), wht AS (
+  SELECT doc_id, list_transform(w, t -> {rolling_hash_sql('t')}) AS wh FROM w
+)
+SELECT doc_id, {shingle_hashes_sql(n, distinct)} AS hs FROM wht
+"""
+        ).fetchall()
+    )
+    assert got.keys() == want.keys()
+    assert got[-1] is None and want[-1] is None
+    assert got[-4] == [] and got[-5] != []
+    if distinct:
+        got = {k: None if v is None else sorted(v) for k, v in got.items()}
+        want = {k: None if v is None else sorted(v) for k, v in want.items()}
+    assert got == want
+
+
+@pytest.mark.parametrize("n", [3, DECONTAM_N])
+def test_word_hash_stage_folds_each_word_once(spark, n):
+    """The combine references ``wh`` n times; the optimized plan of the
+    word-hash stage + combine must still hold ONE rolling-hash fold
+    (each fold renders exactly one ``ascii(``). Passing the fold inline
+    to the combine instead held 6 at n = 3."""
+    hs = word_hashes(_corpus(spark)).select(
+        "doc_id", shingle_hashes_from_word_hashes(F.col("wh"), n=n).alias("hs")
+    )
+    plan = hs._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("ascii(") == 1

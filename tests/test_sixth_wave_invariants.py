@@ -82,11 +82,10 @@ def test_shingle_df_spectrum_accounts_for_all_postings(spark, sf_dir):
     """sum(df * n_shingles) over the spectrum = total (shingle, doc)
     postings; sum(n_shingles) = distinct shingles in the corpus."""
     from atlassian_confluence_data_pipeline_spark.catalog import load_table
-    from atlassian_confluence_data_pipeline_spark.functions.text import rolling_hash
     from atlassian_confluence_data_pipeline_spark.operators.lsh import (
         shingle_hashes_from_word_hashes,
+        word_hashes,
     )
-    from atlassian_confluence_data_pipeline_spark.plans.textops import _words
 
     spec = QUERIES["shingle_df_spectrum"].fn(spark, sf_dir)
     got = spec.agg(
@@ -95,11 +94,8 @@ def test_shingle_df_spectrum_accounts_for_all_postings(spark, sf_dir):
     ).first()
 
     docs = load_table(spark, sf_dir, "documents")
-    posting = (
-        docs.select(
-            "doc_id", F.transform(_words(F.col("text")), rolling_hash).alias("wh")
-        )
-        .select("doc_id", F.explode(shingle_hashes_from_word_hashes(F.col("wh"))).alias("h"))
+    posting = word_hashes(docs).select(
+        "doc_id", F.explode(shingle_hashes_from_word_hashes(F.col("wh"))).alias("h")
     )
     assert got["postings"] == posting.count()
     assert got["distinct_shingles"] == posting.select("h").distinct().count()

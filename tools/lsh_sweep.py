@@ -27,18 +27,16 @@ sys.path.insert(0, str(REPO))
 from pyspark.sql import functions as F  # noqa: E402
 
 from atlassian_confluence_data_pipeline_spark.catalog import load_table  # noqa: E402
-from atlassian_confluence_data_pipeline_spark.functions.text import (  # noqa: E402
-    rolling_hash,
-)
 from atlassian_confluence_data_pipeline_spark.operators.lsh import (  # noqa: E402
-    minhash_lsh_candidates,
+    lsh_band_candidates,
+    minhash_signatures,
     shingle_hashes_from_word_hashes,
     verify_candidates_jaccard,
+    word_hashes,
 )
 from atlassian_confluence_data_pipeline_spark.plans.multimodal import (  # noqa: E402
     MINHASH_JACCARD,
 )
-from atlassian_confluence_data_pipeline_spark.plans.textops import _words  # noqa: E402
 from atlassian_confluence_data_pipeline_spark.session import get_session  # noqa: E402
 
 CONFIGS = [(16, 8), (32, 16), (32, 8), (64, 32), (64, 16)]  # (k, bands)
@@ -51,8 +49,7 @@ def main() -> None:
     spark = get_session("lsh-sweep", cpus=32)
     docs = load_table(spark, args.sf, "documents")
     hs = (
-        docs.select("doc_id", _words(F.col("text")).alias("w"))
-        .select("doc_id", F.transform(F.col("w"), rolling_hash).alias("wh"))
+        word_hashes(docs)
         .select(
             "doc_id", shingle_hashes_from_word_hashes(F.col("wh")).alias("hs")
         )
@@ -89,9 +86,8 @@ def main() -> None:
     print("|---|---|---|---|---|---|---|")
     for k, bands in CONFIGS:
         t0 = time.perf_counter()
-        cand = minhash_lsh_candidates(
-            hs, "doc_id", "hs", k=k, bands=bands, pre_hashed=True
-        )
+        sig = minhash_signatures(hs, "doc_id", k=k).localCheckpoint(eager=True)
+        cand = lsh_band_candidates(sig, "doc_id", bands, k // bands)
         found = verify_candidates_jaccard(
             cand, hs, "doc_id", "hs", threshold=MINHASH_JACCARD
         ).select("id_a", "id_b")
